@@ -22,31 +22,6 @@ def strip_spaces(col: Column | str) -> Column:
     return F.replace(c, F.lit(" "), F.lit(""))
 
 
-def clean_control_chars(col: Column | str) -> Column:
-    """Power Query ``Text.Clean`` — Section1.m step "Cleaned Text" (F17)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.regexp_replace(c, r"[\p{Cntrl}]", "")
-
-
-def try_date(col: Column | str, fmt: str = "M/d/yyyy") -> Column:
-    """``TRY_CONVERT(date, col)`` with the intended US format —
-    SQLproject1.sql:173-174 (P3). ``to_date`` would throw under ANSI mode on
-    bad input, so route through try_to_timestamp."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.try_to_timestamp(c, F.lit(fmt)).cast("date")
-
-
-def try_decimal(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
-    """``TRY_CONVERT(decimal(p,s), col)`` — SQLproject1.sql:188-191 (P4)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast(f"decimal({precision},{scale})")
-
-
-def try_int(col: Column | str) -> Column:
-    c = F.col(col) if isinstance(col, str) else col
-    return c.try_cast("int")
-
-
 def strip_trailing_semicolon(col: Column | str) -> Column:
     """Remove the messy-CSV trailing ``;`` that lands inside Profit
     (SURVEY.md §1.2; values like ``41.9136;``)."""
@@ -67,8 +42,3 @@ def zero_pad_postal(col: Column | str, width: int = 5) -> Column:
         )
     )
 
-
-def division_guard(num: Column, den: Column) -> Column:
-    """``num / NULLIF(den, 0)`` — SQLproject1.sql:694,714 (P11).
-    Required under ANSI mode where x/0 raises."""
-    return num / F.nullif(den, F.lit(0))

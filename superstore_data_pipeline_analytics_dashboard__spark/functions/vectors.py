@@ -35,21 +35,3 @@ def squared_l2(a: Column, b: Column) -> Column:
         lambda acc, v: acc + v,
     )
 
-
-def dot_unrolled(a: Column, b: Column, dim: int) -> Column:
-    """Dot product as an unrolled `a[0]*b[0] + a[1]*b[1] + …` expression.
-
-    `aggregate`/`zip_with` lambdas are evaluated by the interpreted
-    HigherOrderFunction path — fine per row, but an all-pairs similarity
-    join evaluates them millions of times and they dominate wall-clock
-    (measured 84 s → 3 s at sf0.1 for the near-dup join). The unrolled tree
-    stays inside whole-stage codegen. Summation order is left-to-right,
-    identical to the sequential `aggregate`, so results are bit-equal."""
-    acc = a[0] * b[0]
-    for i in range(1, dim):
-        acc = acc + a[i] * b[i]
-    return acc
-
-
-def norm_unrolled(a: Column, dim: int) -> Column:
-    return F.sqrt(dot_unrolled(a, a, dim))

@@ -398,26 +398,25 @@ def v_customer_cohort(fact: DataFrame, dims: dict[str, DataFrame]) -> DataFrame:
     """qa.v_CustomerCohort (SQLproject1.sql:645-673): EOMONTH cohort per
     CustomerKey. NOTE reference quirk kept for parity: the orders CTE is
     pre-grouped to one row per (CustomerKey, OrderMonth), so OrdersCount
-    is the count of those grouped rows (=1), not of fact rows."""
-    df = fact.join(
+    is the count of those grouped rows (=1), not of fact rows.
+
+    One distinct and one window: the cohort is the customer's earliest
+    OrderMonth, which equals EOMONTH(MIN(Date)) because last_day is
+    monotone."""
+    months = fact.join(
         F.broadcast(dims["date"].select("DateKey", "Date")),
         fact["OrderDateKey"] == F.col("DateKey"),
-    )
-    first_buy = df.groupBy("CustomerKey").agg(F.min("Date").alias("FirstOrderDate"))
-    months = df.select(
-        "CustomerKey", F.last_day("Date").alias("OrderMonth")
-    ).distinct()
-    joined = months.join(first_buy, "CustomerKey").select(
-        "CustomerKey",
-        F.last_day("FirstOrderDate").alias("CohortMonth"),
-        "OrderMonth",
-    )
+    ).select("CustomerKey", F.last_day("Date").alias("OrderMonth")).distinct()
+    cohort = F.min("OrderMonth").over(Window.partitionBy("CustomerKey"))
     months_since = (
         (F.year("OrderMonth") * 12 + F.month("OrderMonth"))
         - (F.year("CohortMonth") * 12 + F.month("CohortMonth"))
     ).cast("int")
-    return joined.groupBy("CustomerKey", "CohortMonth", "OrderMonth").agg(
-        F.count("*").alias("OrdersCount")
+    return months.select(
+        "CustomerKey",
+        cohort.alias("CohortMonth"),
+        "OrderMonth",
+        F.lit(1).cast("bigint").alias("OrdersCount"),
     ).withColumn("MonthsSince", months_since)
 
 
@@ -562,19 +561,29 @@ def register_star_views(spark: SparkSession, layers: dict[str, DataFrame]) -> No
 
 def run(spark: SparkSession, csv_path: str) -> dict[str, DataFrame]:
     """Execute the full DAG; returns every layer keyed by name. Caching
-    mirrors the reference's #temp/pivot-cache reuse points."""
+    mirrors the reference's #temp/pivot-cache reuse points.
+
+    Nine frames come back cached: ``stg``, ``fact`` and the seven
+    ``dim_*``. Each dimension is marked as it is built, so the later dims,
+    the fact's broadcast joins, ``write_star`` and the ``v_*`` views all
+    read one in-memory copy instead of re-running the dimension's
+    distinct/snapshot/``row_number`` shuffles against ``stg``. The dims and
+    ``fact`` fill lazily on their first action. Every dim has a total
+    ``row_number`` order, so the cached rows are the rows a rebuild would
+    give. A long-lived caller releases them with
+    ``spark.catalog.clearCache()``, or per frame with ``unpersist()``."""
     raw = read_superstore_csv(spark, csv_path)
     stg_all = stage_typed(raw)
     stg = dedup_staged(stg_all).cache()
 
     dims: dict[str, DataFrame] = {}
-    dims["date"] = build_date_dim(spark, stg)
-    dims["shipmode"] = build_shipmode_dim(stg)
-    dims["category"] = build_category_dim(stg)
-    dims["subcategory"] = build_subcategory_dim(stg, dims["category"])
-    dims["geography"] = build_geography_dim(stg)
-    dims["customer"] = build_customer_dim(stg)
-    dims["product"] = build_product_dim(stg, dims["subcategory"], dims["category"])
+    dims["date"] = build_date_dim(spark, stg).cache()
+    dims["shipmode"] = build_shipmode_dim(stg).cache()
+    dims["category"] = build_category_dim(stg).cache()
+    dims["subcategory"] = build_subcategory_dim(stg, dims["category"]).cache()
+    dims["geography"] = build_geography_dim(stg).cache()
+    dims["customer"] = build_customer_dim(stg).cache()
+    dims["product"] = build_product_dim(stg, dims["subcategory"], dims["category"]).cache()
 
     fact = build_fact(stg, dims).cache()
 

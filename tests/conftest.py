@@ -26,9 +26,17 @@ def spark(tmp_path_factory):
 
 @pytest.fixture(scope="session")
 def superstore_layers(spark):
-    """The full reference-CSV pipeline, built once per test session."""
+    """The full reference-CSV pipeline, built once per test session. Without
+    the reference CSV every dependent test fails with one precondition
+    message (not skipped: the BASELINE.md anchors stay unchecked)."""
     from superstore_data_pipeline_analytics_dashboard__spark.plans import (
         superstore_pipeline as P,
     )
 
+    if not Path(REFERENCE_CSV).is_file():
+        pytest.fail(
+            f"precondition: the reference CSV {REFERENCE_CSV} is missing; the "
+            "BASELINE.md anchor tests need it",
+            pytrace=False,
+        )
     return P.run(spark, REFERENCE_CSV)

@@ -1,8 +1,13 @@
 """End-to-end ELT acceptance against BASELINE.md anchors (intended
-semantics) and the workbook's cached pivot goldens (observed-Excel)."""
+semantics) and the workbook's cached pivot goldens (observed-Excel), plus
+a seeded generated CSV checked against its generator's ground truth (runs
+without the reference CSV)."""
 
+from collections import defaultdict
 from decimal import Decimal
+from fractions import Fraction
 
+import pytest
 from pyspark.sql import functions as F
 
 from superstore_data_pipeline_analytics_dashboard__spark.plans import (
@@ -183,3 +188,76 @@ def test_register_star_views_sql_surface(spark, superstore_layers):
         "SELECT count(DISTINCT SubCategory) AS n FROM v_top_products_by_subcat"
     ).first()
     assert top["n"] == 17
+
+
+# ------------------------------------------- generated CSV (no reference)
+
+GEN_RECORDS, GEN_SEED = 2_000, 5
+
+
+@pytest.fixture(scope="module")
+def generated(spark, tmp_path_factory):
+    """`run` over a seeded messy CSV from perfbench's generator, with its
+    ground truth and kept rows. The cache is cleared first (CLAUDE.md
+    plan-shape rule) and `fact` is filled as a serving caller does."""
+    from perfbench.gen_messy_csv import generate
+
+    csv = str(tmp_path_factory.mktemp("gen") / "superstore.csv")
+    truth, kept = generate(csv, GEN_RECORDS, GEN_SEED)
+    spark.catalog.clearCache()
+    layers = P.run(spark, csv)
+    layers["fact"].count()
+    return layers, truth, kept
+
+
+def test_generated_star_matches_generator_truth(generated):
+    layers, truth, _ = generated
+    got = layers["fact"].agg(
+        F.count("*").alias("n"), F.sum("Sales").alias("s"), F.sum("Profit").alias("p"),
+        F.sum("Quantity").alias("q"), F.countDistinct("OrderID").alias("o"),
+    ).first()
+    assert got["n"] == truth["rows_after_dedup"]
+    assert got["s"] == Decimal(truth["sum_sales"])
+    assert got["p"] == Decimal(truth["sum_profit"])
+    assert got["q"] == truth["sum_quantity"]
+    assert got["o"] == truth["distinct_orders"]
+    assert {k: layers[k].count() for k in truth["dim_rows"]} == truth["dim_rows"]
+    qa = {r["IssueType"]: r["RowCount"] for r in layers["qa_issues"].collect()}
+    assert qa == truth["qa_issues"]
+
+
+def test_generated_views_row_counts(generated):
+    """Each view's rows, tallied in plain Python from the kept records."""
+    layers, _, kept = generated
+    profit = defaultdict(lambda: defaultdict(int))
+    for r in kept:
+        profit[r.subcategory][r.product_id] += r.profit
+    top = 0
+    for sums in profit.values():
+        vals = sorted(sums.values(), reverse=True)
+        top += sum(1 for v in vals if 1 + sum(w > v for w in vals) <= 5)
+    want = {
+        "v_rolling30": len(kept),
+        "v_customer_cohort": len({(r.customer_id, r.order_date.year, r.order_date.month)
+                                  for r in kept}),
+        "v_top_products_by_subcat": top,
+        "v_suspicious_discounts": sum(
+            r.discount != "0" and not Fraction(1, 20) <= Fraction(r.profit, r.sales) <= Fraction(1, 2)
+            for r in kept
+        ),
+    }
+    assert {k: layers[k].count() for k in want} == want
+
+
+def test_generated_dims_cached_and_views_read_memory(generated):
+    """Every dim is cached by `run`, so the views scan in-memory relations
+    only — no leaf re-reads the CSV or re-spans the date range. Leaves:
+    fact + date + geography, fact + date, fact + product + subcategory."""
+    layers, _, _ = generated
+    assert all(layers[k].is_cached for k in layers if k.startswith("dim_"))
+    assert layers["stg"].is_cached and layers["fact"].is_cached
+    for view, n in (("v_rolling30", 3), ("v_customer_cohort", 2),
+                    ("v_top_products_by_subcat", 3)):
+        leaves = layers[view]._jdf.queryExecution().sparkPlan().collectLeaves()
+        names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
+        assert names == ["InMemoryTableScan"] * n, (view, names)
