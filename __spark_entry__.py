@@ -5,12 +5,10 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-Queries q26-q28 (MinHash-LSH dedup, SimHash, IVF-ANN), q38 (LSH-based
-curation), q67 (binary multimodal decode), q69/q72 (LSH/IVF similarity),
-q81/q82/q87 (sketch internals), q102 (frame decode), and q108
-(incremental MinHash dedup) are approximate or non-SQL-expressible by
-construction → rows-only checks. q35's HLL estimate ships as an exact
-count + error-band boolean, so it is oracled.
+A query whose registry entry (``plans/catalog_queries.py``) has no
+oracle SQL is absent from ``oracle_sql()`` and gets a rows-only check:
+it is approximate or not SQL-expressible by construction. COVERAGE.md
+gives the reason per query.
 """
 
 from __future__ import annotations

@@ -1,1 +1,2 @@
-from . import catalog_queries  # noqa: F401
+"""Plan modules. Each is imported by its full path; importing the package
+loads none of them, so the ELT does not pay for the query catalog."""

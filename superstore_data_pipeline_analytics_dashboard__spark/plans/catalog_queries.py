@@ -14653,111 +14653,6 @@ def _canon_sql(sql: str, casts: dict[str, str]) -> str:
     return f"SELECT * REPLACE ({reps})\nFROM (\n{sql}\n) AS canon"
 
 
-#: per-oracle output columns whose DuckDB client type differs from Spark's
-#: (enumerated via DESCRIBE over every oracle; parity.py enforces the ban)
-_CANON_SQL_CASTS: dict[str, dict[str, str]] = {
-    "q01_typed_staging": {"acctbal": "DOUBLE"},
-    "q03_dedup_latest": {"qty": "DOUBLE"},
-    "q04_fact_build": {"qty": "DOUBLE", "revenue": "DOUBLE", "profit": "DOUBLE"},
-    "q05_sales_by_brand_rollup": {"sum_qty": "DOUBLE", "revenue": "DOUBLE"},
-    "q06_year_month_rollup": {"total_price": "DOUBLE"},
-    "q07_slicer_dashboard": {"sum_qty": "DOUBLE", "revenue": "DOUBLE"},
-    "q08_rolling_30row": {"rolling_rev": "DOUBLE"},
-    "q09_top5_parts_per_brand": {"profit": "DOUBLE", "profit_share": "DOUBLE"},
-    "q11_suspicious_discounts": {"discount": "DOUBLE", "margin": "DOUBLE"},
-    "q15_idempotent_append": {"qty": "DOUBLE"},
-    "q17_latest_order_per_customer": {"latest_total": "DOUBLE"},
-    "q20_ngram_jaccard_pairs": {"jaccard": "DOUBLE"},
-    "q26_minhash_dedup": {"jaccard": "DOUBLE"},
-    "q22_text_quality": {
-        "punct_ratio": "DOUBLE",
-        "stopword_ratio": "DOUBLE",
-        "quality": "DOUBLE",
-    },
-    "q25_knn_bruteforce": {"cos_sim": "DOUBLE"},
-    "q144_global_nucleus_fill": {"q": "DOUBLE"},
-    "q154_minhash_recall": {"jaccard": "DOUBLE"},
-    "q214_weighted_jaccard": {"w_jaccard": "DOUBLE"},
-    "q158_cluster_quality": {"min_jaccard": "DOUBLE"},
-    "q29_event_type_stats": {"sum_value": "DOUBLE", "avg_k": "DOUBLE"},
-    "q31_sessionize_batch": {"session_no": "BIGINT", "sum_value": "DOUBLE", "session_start": "EPOCH_US", "session_end": "EPOCH_US"},
-    "q46_asof_click_attribution": {"purchase_ts": "EPOCH_US"},
-    "q32_top_suppliers_per_nation": {"revenue": "DOUBLE"},
-    "q33_embedding_neardup": {"cos_sim": "DOUBLE"},
-    "q34_cube_region_segment": {"revenue": "DOUBLE"},
-    "q37_order_value_percentiles": {"median_value": "DOUBLE", "p90_value": "DOUBLE"},
-    "q42_revenue_mom": {"revenue": "DOUBLE", "mom_change": "DOUBLE"},
-    "q45_grouping_sets_sql": {"revenue": "DOUBLE"},
-    "q47_price_band_join": {"gross": "DOUBLE"},
-    "q48_deterministic_split": {"sum_chars": "BIGINT"},
-    "q50_pivot_returnflag": {"qty_a": "DOUBLE", "qty_n": "DOUBLE", "qty_r": "DOUBLE"},
-    "q51_unpivot_measures": {"value": "DOUBLE"},
-    "q52_rolling_range_revenue": {"day_revenue": "DOUBLE", "rev_7day": "DOUBLE"},
-    "q53_supplier_revenue_distribution": {
-        "revenue": "DOUBLE",
-        "pct_rank": "DOUBLE",
-        "cume": "DOUBLE",
-        "nation_min_rev": "DOUBLE",
-        "nation_max_rev": "DOUBLE",
-    },
-    "q54_small_quantity_parts": {"small_revenue": "DOUBLE"},
-    "q55_promo_revenue_share": {
-        "promo_revenue": "DOUBLE",
-        "total_revenue": "DOUBLE",
-        "promo_share": "DOUBLE",
-    },
-    "q56_spend_deciles": {
-        "min_spend": "DOUBLE",
-        "max_spend": "DOUBLE",
-        "sum_spend": "DOUBLE",
-    },
-    "q57_stratified_sample": {"sum_bal": "DOUBLE"},
-    "q58_hopping_window_counts": {"sum_value": "DOUBLE", "win_start": "EPOCH_US"},
-    "q59_global_topk": {"revenue": "DOUBLE"},
-    "q60_late_unreturned_orders": {"sum_price": "DOUBLE"},
-    "q61_bloom_semi_reduction": {"revenue": "DOUBLE"},
-    "q62_price_histogram": {"sum_price": "DOUBLE"},
-    "q64_pricing_summary": {
-        "sum_qty": "DOUBLE",
-        "sum_base": "DOUBLE",
-        "sum_disc": "DOUBLE",
-        "sum_charge": "DOUBLE",
-        "avg_qty": "DOUBLE",
-        "avg_price": "DOUBLE",
-    },
-    "q65_shipping_priority": {"revenue": "DOUBLE"},
-    "q66_salted_skew_agg": {"sum_value": "DOUBLE"},
-    "q70_contamination_check": {"contamination": "DOUBLE"},
-    "q78_event_funnel": {
-        "view_ts": "EPOCH_US",
-        "click_ts": "EPOCH_US",
-        "purchase_ts": "EPOCH_US",
-    },
-    "q90_profit_by_nation_year": {"sum_profit": "DOUBLE"},
-    "q91_bilateral_volume": {"revenue": "DOUBLE"},
-    "q92_hierarchy_shares": {"revenue": "DOUBLE"},
-    "q93_incremental_rollup": {"sum_qty": "DOUBLE", "revenue": "DOUBLE"},
-    "q96_gap_filled_daily_revenue": {"revenue": "DOUBLE"},
-    "q71_doc_repetition": {"dup_tri_frac": "DOUBLE", "top_bi_frac": "DOUBLE"},
-    "q99_split_leakage": {"max_jaccard": "DOUBLE"},
-    "q104_vocab_oov": {"oov_rate": "DOUBLE"},
-    "q105_label_cohesion": {"min_cos": "DOUBLE"},
-    "q109_corpus_datacard": {"dup_rate": "DOUBLE"},
-    "q111_chunk_dup_fraction": {"dup_chunk_frac": "DOUBLE"},
-    "q122_canonical_selection": {"canon_quality": "DOUBLE"},
-    "q130_pair_containment": {
-        "jaccard": "DOUBLE",
-        "containment": "DOUBLE",
-        "size_ratio": "DOUBLE",
-    },
-    "q133_quality_percentiles_by_source": {
-        "p50_quality": "DOUBLE",
-        "p90_quality": "DOUBLE",
-    },
-    "q137_adaptive_quality_gate": {"q": "DOUBLE", "thr": "DOUBLE"},
-}
-
-
 # ================================================================== r9
 # Round-9 queries (registered this round at the window head): the
 # round-8 operator families — checkpoint/restart, grouped top-k tiers,
@@ -18841,662 +18736,374 @@ FROM ranked CROSS JOIN rem
 
 # ---------------------------------------------------------------- registry
 #
-# The driver audits the FIRST 50 registry entries per round (rounds 1-2
-# checked exactly positions 1-50). Order is therefore part of the
-# contract: never-audited queries belong in positions 1-50, displaced
-# greens keep their old verdicts and queue past the window, and every
-# rotation updates tests/test_registry_window.py plus COVERAGE.md's
-# window paragraph in the same commit. Per-round rotation rationale
-# lives in the comment at the top of the dict below; round history is
-# in COVERAGE.md.
+# One entry per query, declared once: the query function, its DuckDB
+# oracle SQL (none for a rows-only query), and the oracle's boundary
+# casts. A cast names an output column whose DuckDB client type differs
+# from Spark's (DECIMAL or HUGEINT -> DOUBLE or BIGINT, TIMESTAMP ->
+# EPOCH_US), found via DESCRIBE over every oracle; parity.py enforces the
+# ban. QUERIES and ORACLES are derived from this table.
+#
+# The table's ORDER is the driver's audit-window contract: the first 50
+# entries are audited each round. The rotation rule and each round's
+# rationale are stated in COVERAGE.md's "Driver audit window" paragraph;
+# tests/test_registry_window.py pins the window.
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # Round-14 audit window (first 50). Rotation rationale (VERDICT r13
-    # item 6, staged and tri-scale-certified in r13): positions 1-7 are
-    # the SEVEN new data-plane compositions q287-q293 (erasure racing a
-    # concurrent re-ingest append, IVF index grown incrementally under
-    # frozen centroids pinned equal to a full rebuild, incremental exact
-    # dedup fed by snapshot_diff with the sequential==batch pin, the
-    # corpus release report with an operator-vs-arithmetic cross-check,
-    # vector-store erasure propagated to the serving ANN index,
-    # closed-form water-filling temperature mixing, and Hamilton
-    # largest-remainder schedule apportionment), merged from the staged
-    # catalog_queries_r14.py. Positions 8-13 are the six r13
-    # partial-oracle upgrades (q26/q69/q72/q81/q82/q87) - never
-    # hash-audited (they were rows-only until r13), so they carry the
-    # oldest possible oracled verdict and the window head is theirs by
-    # the monotone oldest-verdict-first rule. Positions 14-50 are the 37
-    # oldest-verdict canaries: the 19 remaining r8-block queries, then
-    # the first 18 of the r9-verdict block, unchanged relative order.
-    # Displaced r13-window entries (q282-q286 + the 45-query canary
-    # band) keep their pass(r13) verdicts (CORRECTNESS_r13.json) and
-    # queue at the back of the re-audit order below, which stays
-    # monotone oldest-verdict-first past the window: the r9-block rest,
-    # r10 block, r11 block, r12 block, r13 block, rows-only tail.
-    # --- new queries this round (positions 1-7): the r14 data-plane
-    #     composition tier ---
-    "q287_erasure_concurrent_append": q287_erasure_concurrent_append,
-    "q288_ivf_snapshot_maintenance": q288_ivf_snapshot_maintenance,
-    "q289_incremental_dedup_snapshot_diff": (
-        q289_incremental_dedup_snapshot_diff
-    ),
-    "q290_corpus_release_report": q290_corpus_release_report,
-    "q291_vector_store_erasure": q291_vector_store_erasure,
-    "q292_lengthband_waterfill": q292_lengthband_waterfill,
-    "q293_apportion_schedule": q293_apportion_schedule,
-    # --- positions 8-13: the r13 partial-oracle upgrades (q136/q138
-    #     band pattern): six former rows-only queries carrying exact
-    #     counts + oracle-pinned guarantee booleans, hash-audited for
-    #     the FIRST time this round ---
-    "q26_minhash_dedup": q26_minhash_dedup,
-    "q69_sign_lsh_neardup": q69_sign_lsh_neardup,
-    "q72_semantic_dedup": q72_semantic_dedup,
-    "q81_kll_quantiles": q81_kll_quantiles,
-    "q82_theta_distinct": q82_theta_distinct,
-    "q87_join_overlap_estimate": q87_join_overlap_estimate,
-    # --- the 19 r8-verdict queries not in the window (oldest verdicts
-    #     past the window — queue head) ---
-    "q76_tfidf_topterms": q76_tfidf_topterms,
-    "q77_source_mix": q77_source_mix,
-    "q78_event_funnel": q78_event_funnel,
-    "q79_heavy_join_keys": q79_heavy_join_keys,
-    "q80_cms_heavy_hitters": q80_cms_heavy_hitters,
-    "q83_cdc_apply": q83_cdc_apply,
-    "q84_length_outliers": q84_length_outliers,
-    "q85_zorder_key": q85_zorder_key,
-    "q86_token_chunks": q86_token_chunks,
-    "q89_apply_source_mix": q89_apply_source_mix,
-    "q90_profit_by_nation_year": q90_profit_by_nation_year,
-    "q91_bilateral_volume": q91_bilateral_volume,
-    "q92_hierarchy_shares": q92_hierarchy_shares,
-    "q93_incremental_rollup": q93_incremental_rollup,
-    "q94_distinct_under_rollup": q94_distinct_under_rollup,
-    "q95_order_history_nested": q95_order_history_nested,
-    "q96_gap_filled_daily_revenue": q96_gap_filled_daily_revenue,
-    "q97_drift_chi2": q97_drift_chi2,
-    "q98_order_count_histogram": q98_order_count_histogram,
-    # --- r9 window greens (CORRECTNESS_r09), in their r9-window
-    #     order: q251-q265, then the 35 r4-block canaries ---
-    "q251_pagerank_checkpoint_resume": q251_pagerank_checkpoint_resume,
-    "q252_grouped_topk_verified": q252_grouped_topk_verified,
-    "q253_topk_state_rollup": q253_topk_state_rollup,
-    "q254_delivery_ledger": q254_delivery_ledger,
-    "q255_snapshot_as_of": q255_snapshot_as_of,
-    "q256_snapshot_ledger": q256_snapshot_ledger,
-    "q257_targeted_erasure": q257_targeted_erasure,
-    "q258_snapshot_diff": q258_snapshot_diff,
-    "q259_snapshot_drift_audit": q259_snapshot_drift_audit,
-    "q260_manifest_consistency_audit": q260_manifest_consistency_audit,
-    "q261_schema_evolution_pin": q261_schema_evolution_pin,
-    "q262_grid_erasure": q262_grid_erasure,
-    "q263_late_event_audit": q263_late_event_audit,
-    "q264_log_retention_ledger": q264_log_retention_ledger,
-    "q265_incremental_rollup_via_diff": q265_incremental_rollup_via_diff,
-    "q99_split_leakage": q99_split_leakage,
-    "q100_event_throttle": q100_event_throttle,
-    "q101_rolling_distinct_users": q101_rolling_distinct_users,
+_QueryFn = Callable[[SparkSession, str], DataFrame]
+
+
+def _q(
+    fn: _QueryFn, sql: str | None = None, casts: dict[str, str] | None = None
+) -> tuple[_QueryFn, str | None, dict[str, str]]:
+    return fn, sql, casts or {}
+
+
+_REGISTRY = (
+    # --- audit window, positions 1-7: the r14 data-plane compositions
+    _q(q287_erasure_concurrent_append, Q287_SQL),
+    _q(q288_ivf_snapshot_maintenance, Q288_SQL),
+    _q(q289_incremental_dedup_snapshot_diff, Q289_SQL),
+    _q(q290_corpus_release_report, Q290_SQL),
+    _q(q291_vector_store_erasure, Q291_SQL),
+    _q(q292_lengthband_waterfill, Q292_SQL),
+    _q(q293_apportion_schedule, Q293_SQL),
+    # --- 8-13: the r13 partial-oracle upgrades (former rows-only)
+    _q(q26_minhash_dedup, Q26_SQL, {"jaccard": "DOUBLE"}),
+    _q(q69_sign_lsh_neardup, Q69_SQL),
+    _q(q72_semantic_dedup, Q72_SQL),
+    _q(q81_kll_quantiles, Q81_SQL),
+    _q(q82_theta_distinct, Q82_SQL),
+    _q(q87_join_overlap_estimate, Q87_SQL),
+    # --- 14-32: the 19 r8-verdict queries no earlier window re-audited
+    _q(q76_tfidf_topterms, Q76_SQL),
+    _q(q77_source_mix, Q77_SQL),
+    _q(q78_event_funnel, Q78_SQL, {
+        "view_ts": "EPOCH_US", "click_ts": "EPOCH_US", "purchase_ts": "EPOCH_US",
+    }),
+    _q(q79_heavy_join_keys, Q79_SQL),
+    _q(q80_cms_heavy_hitters, Q80_SQL),
+    _q(q83_cdc_apply, Q83_SQL),
+    _q(q84_length_outliers, Q84_SQL),
+    _q(q85_zorder_key, Q85_SQL),
+    _q(q86_token_chunks, Q86_SQL),
+    _q(q89_apply_source_mix, Q89_SQL),
+    _q(q90_profit_by_nation_year, Q90_SQL, {"sum_profit": "DOUBLE"}),
+    _q(q91_bilateral_volume, Q91_SQL, {"revenue": "DOUBLE"}),
+    _q(q92_hierarchy_shares, Q92_SQL, {"revenue": "DOUBLE"}),
+    _q(q93_incremental_rollup, Q93_SQL, {"sum_qty": "DOUBLE", "revenue": "DOUBLE"}),
+    _q(q94_distinct_under_rollup, Q94_SQL),
+    _q(q95_order_history_nested, Q95_SQL),
+    _q(q96_gap_filled_daily_revenue, Q96_SQL, {"revenue": "DOUBLE"}),
+    _q(q97_drift_chi2, Q97_SQL),
+    _q(q98_order_count_histogram, Q98_SQL),
+    # --- 33-50: the first 18 of the r9-verdict block
+    _q(q251_pagerank_checkpoint_resume, Q251_SQL),
+    _q(q252_grouped_topk_verified, Q252_SQL),
+    _q(q253_topk_state_rollup, Q253_SQL),
+    _q(q254_delivery_ledger, Q254_SQL),
+    _q(q255_snapshot_as_of, Q255_SQL),
+    _q(q256_snapshot_ledger, Q256_SQL),
+    _q(q257_targeted_erasure, Q257_SQL),
+    _q(q258_snapshot_diff, Q258_SQL),
+    _q(q259_snapshot_drift_audit, Q259_SQL),
+    _q(q260_manifest_consistency_audit, Q260_SQL),
+    _q(q261_schema_evolution_pin, Q261_SQL),
+    _q(q262_grid_erasure, Q262_SQL),
+    _q(q263_late_event_audit, Q263_SQL),
+    _q(q264_log_retention_ledger, Q264_SQL),
+    _q(q265_incremental_rollup_via_diff, Q265_SQL),
+    _q(q99_split_leakage, Q99_SQL, {"max_jaccard": "DOUBLE"}),
+    _q(q100_event_throttle, Q100_SQL),
+    _q(q101_rolling_distinct_users, Q101_SQL),
     # ================= end of the 50-query audit window =================
-    "q104_vocab_oov": q104_vocab_oov,
-    "q105_label_cohesion": q105_label_cohesion,
-    "q106_leakage_safe_split": q106_leakage_safe_split,
-    "q107_incremental_exact_dedup": q107_incremental_exact_dedup,
-    "q109_corpus_datacard": q109_corpus_datacard,
-    "q110_content_chunks": q110_content_chunks,
-    "q111_chunk_dup_fraction": q111_chunk_dup_fraction,
-    "q112_chunk_dedup_rewrite": q112_chunk_dedup_rewrite,
-    "q113_pagerank_copurchase": q113_pagerank_copurchase,
-    "q115_boilerplate_ngrams": q115_boilerplate_ngrams,
-    "q116_rolling_distinct_by_type": q116_rolling_distinct_by_type,
-    "q117_kmeans_quantized": q117_kmeans_quantized,
-    "q118_embedding_dim_stats": q118_embedding_dim_stats,
-    "q119_token_rarity": q119_token_rarity,
-    "q120_source_overlap": q120_source_overlap,
-    "q121_boilerplate_strip": q121_boilerplate_strip,
-    "q122_canonical_selection": q122_canonical_selection,
-    "q125_ngram_novelty": q125_ngram_novelty,
-    "q126_random_projection": q126_random_projection,
-    "q128_rolling_distinct_sketch": q128_rolling_distinct_sketch,
-    "q129_event_anomaly": q129_event_anomaly,
-    "q130_pair_containment": q130_pair_containment,
-    "q131_packing_efficiency": q131_packing_efficiency,
-    "q132_dup_cluster_sizes": q132_dup_cluster_sizes,
-    "q133_quality_percentiles_by_source": q133_quality_percentiles_by_source,
-    "q137_adaptive_quality_gate": q137_adaptive_quality_gate,
-    "q03_dedup_latest": q03_dedup_latest,
-    "q04_fact_build": q04_fact_build,
-    "q05_sales_by_brand_rollup": q05_sales_by_brand_rollup,
-    "q06_year_month_rollup": q06_year_month_rollup,
-    "q07_slicer_dashboard": q07_slicer_dashboard,
-    "q09_top5_parts_per_brand": q09_top5_parts_per_brand,
-    # --- r10 window greens (CORRECTNESS_r10), in their r10-window
-    #     order: q266/q267, then the 48-query r5-verdict remainder ---
-    "q266_lineitem_contract": q266_lineitem_contract,
-    "q267_referential_gate": q267_referential_gate,
-    "q15_idempotent_append": q15_idempotent_append,
-    "q17_latest_order_per_customer": q17_latest_order_per_customer,
-    "q20_ngram_jaccard_pairs": q20_ngram_jaccard_pairs,
-    "q22_text_quality": q22_text_quality,
-    "q25_knn_bruteforce": q25_knn_bruteforce,
-    "q29_event_type_stats": q29_event_type_stats,
-    "q30_event_daily_counts": q30_event_daily_counts,
-    "q31_sessionize_batch": q31_sessionize_batch,
-    "q32_top_suppliers_per_nation": q32_top_suppliers_per_nation,
-    "q33_embedding_neardup": q33_embedding_neardup,
-    "q34_cube_region_segment": q34_cube_region_segment,
-    "q37_order_value_percentiles": q37_order_value_percentiles,
-    "q42_revenue_mom": q42_revenue_mom,
-    "q45_grouping_sets_sql": q45_grouping_sets_sql,
-    "q46_asof_click_attribution": q46_asof_click_attribution,
-    "q47_price_band_join": q47_price_band_join,
-    "q48_deterministic_split": q48_deterministic_split,
-    "q49_dedup_clusters": q49_dedup_clusters,
-    "q50_pivot_returnflag": q50_pivot_returnflag,
-    "q51_unpivot_measures": q51_unpivot_measures,
-    "q52_rolling_range_revenue": q52_rolling_range_revenue,
-    "q53_supplier_revenue_distribution": q53_supplier_revenue_distribution,
-    "q54_small_quantity_parts": q54_small_quantity_parts,
-    "q55_promo_revenue_share": q55_promo_revenue_share,
-    "q56_spend_deciles": q56_spend_deciles,
-    "q57_stratified_sample": q57_stratified_sample,
-    "q58_hopping_window_counts": q58_hopping_window_counts,
-    "q59_global_topk": q59_global_topk,
-    "q60_late_unreturned_orders": q60_late_unreturned_orders,
-    "q61_bloom_semi_reduction": q61_bloom_semi_reduction,
-    "q62_price_histogram": q62_price_histogram,
-    "q63_embedding_norms": q63_embedding_norms,
-    "q64_pricing_summary": q64_pricing_summary,
-    "q65_shipping_priority": q65_shipping_priority,
-    "q66_salted_skew_agg": q66_salted_skew_agg,
-    "q68_json_map_explode": q68_json_map_explode,
-    "q136_ann_recall": q136_ann_recall,
-    "q138_rolling_quantile_sketch": q138_rolling_quantile_sketch,
-    "q140_retention_cohorts": q140_retention_cohorts,
-    "q141_order_islands": q141_order_islands,
-    "q142_event_transitions": q142_event_transitions,
-    "q143_day_hour_heatmap": q143_day_hour_heatmap,
-    "q144_global_nucleus_fill": q144_global_nucleus_fill,
-    "q145_scd2_from_cdc": q145_scd2_from_cdc,
-    "q146_bigram_lift": q146_bigram_lift,
-    "q147_time_to_convert": q147_time_to_convert,
-    "q148_mad_outliers": q148_mad_outliers,
-    "q149_brand_skyline": q149_brand_skyline,
-    # --- r11 window greens (CORRECTNESS_r11), in their r11-window
-    #     order: q268-q275, then the 42-query r6-verdict band ---
-    "q268_ledger_contract": q268_ledger_contract,
-    "q269_topk_truncation_band": q269_topk_truncation_band,
-    "q270_bloom_point_prune": q270_bloom_point_prune,
-    "q271_multibatch_erasure": q271_multibatch_erasure,
-    "q272_bloomed_erasure": q272_bloomed_erasure,
-    "q273_filegrain_erasure": q273_filegrain_erasure,
-    "q274_compact_batch": q274_compact_batch,
-    "q275_streamed_bloom_chain": q275_streamed_bloom_chain,
-    "q150_survivorship_merge": q150_survivorship_merge,
-    "q151_revenue_correlation": q151_revenue_correlation,
-    "q152_prefix_duplicates": q152_prefix_duplicates,
-    "q153_lang_mismatch_audit": q153_lang_mismatch_audit,
-    "q154_minhash_recall": q154_minhash_recall,
-    "q155_interleave_order": q155_interleave_order,
-    "q156_snapshot_diff": q156_snapshot_diff,
-    "q157_trimmed_mean": q157_trimmed_mean,
-    "q158_cluster_quality": q158_cluster_quality,
-    "q159_revenue_trend": q159_revenue_trend,
-    "q160_column_profile": q160_column_profile,
-    "q161_fk_integrity": q161_fk_integrity,
-    "q162_association_rules": q162_association_rules,
-    "q163_rfm_segments": q163_rfm_segments,
-    "q164_numeric_drift": q164_numeric_drift,
-    "q165_trend_residuals": q165_trend_residuals,
-    "q166_order_backlog": q166_order_backlog,
-    "q167_gains_table": q167_gains_table,
-    "q168_label_outliers": q168_label_outliers,
-    "q169_abc_classification": q169_abc_classification,
-    "q170_seasonal_backtest": q170_seasonal_backtest,
-    "q171_duplicate_orders": q171_duplicate_orders,
-    "q172_decontaminate": q172_decontaminate,
-    "q173_quality_length_corr": q173_quality_length_corr,
-    "q174_crosslang_fingerprints": q174_crosslang_fingerprints,
-    "q175_profile_drift": q175_profile_drift,
-    "q176_ab_experiment": q176_ab_experiment,
-    "q177_time_weighted_value": q177_time_weighted_value,
-    "q178_entity_resolution": q178_entity_resolution,
-    "q179_segment_confidence": q179_segment_confidence,
-    "q180_new_vs_returning": q180_new_vs_returning,
-    "q181_sole_blame_supplier": q181_sole_blame_supplier,
-    "q182_quintile_migration": q182_quintile_migration,
-    "q183_duplicate_linenumbers": q183_duplicate_linenumbers,
-    "q184_weekday_seasonality": q184_weekday_seasonality,
-    "q185_session_stats": q185_session_stats,
-    "q186_supplier_hhi": q186_supplier_hhi,
-    "q187_revenue_gini": q187_revenue_gini,
-    "q188_dedup_threshold_sweep": q188_dedup_threshold_sweep,
-    "q189_pps_systematic_sample": q189_pps_systematic_sample,
-    "q190_event_retention": q190_event_retention,
-    "q191_funnel_summary": q191_funnel_summary,
-    # --- r12 window greens (CORRECTNESS_r12, freshest — back of
-    #     queue), in their r12-window order: q276-q281, then the 8
-    #     old-r6 + 36 r7-head canaries ---
-    "q276_bloom_store_audit": q276_bloom_store_audit,
-    "q277_erasure_crash_repair": q277_erasure_crash_repair,
-    "q278_bloom_autosize": q278_bloom_autosize,
-    "q279_multicol_bloomed_erasure": q279_multicol_bloomed_erasure,
-    "q280_compaction_crash_chain": q280_compaction_crash_chain,
-    "q281_manifest_repair": q281_manifest_repair,
-    "q192_dead_stock": q192_dead_stock,
-    "q193_token_weighted_median": q193_token_weighted_median,
-    "q194_embedding_drift": q194_embedding_drift,
-    "q243_tier_disagreement": q243_tier_disagreement,
-    "q88_copurchase_triangles": q88_copurchase_triangles,
-    "q123_quota_sample": q123_quota_sample,
-    "q134_training_recipe": q134_training_recipe,
-    "q08_rolling_30row": q08_rolling_30row,
-    "q195_benford_audit": q195_benford_audit,
-    "q196_revenue_anomaly_mad": q196_revenue_anomaly_mad,
-    "q197_keyword_search": q197_keyword_search,
-    "q198_bucket_skew_audit": q198_bucket_skew_audit,
-    "q199_reconciliation_audit": q199_reconciliation_audit,
-    "q200_release_readiness": q200_release_readiness,
-    "q201_double_billing_exposure": q201_double_billing_exposure,
-    "q202_ensemble_neardup": q202_ensemble_neardup,
-    "q203_contingency_residuals": q203_contingency_residuals,
-    "q204_fiscal_calendar": q204_fiscal_calendar,
-    "q205_touch_attribution": q205_touch_attribution,
-    "q206_knn_label_accuracy": q206_knn_label_accuracy,
-    "q207_session_concurrency": q207_session_concurrency,
-    "q208_cusum_changepoint": q208_cusum_changepoint,
-    "q209_xyz_volatility": q209_xyz_volatility,
-    "q210_quantile_normalize": q210_quantile_normalize,
-    "q211_frequent_triples": q211_frequent_triples,
-    "q212_price_volume_bridge": q212_price_volume_bridge,
-    "q213_unknown_member_repair": q213_unknown_member_repair,
-    "q214_weighted_jaccard": q214_weighted_jaccard,
-    "q215_rebalance_plan": q215_rebalance_plan,
-    "q216_stats_merge_audit": q216_stats_merge_audit,
-    "q217_stratified_kfold": q217_stratified_kfold,
-    "q218_equidepth_histogram": q218_equidepth_histogram,
-    "q219_user_lifecycle": q219_user_lifecycle,
-    "q221_backfill_restatement": q221_backfill_restatement,
-    "q222_dedup_cost_model": q222_dedup_cost_model,
-    "q223_sla_attainment": q223_sla_attainment,
-    "q224_basket_diversity": q224_basket_diversity,
-    "q225_discount_elasticity": q225_discount_elasticity,
-    "q226_cohort_ltv": q226_cohort_ltv,
-    "q227_session_paths": q227_session_paths,
-    "q228_revenue_decomposition": q228_revenue_decomposition,
-    "q229_lang_confusion": q229_lang_confusion,
-    "q230_share_matrix": q230_share_matrix,
-    "q231_hhi_trend": q231_hhi_trend,
-    # --- displaced r13 window (pass(r13) verdicts, CORRECTNESS_r13),
-    #     in its r13-window order: q282-q286, then its 45 canaries ---
-    "q282_bloom_store_repair": q282_bloom_store_repair,
-    "q283_noop_resume_retirement": q283_noop_resume_retirement,
-    "q284_wholetable_crash_repair": q284_wholetable_crash_repair,
-    "q285_journaled_store_reconciliation": q285_journaled_store_reconciliation,
-    "q286_compaction_marker_repair": q286_compaction_marker_repair,
-    # --- 45 canaries (positions 6-50): the 14 remaining r7-verdict
-    #     queries, then the head of the r8-verdict block, unchanged
-    #     relative order ---
-    "q232_tokenizer_fertility": q232_tokenizer_fertility,
-    "q233_review_queue": q233_review_queue,
-    "q234_gate_ablation": q234_gate_ablation,
-    "q236_reorder_survival": q236_reorder_survival,
-    "q237_vocab_growth": q237_vocab_growth,
-    "q238_fd_audit": q238_fd_audit,
-    "q239_lsh_param_planner": q239_lsh_param_planner,
-    "q240_margin_sample": q240_margin_sample,
-    "q241_join_cost_audit": q241_join_cost_audit,
-    "q242_seasonal_decomposition": q242_seasonal_decomposition,
-    "q244_discount_cap_whatif": q244_discount_cap_whatif,
-    "q245_order_fill_rate": q245_order_fill_rate,
-    "q246_acquisition_curve": q246_acquisition_curve,
-    "q247_top_customer_share": q247_top_customer_share,
-    "q248_charset_audit": q248_charset_audit,
-    "q249_lead_time_stats": q249_lead_time_stats,
-    "q250_unbilled_orders": q250_unbilled_orders,
-    "q103_temperature_mix": q103_temperature_mix,
-    "q124_epoch_plan": q124_epoch_plan,
-    "q139_epoch_execute": q139_epoch_execute,
-    "q01_typed_staging": q01_typed_staging,
-    "q02_date_dim": q02_date_dim,
-    "q10_customer_cohort": q10_customer_cohort,
-    "q11_suspicious_discounts": q11_suspicious_discounts,
-    "q12_qa_load_issues": q12_qa_load_issues,
-    "q13_geo_dim": q13_geo_dim,
-    "q14_scd2_first_load": q14_scd2_first_load,
-    "q16_semi_join_active": q16_semi_join_active,
-    "q18_nullsafe_geo_lookup": q18_nullsafe_geo_lookup,
-    "q19_exact_dedup": q19_exact_dedup,
-    "q21_lang_id": q21_lang_id,
-    "q23_token_stats": q23_token_stats,
-    "q24_doc_fingerprint": q24_doc_fingerprint,
-    "q35_approx_distinct": q35_approx_distinct,
-    "q36_order_cadence": q36_order_cadence,
-    "q39_messy_line_repair": q39_messy_line_repair,
-    "q40_rolling_hash": q40_rolling_hash,
-    "q41_copurchase_pairs": q41_copurchase_pairs,
-    "q43_fuzzy_part_names": q43_fuzzy_part_names,
-    "q44_set_ops_active_customers": q44_set_ops_active_customers,
-    "q70_contamination_check": q70_contamination_check,
-    "q71_doc_repetition": q71_doc_repetition,
-    "q73_pii_redaction": q73_pii_redaction,
-    "q74_embedding_quant": q74_embedding_quant,
-    "q75_sequence_pack": q75_sequence_pack,
-    # --- rows-only (r3/r4 rows-ran verdicts; q27/q28 r2 rows-ran;
-    #     q220/q235 rows-only by design — recall < 1; the structural
-    #     reasons per query are in COVERAGE.md's entry-points note) ---
-    "q102_video_frame_sample": q102_video_frame_sample,
-    "q108_incremental_minhash_dedup": q108_incremental_minhash_dedup,
-    "q114_bpe_merges": q114_bpe_merges,
-    "q127_bpe_encode": q127_bpe_encode,
-    "q135_audio_features": q135_audio_features,
-    "q38_curate_corpus": q38_curate_corpus,
-    "q67_multimodal_features": q67_multimodal_features,
-    "q220_pq_ann": q220_pq_ann,
-    "q235_ivf_pq_ann": q235_ivf_pq_ann,
-    "q27_simhash_buckets": q27_simhash_buckets,
-    "q28_knn_ivf": q28_knn_ivf,
-}
-
-ORACLES: dict[str, str] = {
-    "q01_typed_staging": Q01_SQL,
-    "q02_date_dim": Q02_SQL,
-    "q03_dedup_latest": Q03_SQL,
-    "q04_fact_build": Q04_SQL,
-    "q05_sales_by_brand_rollup": Q05_SQL,
-    "q06_year_month_rollup": Q06_SQL,
-    "q07_slicer_dashboard": Q07_SQL,
-    "q08_rolling_30row": Q08_SQL,
-    "q09_top5_parts_per_brand": Q09_SQL,
-    "q10_customer_cohort": Q10_SQL,
-    "q11_suspicious_discounts": Q11_SQL,
-    "q12_qa_load_issues": Q12_SQL,
-    "q13_geo_dim": Q13_SQL,
-    "q14_scd2_first_load": Q14_SQL,
-    "q15_idempotent_append": Q15_SQL,
-    "q16_semi_join_active": Q16_SQL,
-    "q17_latest_order_per_customer": Q17_SQL,
-    "q18_nullsafe_geo_lookup": Q18_SQL,
-    "q19_exact_dedup": Q19_SQL,
-    "q20_ngram_jaccard_pairs": Q20_SQL,
-    "q21_lang_id": Q21_SQL,
-    "q22_text_quality": Q22_SQL,
-    "q23_token_stats": Q23_SQL,
-    "q24_doc_fingerprint": Q24_SQL,
-    "q25_knn_bruteforce": Q25_SQL,
-    "q29_event_type_stats": Q29_SQL,
-    "q30_event_daily_counts": Q30_SQL,
-    "q31_sessionize_batch": Q31_SQL,
-    "q32_top_suppliers_per_nation": Q32_SQL,
-    "q33_embedding_neardup": Q33_SQL,
-    "q34_cube_region_segment": Q34_SQL,
-    "q35_approx_distinct": Q35_SQL,
-    "q36_order_cadence": Q36_SQL,
-    "q37_order_value_percentiles": Q37_SQL,
-    "q39_messy_line_repair": Q39_SQL,
-    "q40_rolling_hash": Q40_SQL,
-    "q41_copurchase_pairs": Q41_SQL,
-    "q42_revenue_mom": Q42_SQL,
-    "q43_fuzzy_part_names": Q43_SQL,
-    "q44_set_ops_active_customers": Q44_SQL,
-    "q45_grouping_sets_sql": Q45_SQL,
-    "q46_asof_click_attribution": Q46_SQL,
-    "q47_price_band_join": Q47_SQL,
-    "q48_deterministic_split": Q48_SQL,
-    "q49_dedup_clusters": Q49_SQL,
-    "q50_pivot_returnflag": Q50_SQL,
-    "q51_unpivot_measures": Q51_SQL,
-    "q52_rolling_range_revenue": Q52_SQL,
-    "q53_supplier_revenue_distribution": Q53_SQL,
-    "q54_small_quantity_parts": Q54_SQL,
-    "q55_promo_revenue_share": Q55_SQL,
-    "q56_spend_deciles": Q56_SQL,
-    "q57_stratified_sample": Q57_SQL,
-    "q58_hopping_window_counts": Q58_SQL,
-    "q59_global_topk": Q59_SQL,
-    "q60_late_unreturned_orders": Q60_SQL,
-    "q61_bloom_semi_reduction": Q61_SQL,
-    "q62_price_histogram": Q62_SQL,
-    "q63_embedding_norms": Q63_SQL,
-    "q64_pricing_summary": Q64_SQL,
-    "q65_shipping_priority": Q65_SQL,
-    "q66_salted_skew_agg": Q66_SQL,
-    "q68_json_map_explode": Q68_SQL,
-    "q70_contamination_check": Q70_SQL,
-    "q71_doc_repetition": Q71_SQL,
-    "q73_pii_redaction": Q73_SQL,
-    "q74_embedding_quant": Q74_SQL,
-    "q75_sequence_pack": Q75_SQL,
-    "q76_tfidf_topterms": Q76_SQL,
-    "q77_source_mix": Q77_SQL,
-    "q78_event_funnel": Q78_SQL,
-    "q79_heavy_join_keys": Q79_SQL,
-    "q80_cms_heavy_hitters": Q80_SQL,
-    "q83_cdc_apply": Q83_SQL,
-    "q84_length_outliers": Q84_SQL,
-    "q85_zorder_key": Q85_SQL,
-    "q86_token_chunks": Q86_SQL,
-    "q88_copurchase_triangles": Q88_SQL,
-    "q89_apply_source_mix": Q89_SQL,
-    "q90_profit_by_nation_year": Q90_SQL,
-    "q91_bilateral_volume": Q91_SQL,
-    "q92_hierarchy_shares": Q92_SQL,
-    "q93_incremental_rollup": Q93_SQL,
-    "q94_distinct_under_rollup": Q94_SQL,
-    "q95_order_history_nested": Q95_SQL,
-    "q96_gap_filled_daily_revenue": Q96_SQL,
-    "q97_drift_chi2": Q97_SQL,
-    "q98_order_count_histogram": Q98_SQL,
-    "q99_split_leakage": Q99_SQL,
-    "q100_event_throttle": Q100_SQL,
-    "q101_rolling_distinct_users": Q101_SQL,
-    "q103_temperature_mix": Q103_SQL,
-    "q104_vocab_oov": Q104_SQL,
-    "q105_label_cohesion": Q105_SQL,
-    "q106_leakage_safe_split": Q106_SQL,
-    "q107_incremental_exact_dedup": Q107_SQL,
-    "q109_corpus_datacard": Q109_SQL,
-    "q110_content_chunks": Q110_SQL,
-    "q111_chunk_dup_fraction": Q111_SQL,
-    "q112_chunk_dedup_rewrite": Q112_SQL,
-    "q113_pagerank_copurchase": Q113_SQL,
-    "q115_boilerplate_ngrams": Q115_SQL,
-    "q116_rolling_distinct_by_type": Q116_SQL,
-    "q117_kmeans_quantized": Q117_SQL,
-    "q118_embedding_dim_stats": Q118_SQL,
-    "q119_token_rarity": Q119_SQL,
-    "q120_source_overlap": Q120_SQL,
-    "q121_boilerplate_strip": Q121_SQL,
-    "q122_canonical_selection": Q122_SQL,
-    "q123_quota_sample": Q123_SQL,
-    "q124_epoch_plan": Q124_SQL,
-    "q125_ngram_novelty": Q125_SQL,
-    "q126_random_projection": Q126_SQL,
-    "q128_rolling_distinct_sketch": Q128_SQL,
-    "q129_event_anomaly": Q129_SQL,
-    "q130_pair_containment": Q130_SQL,
-    "q131_packing_efficiency": Q131_SQL,
-    "q132_dup_cluster_sizes": Q132_SQL,
-    "q133_quality_percentiles_by_source": Q133_SQL,
-    "q134_training_recipe": Q134_SQL,
-    "q136_ann_recall": Q136_SQL,
-    "q137_adaptive_quality_gate": Q137_SQL,
-    "q138_rolling_quantile_sketch": Q138_SQL,
-    "q140_retention_cohorts": Q140_SQL,
-    "q141_order_islands": Q141_SQL,
-    "q142_event_transitions": Q142_SQL,
-    "q143_day_hour_heatmap": Q143_SQL,
-    "q144_global_nucleus_fill": Q144_SQL,
-    "q145_scd2_from_cdc": Q145_SQL,
-    "q146_bigram_lift": Q146_SQL,
-    "q147_time_to_convert": Q147_SQL,
-    "q148_mad_outliers": Q148_SQL,
-    "q149_brand_skyline": Q149_SQL,
-    "q150_survivorship_merge": Q150_SQL,
-    "q151_revenue_correlation": Q151_SQL,
-    "q152_prefix_duplicates": Q152_SQL,
-    "q153_lang_mismatch_audit": Q153_SQL,
-    "q154_minhash_recall": Q154_SQL,
-    "q155_interleave_order": Q155_SQL,
-    "q156_snapshot_diff": Q156_SQL,
-    "q157_trimmed_mean": Q157_SQL,
-    "q158_cluster_quality": Q158_SQL,
-    "q159_revenue_trend": Q159_SQL,
-    "q160_column_profile": Q160_SQL,
-    "q161_fk_integrity": Q161_SQL,
-    "q162_association_rules": Q162_SQL,
-    "q163_rfm_segments": Q163_SQL,
-    "q164_numeric_drift": Q164_SQL,
-    "q165_trend_residuals": Q165_SQL,
-    "q166_order_backlog": Q166_SQL,
-    "q167_gains_table": Q167_SQL,
-    "q168_label_outliers": Q168_SQL,
-    "q169_abc_classification": Q169_SQL,
-    "q170_seasonal_backtest": Q170_SQL,
-    "q171_duplicate_orders": Q171_SQL,
-    "q172_decontaminate": Q172_SQL,
-    "q173_quality_length_corr": Q173_SQL,
-    "q174_crosslang_fingerprints": Q174_SQL,
-    "q175_profile_drift": Q175_SQL,
-    "q176_ab_experiment": Q176_SQL,
-    "q177_time_weighted_value": Q177_SQL,
-    "q178_entity_resolution": Q178_SQL,
-    "q179_segment_confidence": Q179_SQL,
-    "q180_new_vs_returning": Q180_SQL,
-    "q181_sole_blame_supplier": Q181_SQL,
-    "q182_quintile_migration": Q182_SQL,
-    "q183_duplicate_linenumbers": Q183_SQL,
-    "q184_weekday_seasonality": Q184_SQL,
-    "q185_session_stats": Q185_SQL,
-    "q186_supplier_hhi": Q186_SQL,
-    "q187_revenue_gini": Q187_SQL,
-    "q188_dedup_threshold_sweep": Q188_SQL,
-    "q189_pps_systematic_sample": Q189_SQL,
-    "q190_event_retention": Q190_SQL,
-    "q191_funnel_summary": Q191_SQL,
-    "q192_dead_stock": Q192_SQL,
-    "q193_token_weighted_median": Q193_SQL,
-    "q194_embedding_drift": Q194_SQL,
-    "q195_benford_audit": Q195_SQL,
-    "q196_revenue_anomaly_mad": Q196_SQL,
-    "q197_keyword_search": Q197_SQL,
-    "q198_bucket_skew_audit": Q198_SQL,
-    "q199_reconciliation_audit": Q199_SQL,
-    "q200_release_readiness": Q200_SQL,
-    "q201_double_billing_exposure": Q201_SQL,
-    "q202_ensemble_neardup": Q202_SQL,
-    "q203_contingency_residuals": Q203_SQL,
-    "q204_fiscal_calendar": Q204_SQL,
-    "q205_touch_attribution": Q205_SQL,
-    "q206_knn_label_accuracy": Q206_SQL,
-    "q207_session_concurrency": Q207_SQL,
-    "q208_cusum_changepoint": Q208_SQL,
-    "q209_xyz_volatility": Q209_SQL,
-    "q210_quantile_normalize": Q210_SQL,
-    "q211_frequent_triples": Q211_SQL,
-    "q212_price_volume_bridge": Q212_SQL,
-    "q213_unknown_member_repair": Q213_SQL,
-    "q214_weighted_jaccard": Q214_SQL,
-    "q215_rebalance_plan": Q215_SQL,
-    "q216_stats_merge_audit": Q216_SQL,
-    "q217_stratified_kfold": Q217_SQL,
-    "q218_equidepth_histogram": Q218_SQL,
-    "q219_user_lifecycle": Q219_SQL,
-    "q221_backfill_restatement": Q221_SQL,
-    "q222_dedup_cost_model": Q222_SQL,
-    "q223_sla_attainment": Q223_SQL,
-    "q224_basket_diversity": Q224_SQL,
-    "q225_discount_elasticity": Q225_SQL,
-    "q226_cohort_ltv": Q226_SQL,
-    "q227_session_paths": Q227_SQL,
-    "q228_revenue_decomposition": Q228_SQL,
-    "q229_lang_confusion": Q229_SQL,
-    "q230_share_matrix": Q230_SQL,
-    "q231_hhi_trend": Q231_SQL,
-    "q232_tokenizer_fertility": Q232_SQL,
-    "q233_review_queue": Q233_SQL,
-    "q234_gate_ablation": Q234_SQL,
-    "q236_reorder_survival": Q236_SQL,
-    "q237_vocab_growth": Q237_SQL,
-    "q238_fd_audit": Q238_SQL,
-    "q239_lsh_param_planner": Q239_SQL,
-    "q240_margin_sample": Q240_SQL,
-    "q241_join_cost_audit": Q241_SQL,
-    "q242_seasonal_decomposition": Q242_SQL,
-    "q243_tier_disagreement": Q243_SQL,
-    "q244_discount_cap_whatif": Q244_SQL,
-    "q245_order_fill_rate": Q245_SQL,
-    "q246_acquisition_curve": Q246_SQL,
-    "q247_top_customer_share": Q247_SQL,
-    "q248_charset_audit": Q248_SQL,
-    "q249_lead_time_stats": Q249_SQL,
-    "q250_unbilled_orders": Q250_SQL,
-    "q139_epoch_execute": Q139_SQL,
-    # q26-q28 are approximate (MinHash/SimHash/IVF) — rows-only; q35's
-    # HLL estimate was split into an exact-count + error-band boolean
-    # form in round 3, so it is oracled above.
-    # --- round-9 additions (r8 operator families) ---
-    "q259_snapshot_drift_audit": Q259_SQL,
-    "q260_manifest_consistency_audit": Q260_SQL,
-    "q261_schema_evolution_pin": Q261_SQL,
-    "q262_grid_erasure": Q262_SQL,
-    "q263_late_event_audit": Q263_SQL,
-    "q264_log_retention_ledger": Q264_SQL,
-    "q265_incremental_rollup_via_diff": Q265_SQL,
-    "q251_pagerank_checkpoint_resume": Q251_SQL,
-    "q252_grouped_topk_verified": Q252_SQL,
-    "q253_topk_state_rollup": Q253_SQL,
-    "q254_delivery_ledger": Q254_SQL,
-    "q255_snapshot_as_of": Q255_SQL,
-    "q256_snapshot_ledger": Q256_SQL,
-    "q257_targeted_erasure": Q257_SQL,
-    "q258_snapshot_diff": Q258_SQL,
-    # --- round-10 additions (data contracts) ---
-    "q266_lineitem_contract": Q266_SQL,
-    "q267_referential_gate": Q267_SQL,
-    # --- round-11 additions (compliance/maintenance tier) ---
-    "q268_ledger_contract": Q268_SQL,
-    "q269_topk_truncation_band": Q269_SQL,
-    "q270_bloom_point_prune": Q270_SQL,
-    "q271_multibatch_erasure": Q271_SQL,
-    "q272_bloomed_erasure": Q272_SQL,
-    "q273_filegrain_erasure": Q273_SQL,
-    "q274_compact_batch": Q274_SQL,
-    "q275_streamed_bloom_chain": Q275_SQL,
-    # --- round-12 additions (maintenance/repair tier) ---
-    "q276_bloom_store_audit": Q276_SQL,
-    "q277_erasure_crash_repair": Q277_SQL,
-    "q278_bloom_autosize": Q278_SQL,
-    "q279_multicol_bloomed_erasure": Q279_SQL,
-    "q280_compaction_crash_chain": Q280_SQL,
-    "q281_manifest_repair": Q281_SQL,
-    # --- round-13 additions (repair-hardening tier) ---
-    "q282_bloom_store_repair": Q282_SQL,
-    "q283_noop_resume_retirement": Q283_SQL,
-    "q284_wholetable_crash_repair": Q284_SQL,
-    "q285_journaled_store_reconciliation": Q285_SQL,
-    "q286_compaction_marker_repair": Q286_SQL,
-    # --- round-13 partial-oracle upgrades (former rows-only; exact
-    #     counts oracle-recomputed + guarantee booleans pinned TRUE) ---
-    "q26_minhash_dedup": Q26_SQL,
-    "q69_sign_lsh_neardup": Q69_SQL,
-    "q72_semantic_dedup": Q72_SQL,
-    "q81_kll_quantiles": Q81_SQL,
-    "q82_theta_distinct": Q82_SQL,
-    "q87_join_overlap_estimate": Q87_SQL,
-    # --- round-14 data-plane compositions ---
-    "q287_erasure_concurrent_append": Q287_SQL,
-    "q288_ivf_snapshot_maintenance": Q288_SQL,
-    "q289_incremental_dedup_snapshot_diff": Q289_SQL,
-    "q290_corpus_release_report": Q290_SQL,
-    "q291_vector_store_erasure": Q291_SQL,
-    "q292_lengthband_waterfill": Q292_SQL,
-    "q293_apportion_schedule": Q293_SQL,
-}
+    # --- the 32 remaining r9-verdict queries
+    _q(q104_vocab_oov, Q104_SQL, {"oov_rate": "DOUBLE"}),
+    _q(q105_label_cohesion, Q105_SQL, {"min_cos": "DOUBLE"}),
+    _q(q106_leakage_safe_split, Q106_SQL),
+    _q(q107_incremental_exact_dedup, Q107_SQL),
+    _q(q109_corpus_datacard, Q109_SQL, {"dup_rate": "DOUBLE"}),
+    _q(q110_content_chunks, Q110_SQL),
+    _q(q111_chunk_dup_fraction, Q111_SQL, {"dup_chunk_frac": "DOUBLE"}),
+    _q(q112_chunk_dedup_rewrite, Q112_SQL),
+    _q(q113_pagerank_copurchase, Q113_SQL),
+    _q(q115_boilerplate_ngrams, Q115_SQL),
+    _q(q116_rolling_distinct_by_type, Q116_SQL),
+    _q(q117_kmeans_quantized, Q117_SQL),
+    _q(q118_embedding_dim_stats, Q118_SQL),
+    _q(q119_token_rarity, Q119_SQL),
+    _q(q120_source_overlap, Q120_SQL),
+    _q(q121_boilerplate_strip, Q121_SQL),
+    _q(q122_canonical_selection, Q122_SQL, {"canon_quality": "DOUBLE"}),
+    _q(q125_ngram_novelty, Q125_SQL),
+    _q(q126_random_projection, Q126_SQL),
+    _q(q128_rolling_distinct_sketch, Q128_SQL),
+    _q(q129_event_anomaly, Q129_SQL),
+    _q(q130_pair_containment, Q130_SQL, {
+        "jaccard": "DOUBLE", "containment": "DOUBLE", "size_ratio": "DOUBLE",
+    }),
+    _q(q131_packing_efficiency, Q131_SQL),
+    _q(q132_dup_cluster_sizes, Q132_SQL),
+    _q(q133_quality_percentiles_by_source, Q133_SQL, {
+        "p50_quality": "DOUBLE", "p90_quality": "DOUBLE",
+    }),
+    _q(q137_adaptive_quality_gate, Q137_SQL, {"q": "DOUBLE", "thr": "DOUBLE"}),
+    _q(q03_dedup_latest, Q03_SQL, {"qty": "DOUBLE"}),
+    _q(q04_fact_build, Q04_SQL, {
+        "qty": "DOUBLE", "revenue": "DOUBLE", "profit": "DOUBLE",
+    }),
+    _q(q05_sales_by_brand_rollup, Q05_SQL, {"sum_qty": "DOUBLE", "revenue": "DOUBLE"}),
+    _q(q06_year_month_rollup, Q06_SQL, {"total_price": "DOUBLE"}),
+    _q(q07_slicer_dashboard, Q07_SQL, {"sum_qty": "DOUBLE", "revenue": "DOUBLE"}),
+    _q(q09_top5_parts_per_brand, Q09_SQL, {
+        "profit": "DOUBLE", "profit_share": "DOUBLE",
+    }),
+    # --- r10 window greens (CORRECTNESS_r10), in their window order
+    _q(q266_lineitem_contract, Q266_SQL),
+    _q(q267_referential_gate, Q267_SQL),
+    _q(q15_idempotent_append, Q15_SQL, {"qty": "DOUBLE"}),
+    _q(q17_latest_order_per_customer, Q17_SQL, {"latest_total": "DOUBLE"}),
+    _q(q20_ngram_jaccard_pairs, Q20_SQL, {"jaccard": "DOUBLE"}),
+    _q(q22_text_quality, Q22_SQL, {
+        "punct_ratio": "DOUBLE", "stopword_ratio": "DOUBLE", "quality": "DOUBLE",
+    }),
+    _q(q25_knn_bruteforce, Q25_SQL, {"cos_sim": "DOUBLE"}),
+    _q(q29_event_type_stats, Q29_SQL, {"sum_value": "DOUBLE", "avg_k": "DOUBLE"}),
+    _q(q30_event_daily_counts, Q30_SQL),
+    _q(q31_sessionize_batch, Q31_SQL, {
+        "session_no": "BIGINT", "sum_value": "DOUBLE", "session_start": "EPOCH_US",
+        "session_end": "EPOCH_US",
+    }),
+    _q(q32_top_suppliers_per_nation, Q32_SQL, {"revenue": "DOUBLE"}),
+    _q(q33_embedding_neardup, Q33_SQL, {"cos_sim": "DOUBLE"}),
+    _q(q34_cube_region_segment, Q34_SQL, {"revenue": "DOUBLE"}),
+    _q(q37_order_value_percentiles, Q37_SQL, {
+        "median_value": "DOUBLE", "p90_value": "DOUBLE",
+    }),
+    _q(q42_revenue_mom, Q42_SQL, {"revenue": "DOUBLE", "mom_change": "DOUBLE"}),
+    _q(q45_grouping_sets_sql, Q45_SQL, {"revenue": "DOUBLE"}),
+    _q(q46_asof_click_attribution, Q46_SQL, {"purchase_ts": "EPOCH_US"}),
+    _q(q47_price_band_join, Q47_SQL, {"gross": "DOUBLE"}),
+    _q(q48_deterministic_split, Q48_SQL, {"sum_chars": "BIGINT"}),
+    _q(q49_dedup_clusters, Q49_SQL),
+    _q(q50_pivot_returnflag, Q50_SQL, {
+        "qty_a": "DOUBLE", "qty_n": "DOUBLE", "qty_r": "DOUBLE",
+    }),
+    _q(q51_unpivot_measures, Q51_SQL, {"value": "DOUBLE"}),
+    _q(q52_rolling_range_revenue, Q52_SQL, {
+        "day_revenue": "DOUBLE", "rev_7day": "DOUBLE",
+    }),
+    _q(q53_supplier_revenue_distribution, Q53_SQL, {
+        "revenue": "DOUBLE", "pct_rank": "DOUBLE", "cume": "DOUBLE",
+        "nation_min_rev": "DOUBLE", "nation_max_rev": "DOUBLE",
+    }),
+    _q(q54_small_quantity_parts, Q54_SQL, {"small_revenue": "DOUBLE"}),
+    _q(q55_promo_revenue_share, Q55_SQL, {
+        "promo_revenue": "DOUBLE", "total_revenue": "DOUBLE", "promo_share": "DOUBLE",
+    }),
+    _q(q56_spend_deciles, Q56_SQL, {
+        "min_spend": "DOUBLE", "max_spend": "DOUBLE", "sum_spend": "DOUBLE",
+    }),
+    _q(q57_stratified_sample, Q57_SQL, {"sum_bal": "DOUBLE"}),
+    _q(q58_hopping_window_counts, Q58_SQL, {
+        "sum_value": "DOUBLE", "win_start": "EPOCH_US",
+    }),
+    _q(q59_global_topk, Q59_SQL, {"revenue": "DOUBLE"}),
+    _q(q60_late_unreturned_orders, Q60_SQL, {"sum_price": "DOUBLE"}),
+    _q(q61_bloom_semi_reduction, Q61_SQL, {"revenue": "DOUBLE"}),
+    _q(q62_price_histogram, Q62_SQL, {"sum_price": "DOUBLE"}),
+    _q(q63_embedding_norms, Q63_SQL),
+    _q(q64_pricing_summary, Q64_SQL, {
+        "sum_qty": "DOUBLE", "sum_base": "DOUBLE", "sum_disc": "DOUBLE",
+        "sum_charge": "DOUBLE", "avg_qty": "DOUBLE", "avg_price": "DOUBLE",
+    }),
+    _q(q65_shipping_priority, Q65_SQL, {"revenue": "DOUBLE"}),
+    _q(q66_salted_skew_agg, Q66_SQL, {"sum_value": "DOUBLE"}),
+    _q(q68_json_map_explode, Q68_SQL),
+    _q(q136_ann_recall, Q136_SQL),
+    _q(q138_rolling_quantile_sketch, Q138_SQL),
+    _q(q140_retention_cohorts, Q140_SQL),
+    _q(q141_order_islands, Q141_SQL),
+    _q(q142_event_transitions, Q142_SQL),
+    _q(q143_day_hour_heatmap, Q143_SQL),
+    _q(q144_global_nucleus_fill, Q144_SQL, {"q": "DOUBLE"}),
+    _q(q145_scd2_from_cdc, Q145_SQL),
+    _q(q146_bigram_lift, Q146_SQL),
+    _q(q147_time_to_convert, Q147_SQL),
+    _q(q148_mad_outliers, Q148_SQL),
+    _q(q149_brand_skyline, Q149_SQL),
+    # --- r11 window greens (CORRECTNESS_r11), in their window order
+    _q(q268_ledger_contract, Q268_SQL),
+    _q(q269_topk_truncation_band, Q269_SQL),
+    _q(q270_bloom_point_prune, Q270_SQL),
+    _q(q271_multibatch_erasure, Q271_SQL),
+    _q(q272_bloomed_erasure, Q272_SQL),
+    _q(q273_filegrain_erasure, Q273_SQL),
+    _q(q274_compact_batch, Q274_SQL),
+    _q(q275_streamed_bloom_chain, Q275_SQL),
+    _q(q150_survivorship_merge, Q150_SQL),
+    _q(q151_revenue_correlation, Q151_SQL),
+    _q(q152_prefix_duplicates, Q152_SQL),
+    _q(q153_lang_mismatch_audit, Q153_SQL),
+    _q(q154_minhash_recall, Q154_SQL, {"jaccard": "DOUBLE"}),
+    _q(q155_interleave_order, Q155_SQL),
+    _q(q156_snapshot_diff, Q156_SQL),
+    _q(q157_trimmed_mean, Q157_SQL),
+    _q(q158_cluster_quality, Q158_SQL, {"min_jaccard": "DOUBLE"}),
+    _q(q159_revenue_trend, Q159_SQL),
+    _q(q160_column_profile, Q160_SQL),
+    _q(q161_fk_integrity, Q161_SQL),
+    _q(q162_association_rules, Q162_SQL),
+    _q(q163_rfm_segments, Q163_SQL),
+    _q(q164_numeric_drift, Q164_SQL),
+    _q(q165_trend_residuals, Q165_SQL),
+    _q(q166_order_backlog, Q166_SQL),
+    _q(q167_gains_table, Q167_SQL),
+    _q(q168_label_outliers, Q168_SQL),
+    _q(q169_abc_classification, Q169_SQL),
+    _q(q170_seasonal_backtest, Q170_SQL),
+    _q(q171_duplicate_orders, Q171_SQL),
+    _q(q172_decontaminate, Q172_SQL),
+    _q(q173_quality_length_corr, Q173_SQL),
+    _q(q174_crosslang_fingerprints, Q174_SQL),
+    _q(q175_profile_drift, Q175_SQL),
+    _q(q176_ab_experiment, Q176_SQL),
+    _q(q177_time_weighted_value, Q177_SQL),
+    _q(q178_entity_resolution, Q178_SQL),
+    _q(q179_segment_confidence, Q179_SQL),
+    _q(q180_new_vs_returning, Q180_SQL),
+    _q(q181_sole_blame_supplier, Q181_SQL),
+    _q(q182_quintile_migration, Q182_SQL),
+    _q(q183_duplicate_linenumbers, Q183_SQL),
+    _q(q184_weekday_seasonality, Q184_SQL),
+    _q(q185_session_stats, Q185_SQL),
+    _q(q186_supplier_hhi, Q186_SQL),
+    _q(q187_revenue_gini, Q187_SQL),
+    _q(q188_dedup_threshold_sweep, Q188_SQL),
+    _q(q189_pps_systematic_sample, Q189_SQL),
+    _q(q190_event_retention, Q190_SQL),
+    _q(q191_funnel_summary, Q191_SQL),
+    # --- r12 window greens (CORRECTNESS_r12), in their window order
+    _q(q276_bloom_store_audit, Q276_SQL),
+    _q(q277_erasure_crash_repair, Q277_SQL),
+    _q(q278_bloom_autosize, Q278_SQL),
+    _q(q279_multicol_bloomed_erasure, Q279_SQL),
+    _q(q280_compaction_crash_chain, Q280_SQL),
+    _q(q281_manifest_repair, Q281_SQL),
+    _q(q192_dead_stock, Q192_SQL),
+    _q(q193_token_weighted_median, Q193_SQL),
+    _q(q194_embedding_drift, Q194_SQL),
+    _q(q243_tier_disagreement, Q243_SQL),
+    _q(q88_copurchase_triangles, Q88_SQL),
+    _q(q123_quota_sample, Q123_SQL),
+    _q(q134_training_recipe, Q134_SQL),
+    _q(q08_rolling_30row, Q08_SQL, {"rolling_rev": "DOUBLE"}),
+    _q(q195_benford_audit, Q195_SQL),
+    _q(q196_revenue_anomaly_mad, Q196_SQL),
+    _q(q197_keyword_search, Q197_SQL),
+    _q(q198_bucket_skew_audit, Q198_SQL),
+    _q(q199_reconciliation_audit, Q199_SQL),
+    _q(q200_release_readiness, Q200_SQL),
+    _q(q201_double_billing_exposure, Q201_SQL),
+    _q(q202_ensemble_neardup, Q202_SQL),
+    _q(q203_contingency_residuals, Q203_SQL),
+    _q(q204_fiscal_calendar, Q204_SQL),
+    _q(q205_touch_attribution, Q205_SQL),
+    _q(q206_knn_label_accuracy, Q206_SQL),
+    _q(q207_session_concurrency, Q207_SQL),
+    _q(q208_cusum_changepoint, Q208_SQL),
+    _q(q209_xyz_volatility, Q209_SQL),
+    _q(q210_quantile_normalize, Q210_SQL),
+    _q(q211_frequent_triples, Q211_SQL),
+    _q(q212_price_volume_bridge, Q212_SQL),
+    _q(q213_unknown_member_repair, Q213_SQL),
+    _q(q214_weighted_jaccard, Q214_SQL, {"w_jaccard": "DOUBLE"}),
+    _q(q215_rebalance_plan, Q215_SQL),
+    _q(q216_stats_merge_audit, Q216_SQL),
+    _q(q217_stratified_kfold, Q217_SQL),
+    _q(q218_equidepth_histogram, Q218_SQL),
+    _q(q219_user_lifecycle, Q219_SQL),
+    _q(q221_backfill_restatement, Q221_SQL),
+    _q(q222_dedup_cost_model, Q222_SQL),
+    _q(q223_sla_attainment, Q223_SQL),
+    _q(q224_basket_diversity, Q224_SQL),
+    _q(q225_discount_elasticity, Q225_SQL),
+    _q(q226_cohort_ltv, Q226_SQL),
+    _q(q227_session_paths, Q227_SQL),
+    _q(q228_revenue_decomposition, Q228_SQL),
+    _q(q229_lang_confusion, Q229_SQL),
+    _q(q230_share_matrix, Q230_SQL),
+    _q(q231_hhi_trend, Q231_SQL),
+    # --- displaced r13 window (CORRECTNESS_r13), in its window order
+    _q(q282_bloom_store_repair, Q282_SQL),
+    _q(q283_noop_resume_retirement, Q283_SQL),
+    _q(q284_wholetable_crash_repair, Q284_SQL),
+    _q(q285_journaled_store_reconciliation, Q285_SQL),
+    _q(q286_compaction_marker_repair, Q286_SQL),
+    _q(q232_tokenizer_fertility, Q232_SQL),
+    _q(q233_review_queue, Q233_SQL),
+    _q(q234_gate_ablation, Q234_SQL),
+    _q(q236_reorder_survival, Q236_SQL),
+    _q(q237_vocab_growth, Q237_SQL),
+    _q(q238_fd_audit, Q238_SQL),
+    _q(q239_lsh_param_planner, Q239_SQL),
+    _q(q240_margin_sample, Q240_SQL),
+    _q(q241_join_cost_audit, Q241_SQL),
+    _q(q242_seasonal_decomposition, Q242_SQL),
+    _q(q244_discount_cap_whatif, Q244_SQL),
+    _q(q245_order_fill_rate, Q245_SQL),
+    _q(q246_acquisition_curve, Q246_SQL),
+    _q(q247_top_customer_share, Q247_SQL),
+    _q(q248_charset_audit, Q248_SQL),
+    _q(q249_lead_time_stats, Q249_SQL),
+    _q(q250_unbilled_orders, Q250_SQL),
+    _q(q103_temperature_mix, Q103_SQL),
+    _q(q124_epoch_plan, Q124_SQL),
+    _q(q139_epoch_execute, Q139_SQL),
+    _q(q01_typed_staging, Q01_SQL, {"acctbal": "DOUBLE"}),
+    _q(q02_date_dim, Q02_SQL),
+    _q(q10_customer_cohort, Q10_SQL),
+    _q(q11_suspicious_discounts, Q11_SQL, {"discount": "DOUBLE", "margin": "DOUBLE"}),
+    _q(q12_qa_load_issues, Q12_SQL),
+    _q(q13_geo_dim, Q13_SQL),
+    _q(q14_scd2_first_load, Q14_SQL),
+    _q(q16_semi_join_active, Q16_SQL),
+    _q(q18_nullsafe_geo_lookup, Q18_SQL),
+    _q(q19_exact_dedup, Q19_SQL),
+    _q(q21_lang_id, Q21_SQL),
+    _q(q23_token_stats, Q23_SQL),
+    _q(q24_doc_fingerprint, Q24_SQL),
+    _q(q35_approx_distinct, Q35_SQL),
+    _q(q36_order_cadence, Q36_SQL),
+    _q(q39_messy_line_repair, Q39_SQL),
+    _q(q40_rolling_hash, Q40_SQL),
+    _q(q41_copurchase_pairs, Q41_SQL),
+    _q(q43_fuzzy_part_names, Q43_SQL),
+    _q(q44_set_ops_active_customers, Q44_SQL),
+    _q(q70_contamination_check, Q70_SQL, {"contamination": "DOUBLE"}),
+    _q(q71_doc_repetition, Q71_SQL, {
+        "dup_tri_frac": "DOUBLE", "top_bi_frac": "DOUBLE",
+    }),
+    _q(q73_pii_redaction, Q73_SQL),
+    _q(q74_embedding_quant, Q74_SQL),
+    _q(q75_sequence_pack, Q75_SQL),
+    # --- rows-only tail (the reason per query is in COVERAGE.md)
+    _q(q102_video_frame_sample),
+    _q(q108_incremental_minhash_dedup),
+    _q(q114_bpe_merges),
+    _q(q127_bpe_encode),
+    _q(q135_audio_features),
+    _q(q38_curate_corpus),
+    _q(q67_multimodal_features),
+    _q(q220_pq_ann),
+    _q(q235_ivf_pq_ann),
+    _q(q27_simhash_buckets),
+    _q(q28_knn_ivf),
+)
 
 # apply the canonical output boundary to every query and oracle (see the
-# "canonical output boundary" block above; parity.py enforces that no
-# DECIMAL/HUGEINT survives to a final projection on either side)
-QUERIES = {name: _canon_query(fn) for name, fn in QUERIES.items()}
-ORACLES = {
-    name: _canon_sql(sql, _CANON_SQL_CASTS[name]) if name in _CANON_SQL_CASTS else sql
-    for name, sql in ORACLES.items()
+# "canonical output boundary" block above)
+QUERIES: dict[str, _QueryFn] = {fn.__name__: _canon_query(fn) for fn, _, _ in _REGISTRY}
+ORACLES: dict[str, str] = {
+    fn.__name__: _canon_sql(sql, casts) if casts else sql
+    for fn, sql, casts in _REGISTRY
+    if sql is not None
 }

@@ -34,6 +34,8 @@ from ..functions.dates import date_key, day_name, month_name, quarter_name, us_w
 from ..functions.hashing import geo_hash_key, scd2_hash_diff
 from ..operators.date_spine import date_spine
 from ..operators.quality import load_issues
+from ..operators.scd2 import scd2_apply, scd2_first_load, snapshot
+from ..operators.windows import dedup_keep_first
 from ..sources.messy_csv import read_superstore_csv
 
 # -------------------------------------------------------------- staging
@@ -94,13 +96,10 @@ def dedup_staged(stg: DataFrame) -> DataFrame:
     Reference order: IngestedAt DESC, SourceFile DESC — constant within a
     load; our deterministic completion is SourceRowNum ASC (file order),
     which reproduces BASELINE.md's post-dedup sums."""
-    w = Window.partitionBy("OrderID", "ProductID").orderBy(
-        F.desc("IngestedAt"), F.desc("SourceFile"), F.asc("SourceRowNum")
-    )
-    return (
-        stg.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+    return dedup_keep_first(
+        stg,
+        ["OrderID", "ProductID"],
+        [F.desc("IngestedAt"), F.desc("SourceFile"), F.asc("SourceRowNum")],
     )
 
 
@@ -227,32 +226,17 @@ def build_geography_dim(stg: DataFrame) -> DataFrame:
     )
 
 
+_CUSTOMER_ATTRS = ["CustomerName", "Segment", "Region"]
+
+
+def _customer_snapshot(stg: DataFrame) -> DataFrame:
+    return snapshot(stg.filter(F.col("CustomerID").isNotNull()), "CustomerID", _CUSTOMER_ATTRS)
+
+
 def build_customer_dim(stg: DataFrame) -> DataFrame:
     """dim.Customer SCD2 first load (SQLproject1.sql:450-514): MAX-snapshot
     per CustomerID, SHA2_256 HashDiff, open-ended validity."""
-    snap = (
-        stg.filter(F.col("CustomerID").isNotNull())
-        .groupBy("CustomerID")
-        .agg(
-            F.max("CustomerName").alias("CustomerName"),
-            F.max("Segment").alias("Segment"),
-            F.max("Region").alias("Region"),
-        )
-    )
-    w = Window.orderBy("CustomerID")
-    return snap.select(
-        F.row_number().over(w).alias("CustomerKey"),
-        "CustomerID",
-        "CustomerName",
-        "Segment",
-        "Region",
-        F.lit("1900-01-01").cast("date").alias("EffectiveFrom"),
-        F.lit("9999-12-31").cast("date").alias("EffectiveTo"),
-        F.lit(True).alias("IsCurrent"),
-        scd2_hash_diff(F.col("CustomerName"), F.col("Segment"), F.col("Region")).alias(
-            "HashDiff"
-        ),
-    )
+    return scd2_first_load(_customer_snapshot(stg), "CustomerID", _CUSTOMER_ATTRS, "CustomerKey")
 
 
 def build_product_dim(stg: DataFrame, subcategory: DataFrame, category: DataFrame) -> DataFrame:
@@ -287,17 +271,11 @@ def apply_customer_delta(dim_customer: DataFrame, stg2: DataFrame, as_of) -> Dat
     """Incremental SCD2 run for a second staged batch (FIXTURES.md F4):
     changed customers expire + get a new current row effective `as_of`,
     new customers insert open-ended, unchanged/departed carry through.
-    One full-outer join on CustomerID (operators.scd2.scd2_apply)."""
-    from ..operators.scd2 import scd2_apply, snapshot
-
-    snap = snapshot(
-        stg2.filter(F.col("CustomerID").isNotNull()),
-        "CustomerID",
-        ["CustomerName", "Segment", "Region"],
-    )
+    One full-outer join on CustomerID (operators.scd2.scd2_apply); its
+    HashDiffs come from the same snapshot as the first load's."""
     return scd2_apply(
-        dim_customer, snap, "CustomerID",
-        ["CustomerName", "Segment", "Region"], "CustomerKey", as_of=as_of,
+        dim_customer, _customer_snapshot(stg2), "CustomerID", _CUSTOMER_ATTRS,
+        "CustomerKey", as_of=as_of,
     )
 
 

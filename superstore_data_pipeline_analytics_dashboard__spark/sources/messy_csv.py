@@ -91,6 +91,33 @@ def repair_line(col: F.Column) -> F.Column:
     return F.when(is_wrapped, unwrapped).otherwise(stripped)
 
 
+def _parse_line() -> F.Column:
+    """The repaired ``line`` parsed into the 21-field struct ``r``."""
+    return F.from_csv(
+        F.col("line"),
+        _SCHEMA_DDL,
+        {"sep": ",", "quote": '"', "escape": '"', "mode": "PERMISSIVE"},
+    ).alias("r")
+
+
+def _raw_records(parsed: DataFrame, path: str) -> DataFrame:
+    """Flatten the parsed struct ``r`` to the 21 named columns and add the
+    audit columns (S3 — SQLproject1.sql:104-105). The reference drops
+    Row ID (Excel explicitly, SQL by its column-mapping defect); we keep
+    it as SourceRowNum lineage — it is the only stable total order over
+    the input, needed for the deterministic dedup tie-break that
+    reproduces BASELINE.md's post-dedup sums (keep lowest Row ID)."""
+    flat = parsed.select(
+        *[F.col(f"r.`{safe}`").alias(orig) for safe, orig in zip(_SAFE, CSV_COLUMNS)]
+    )
+    return (
+        flat.withColumn("SourceRowNum", F.col("Row ID").try_cast("int"))
+        .drop("Row ID")
+        .withColumn("IngestedAt", F.current_timestamp())
+        .withColumn("SourceFile", F.lit(path))
+    )
+
+
 def read_superstore_csv(
     spark: SparkSession,
     path: str,
@@ -113,27 +140,7 @@ def read_superstore_csv(
         body = body.filter(~F.regexp_replace(F.col("value"), r";$", "").rlike(r'^".*"$'))
 
     repaired = body.select(repair_line(F.col("value")).alias("line"))
-    parsed = repaired.select(
-        F.from_csv(
-            F.col("line"),
-            _SCHEMA_DDL,
-            {"sep": ",", "quote": '"', "escape": '"', "mode": "PERMISSIVE"},
-        ).alias("r")
-    )
-    flat = parsed.select(
-        *[F.col(f"r.`{safe}`").alias(orig) for safe, orig in zip(_SAFE, CSV_COLUMNS)]
-    )
-    # audit columns (S3 — SQLproject1.sql:104-105). The reference drops
-    # Row ID (Excel explicitly, SQL by its column-mapping defect); we keep
-    # it as SourceRowNum lineage — it is the only stable total order over
-    # the input, needed for the deterministic dedup tie-break that
-    # reproduces BASELINE.md's post-dedup sums (keep lowest Row ID).
-    return (
-        flat.withColumn("SourceRowNum", F.col("Row ID").try_cast("int"))
-        .drop("Row ID")
-        .withColumn("IngestedAt", F.current_timestamp())
-        .withColumn("SourceFile", F.lit(path))
-    )
+    return _raw_records(repaired.select(_parse_line()), path)
 
 
 def read_superstore_csv_with_quarantine(
@@ -153,29 +160,14 @@ def read_superstore_csv_with_quarantine(
         F.col("value").alias("raw_line"),
         repair_line(F.col("value")).alias("line"),
     )
-    parsed = repaired.select(
-        "raw_line",
-        F.from_csv(
-            F.col("line"),
-            _SCHEMA_DDL,
-            {"sep": ",", "quote": '"', "escape": '"', "mode": "PERMISSIVE"},
-        ).alias("r"),
-    )
+    parsed = repaired.select("raw_line", _parse_line())
     is_bad = (
         F.col("r").isNull()
         | F.col("r.Order_ID").isNull()
         | F.col("r.Product_ID").isNull()
     )
     flat = parsed.withColumn("__bad", is_bad)
-    good = flat.filter(~F.col("__bad")).select(
-        *[F.col(f"r.`{safe}`").alias(orig) for safe, orig in zip(_SAFE, CSV_COLUMNS)]
-    )
-    good = (
-        good.withColumn("SourceRowNum", F.col("Row ID").try_cast("int"))
-        .drop("Row ID")
-        .withColumn("IngestedAt", F.current_timestamp())
-        .withColumn("SourceFile", F.lit(path))
-    )
+    good = _raw_records(flat.filter(~F.col("__bad")), path)
     quarantine = flat.filter(F.col("__bad")).select(
         F.col("raw_line").alias("line"),
         F.when(F.col("r").isNull(), F.lit("UNPARSEABLE"))

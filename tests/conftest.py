@@ -25,18 +25,24 @@ def spark(tmp_path_factory):
 
 
 @pytest.fixture(scope="session")
-def superstore_layers(spark):
-    """The full reference-CSV pipeline, built once per test session. Without
-    the reference CSV every dependent test fails with one precondition
-    message (not skipped: the BASELINE.md anchors stay unchecked)."""
+def reference_csv():
+    """The reference CSV's path. Without the file every dependent test fails
+    with one precondition message (not skipped: the BASELINE.md and
+    SURVEY.md anchors stay unchecked)."""
+    if not Path(REFERENCE_CSV).is_file():
+        pytest.fail(
+            f"precondition: the reference CSV {REFERENCE_CSV} is missing; the "
+            "reference-file anchor tests need it",
+            pytrace=False,
+        )
+    return REFERENCE_CSV
+
+
+@pytest.fixture(scope="session")
+def superstore_layers(spark, reference_csv):
+    """The full reference-CSV pipeline, built once per test session."""
     from superstore_data_pipeline_analytics_dashboard__spark.plans import (
         superstore_pipeline as P,
     )
 
-    if not Path(REFERENCE_CSV).is_file():
-        pytest.fail(
-            f"precondition: the reference CSV {REFERENCE_CSV} is missing; the "
-            "BASELINE.md anchor tests need it",
-            pytrace=False,
-        )
-    return P.run(spark, REFERENCE_CSV)
+    return P.run(spark, reference_csv)

@@ -8,12 +8,11 @@ from pyspark.sql import functions as F
 from superstore_data_pipeline_analytics_dashboard__spark.sources.messy_csv import (
     read_superstore_csv,
 )
-from tests.conftest import REFERENCE_CSV
 
 
-def _python_reference_parse():
+def _python_reference_parse(path):
     """Independent pure-Python repair+parse used as a cross-check oracle."""
-    data = open(REFERENCE_CSV, "rb").read().decode("cp1252")
+    data = open(path, "rb").read().decode("cp1252")
     lines = data.split("\r\n")
     if lines and lines[-1] == "":
         lines = lines[:-1]
@@ -27,29 +26,29 @@ def _python_reference_parse():
     return out
 
 
-def test_recovers_all_rows(spark):
-    df = read_superstore_csv(spark, REFERENCE_CSV)
+def test_recovers_all_rows(spark, reference_csv):
+    df = read_superstore_csv(spark, reference_csv)
     assert df.count() == 9994
 
 
-def test_no_null_key_fields(spark):
-    df = read_superstore_csv(spark, REFERENCE_CSV)
+def test_no_null_key_fields(spark, reference_csv):
+    df = read_superstore_csv(spark, reference_csv)
     for col in ("Order ID", "Product ID", "Customer ID", "Product Name"):
         assert df.filter(F.col(col).isNull()).count() == 0, col
 
 
-def test_messy_name_census(spark):
+def test_messy_name_census(spark, reference_csv):
     """SURVEY.md §1.2: 2,221 comma-names, 6 semicolon-names survive."""
-    df = read_superstore_csv(spark, REFERENCE_CSV)
+    df = read_superstore_csv(spark, reference_csv)
     names = df.select("Product Name")
     assert names.filter(F.col("Product Name").contains(",")).count() == 2221
     assert names.filter(F.col("Product Name").contains(";")).count() == 6
 
 
-def test_field_level_equality_vs_python_csv(spark):
+def test_field_level_equality_vs_python_csv(spark, reference_csv):
     """Every recovered field equals an independent Python cp1252 parse."""
-    expected = {r[0]: r for r in _python_reference_parse()}
-    rows = read_superstore_csv(spark, REFERENCE_CSV).collect()
+    expected = {r[0]: r for r in _python_reference_parse(reference_csv)}
+    rows = read_superstore_csv(spark, reference_csv).collect()
     assert len(rows) == len(expected)
     for row in rows:
         exp = expected[str(row["SourceRowNum"])]
@@ -64,8 +63,8 @@ def test_field_level_equality_vs_python_csv(spark):
         assert got == exp, f"row {row['SourceRowNum']} differs: {got} != {exp}"
 
 
-def test_excel_compat_drops_double_encoded_rows(spark):
-    compat = read_superstore_csv(spark, REFERENCE_CSV, compat_excel=True)
+def test_excel_compat_drops_double_encoded_rows(spark, reference_csv):
+    compat = read_superstore_csv(spark, reference_csv, compat_excel=True)
     assert compat.count() == 7484
 
 
@@ -96,12 +95,12 @@ def test_quarantine_channel(spark, tmp_path_factory):
     assert quar <= {"UNPARSEABLE", "MISSING_ORDER_ID", "MISSING_PRODUCT_ID"}
 
 
-def test_quarantine_empty_on_reference_file(spark):
+def test_quarantine_empty_on_reference_file(spark, reference_csv):
     """The reference corpus recovers fully — quarantine must be empty."""
     from superstore_data_pipeline_analytics_dashboard__spark.sources.messy_csv import (
         read_superstore_csv_with_quarantine,
     )
 
-    out = read_superstore_csv_with_quarantine(spark, REFERENCE_CSV)
+    out = read_superstore_csv_with_quarantine(spark, reference_csv)
     assert out["quarantine"].count() == 0
     assert out["good"].count() == 9994

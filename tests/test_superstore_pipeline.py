@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 from superstore_data_pipeline_analytics_dashboard__spark.plans import (
     superstore_pipeline as P,
 )
-from tests.conftest import REFERENCE_CSV
 
 
 def test_staging_and_dedup_counts(superstore_layers):
@@ -114,10 +113,10 @@ def test_rows_per_order_year(superstore_layers):
     assert got == {2014: 1993, 2015: 2102, 2016: 2587, 2017: 3312}
 
 
-def test_excel_compat_pivot_goldens(spark):
+def test_excel_compat_pivot_goldens(spark, reference_csv):
     """The workbook's cached PivotTable1 values (BASELINE.md golden):
     the only published result set of the reference."""
-    table = P.excel_compat_table(spark, REFERENCE_CSV)
+    table = P.excel_compat_table(spark, reference_csv)
     rows = {r["Category"]: r for r in P.pivot_by_category(table).collect()}
     assert rows["Furniture"]["CountOfSales"] == 1169
     assert rows["Furniture"]["SumOfQuantity"] == 4471
@@ -129,10 +128,10 @@ def test_excel_compat_pivot_goldens(spark):
     assert rows["Grand Total"]["SumOfQuantity"] == 28267
 
 
-def test_excel_compat_year_month_golden_sample(spark):
+def test_excel_compat_year_month_golden_sample(spark, reference_csv):
     """Spot-check PivotTable2 cached values (BASELINE.md): 2014-01 count 54
     qty 196; 2017-12 count 341 qty 1,266."""
-    table = P.excel_compat_table(spark, REFERENCE_CSV)
+    table = P.excel_compat_table(spark, reference_csv)
     pivot = P.pivot_by_year_month(
         table.withColumnRenamed("OrderDate", "OrderDate")
     )
