@@ -516,7 +516,7 @@ def dashboard_superstore(
     """Entry point 3 (SURVEY.md §3.3): the slicer-filtered dashboard.
     Region + Segment slicers (A11) filter the staged table before both
     pivot aggregates recompute — exactly the pivot-cache dataflow, with
-    `layers['stg']` cached as the pivot-cache analog."""
+    `layers['stg']` (materialized by `run`) as the pivot-cache analog."""
     t = layers["stg"]
     if regions:
         t = t.filter(F.col("Region").isin(regions))
@@ -538,32 +538,40 @@ def register_star_views(spark: SparkSession, layers: dict[str, DataFrame]) -> No
 # -------------------------------------------------------------- runner
 
 def run(spark: SparkSession, csv_path: str) -> dict[str, DataFrame]:
-    """Execute the full DAG; returns every layer keyed by name. Caching
-    mirrors the reference's #temp/pivot-cache reuse points.
+    """Execute the full DAG; returns every layer keyed by name. The
+    materialized frames mirror the reference's #temp/pivot-cache reuse
+    points and its fixed ``qa.v_*`` serving surface.
 
-    Nine frames come back cached: ``stg``, ``fact`` and the seven
-    ``dim_*``. Each dimension is marked as it is built, so the later dims,
-    the fact's broadcast joins, ``write_star`` and the ``v_*`` views all
-    read one in-memory copy instead of re-running the dimension's
-    distinct/snapshot/``row_number`` shuffles against ``stg``. The dims and
-    ``fact`` fill lazily on their first action. Every dim has a total
-    ``row_number`` order, so the cached rows are the rows a rebuild would
-    give. A long-lived caller releases them with
-    ``spark.catalog.clearCache()``, or per frame with ``unpersist()``."""
+    Nine frames come back checkpointed: ``stg``, ``fact`` and the seven
+    ``dim_*``. Each is materialized eagerly (``localCheckpoint``) as it is
+    built, so its plan is one ``LogicalRDD`` leaf instead of the nested
+    build plans beneath it (fact → six dims → ``stg`` → CSV parse): the
+    later dims, the fact's broadcast joins, ``write_star`` and every view
+    read one materialized copy, and no consumer re-analyzes, re-matches or
+    re-plans the build. Every dim has a total ``row_number`` order, so the
+    checkpointed rows are the rows a rebuild would give. Their blocks are
+    released by Spark's ContextCleaner once the frames are
+    garbage-collected; ``clearCache()`` does not touch them.
+
+    The four ``v_*`` frames come back cached (lazily, on first action): a
+    request that rebuilds a view from the returned ``fact``/``dims``
+    matches it and is served by one in-memory scan. A long-lived caller
+    releases them with ``spark.catalog.clearCache()``, or per frame with
+    ``unpersist()``."""
     raw = read_superstore_csv(spark, csv_path)
     stg_all = stage_typed(raw)
-    stg = dedup_staged(stg_all).cache()
+    stg = dedup_staged(stg_all).localCheckpoint()
 
     dims: dict[str, DataFrame] = {}
-    dims["date"] = build_date_dim(spark, stg).cache()
-    dims["shipmode"] = build_shipmode_dim(stg).cache()
-    dims["category"] = build_category_dim(stg).cache()
-    dims["subcategory"] = build_subcategory_dim(stg, dims["category"]).cache()
-    dims["geography"] = build_geography_dim(stg).cache()
-    dims["customer"] = build_customer_dim(stg).cache()
-    dims["product"] = build_product_dim(stg, dims["subcategory"], dims["category"]).cache()
+    dims["date"] = build_date_dim(spark, stg).localCheckpoint()
+    dims["shipmode"] = build_shipmode_dim(stg).localCheckpoint()
+    dims["category"] = build_category_dim(stg).localCheckpoint()
+    dims["subcategory"] = build_subcategory_dim(stg, dims["category"]).localCheckpoint()
+    dims["geography"] = build_geography_dim(stg).localCheckpoint()
+    dims["customer"] = build_customer_dim(stg).localCheckpoint()
+    dims["product"] = build_product_dim(stg, dims["subcategory"], dims["category"]).localCheckpoint()
 
-    fact = build_fact(stg, dims).cache()
+    fact = build_fact(stg, dims).localCheckpoint()
 
     return {
         "raw": raw,
@@ -572,10 +580,10 @@ def run(spark: SparkSession, csv_path: str) -> dict[str, DataFrame]:
         "qa_issues": qa_issues(stg),
         **{f"dim_{k}": v for k, v in dims.items()},
         "fact": fact,
-        "v_rolling30": v_rolling30(fact, dims),
-        "v_customer_cohort": v_customer_cohort(fact, dims),
-        "v_top_products_by_subcat": v_top_products_by_subcat(fact, dims),
-        "v_suspicious_discounts": v_suspicious_discounts(fact),
+        "v_rolling30": v_rolling30(fact, dims).cache(),
+        "v_customer_cohort": v_customer_cohort(fact, dims).cache(),
+        "v_top_products_by_subcat": v_top_products_by_subcat(fact, dims).cache(),
+        "v_suspicious_discounts": v_suspicious_discounts(fact).cache(),
         "pivot_by_category": pivot_by_category(stg),
     }
 

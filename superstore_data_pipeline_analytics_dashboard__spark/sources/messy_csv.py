@@ -152,8 +152,9 @@ def read_superstore_csv_with_quarantine(
     Returns {"good": 21-col DataFrame, "quarantine": (line, reason)}.
     A record quarantines when the repaired line still fails to yield the
     key fields (Order ID / Product ID) — short rows, runaway quotes,
-    non-record garbage. Both outputs derive from ONE scan (the filter
-    splits a cached narrow projection, no second read)."""
+    non-record garbage. The two outputs are lazy filters of one parsed
+    projection; nothing is cached, so each plans its own scan of the file
+    and a caller that reads both reads and parses it twice."""
     lines = read_lines(spark, path, encoding)
     body = lines.filter(~F.col("value").startswith("Row ID"))
     repaired = body.select(

@@ -104,3 +104,19 @@ def test_quarantine_empty_on_reference_file(spark, reference_csv):
     out = read_superstore_csv_with_quarantine(spark, reference_csv)
     assert out["quarantine"].count() == 0
     assert out["good"].count() == 9994
+
+
+def test_quarantine_empty_on_generated_file(spark, tmp_path):
+    """A seeded Superstore-shaped messy CSV (every corruption knob of the
+    reference) recovers fully: the quarantine is empty and `good` holds
+    every generated record."""
+    from perfbench.gen_messy_csv import generate
+    from superstore_data_pipeline_analytics_dashboard__spark.sources.messy_csv import (
+        read_superstore_csv_with_quarantine,
+    )
+
+    csv_path = str(tmp_path / "superstore.csv")
+    truth, _ = generate(csv_path, 3_000, 7)
+    out = read_superstore_csv_with_quarantine(spark, csv_path)
+    assert out["quarantine"].count() == 0
+    assert out["good"].count() == truth["records"]

@@ -192,21 +192,20 @@ def test_register_star_views_sql_surface(spark, superstore_layers):
 # ------------------------------------------- generated CSV (no reference)
 
 GEN_RECORDS, GEN_SEED = 2_000, 5
+VIEWS = ("v_rolling30", "v_customer_cohort", "v_top_products_by_subcat", "v_suspicious_discounts")
 
 
 @pytest.fixture(scope="module")
 def generated(spark, tmp_path_factory):
     """`run` over a seeded messy CSV from perfbench's generator, with its
     ground truth and kept rows. The cache is cleared first (CLAUDE.md
-    plan-shape rule) and `fact` is filled as a serving caller does."""
+    plan-shape rule)."""
     from perfbench.gen_messy_csv import generate
 
     csv = str(tmp_path_factory.mktemp("gen") / "superstore.csv")
     truth, kept = generate(csv, GEN_RECORDS, GEN_SEED)
     spark.catalog.clearCache()
-    layers = P.run(spark, csv)
-    layers["fact"].count()
-    return layers, truth, kept
+    return P.run(spark, csv), truth, kept
 
 
 def test_generated_star_matches_generator_truth(generated):
@@ -248,15 +247,44 @@ def test_generated_views_row_counts(generated):
     assert {k: layers[k].count() for k in want} == want
 
 
-def test_generated_dims_cached_and_views_read_memory(generated):
-    """Every dim is cached by `run`, so the views scan in-memory relations
-    only — no leaf re-reads the CSV or re-spans the date range. Leaves:
-    fact + date + geography, fact + date, fact + product + subcategory."""
+def _leaf_names(plan) -> list[str]:
+    leaves = plan.collectLeaves()
+    return [leaves.apply(i).nodeName() for i in range(leaves.size())]
+
+
+def test_generated_star_lineage_free_and_views_read_memory(generated):
+    """`run` materializes the star, so no view rebuilds a dim, re-reads the
+    CSV or re-spans the date range: `stg`, `fact` and every dim analyze to
+    one `LogicalRDD` leaf, and each view rebuilt from the returned
+    `fact`/dims (as a dashboard request does) is served by the view cache
+    `run` registered, one `InMemoryTableScan` leaf."""
     layers, _, _ = generated
-    assert all(layers[k].is_cached for k in layers if k.startswith("dim_"))
-    assert layers["stg"].is_cached and layers["fact"].is_cached
-    for view, n in (("v_rolling30", 3), ("v_customer_cohort", 2),
-                    ("v_top_products_by_subcat", 3)):
-        leaves = layers[view]._jdf.queryExecution().sparkPlan().collectLeaves()
-        names = [leaves.apply(i).nodeName() for i in range(leaves.size())]
-        assert names == ["InMemoryTableScan"] * n, (view, names)
+    for k in ["stg", "fact", *(k for k in layers if k.startswith("dim_"))]:
+        assert _leaf_names(layers[k]._jdf.queryExecution().analyzed()) == ["LogicalRDD"], k
+    fact = layers["fact"]
+    dims = {k[4:]: v for k, v in layers.items() if k.startswith("dim_")}
+    for view in VIEWS:
+        fn = getattr(P, view)
+        df = fn(fact) if view == "v_suspicious_discounts" else fn(fact, dims)
+        names = _leaf_names(df._jdf.queryExecution().sparkPlan())
+        assert names == ["InMemoryTableScan"], (view, names)
+
+
+def test_generated_lifecycle_checkpointed_star_outlives_clear_cache(spark, tmp_path):
+    """Only the four views are cached. `clearCache()` releases them and
+    leaves CacheManager empty, while the checkpointed `stg`, `fact` and
+    dims still answer without the CSV (deleted here, so a re-read would
+    fail) — the path a batch loader takes between loads. Runs last in this
+    module: its `clearCache()` drops the views `generated` registered."""
+    from perfbench.gen_messy_csv import generate
+
+    csv = tmp_path / "superstore.csv"
+    generate(str(csv), 500, GEN_SEED)
+    layers = P.run(spark, str(csv))
+    assert {k for k, df in layers.items() if df.is_cached} == set(VIEWS)
+    star = ["stg", "fact", *(k for k in layers if k.startswith("dim_"))]
+    before = {k: layers[k].count() for k in star}
+    csv.unlink()
+    spark.catalog.clearCache()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+    assert {k: layers[k].count() for k in star} == before
