@@ -2897,17 +2897,17 @@ def q73_pii_redaction(spark: SparkSession, sf: str) -> DataFrame:
                F.concat(F.lit(" from 10.0.0."), F.col("doc_id") % 256)
                ).otherwise(F.lit("")),
     )
-    with_pii = docs.select("doc_id", planted.alias("__t"))
+    with_pii = docs.select("doc_id", planted.alias("__text"))
     redacted = F.regexp_replace(
         F.regexp_replace(
-            F.regexp_replace(F.col("__t"), _PII_EMAIL, "<EMAIL>"),
+            F.regexp_replace(F.col("__text"), _PII_EMAIL, "<EMAIL>"),
             _PII_IP, "<IP>"),
         _PII_PHONE, "<PHONE>")
     return with_pii.select(
         "doc_id",
-        F.regexp_count("__t", F.lit(_PII_EMAIL)).alias("n_emails"),
-        F.regexp_count("__t", F.lit(_PII_IP)).alias("n_ips"),
-        F.regexp_count("__t", F.lit(_PII_PHONE)).alias("n_phones"),
+        F.regexp_count("__text", F.lit(_PII_EMAIL)).alias("n_emails"),
+        F.regexp_count("__text", F.lit(_PII_IP)).alias("n_ips"),
+        F.regexp_count("__text", F.lit(_PII_PHONE)).alias("n_phones"),
         F.md5(redacted).alias("redacted_md5"),
     )
 
@@ -14911,29 +14911,50 @@ def _land_batch_with_stats(
     """Land ONE ingest batch the way
     streaming/incremental.start_append_with_manifest lays the sink out:
     a ``batch=<id>`` partition (coalesce(1) — one file per batch, so the
-    oracles' file-count arithmetic stays exact), its manifest stat rows
-    (dynamic per-partition overwrite), and optionally a snapshot commit.
-    One construction shared by every sink-building gate query
-    (q255–q262, q264, q265): a sink-layout change applies once instead
-    of silently diverging across six copies (r9 review find)."""
-    from ..sources.manifest import collect_file_stats
+    oracles' file-count arithmetic stays exact), its manifest rows
+    (``manifest.write_batch_stats``), and optionally a snapshot commit.
+    The batch-at-a-time sink fixture of the snapshot and erasure gate
+    queries (q255–q262, q264, q265, q268); whole-sink landings use
+    ``_land_partitioned``."""
+    from ..sources.manifest import write_batch_stats
 
     df.coalesce(1).write.mode("overwrite").parquet(
         f"{sink}/batch={batch_id}"
     )
-    stats = collect_file_stats(
-        spark, f"{sink}/batch={batch_id}", stat_cols
-    ).withColumn("batch", F.lit(batch_id))
-    (
-        stats.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(man)
-    )
+    write_batch_stats(spark, sink, man, batch_id, stat_cols)
     if log is not None:
         from ..sources.snapshots import commit_snapshot
 
         commit_snapshot(spark, man, log)
+
+
+def _land_partitioned(
+    spark: SparkSession,
+    df: DataFrame,
+    sink: str,
+    man: str,
+    stat_cols: list[str],
+) -> None:
+    """Land a ``batch``-partitioned frame as a whole sink plus its
+    manifest: ONE partitioned write and ONE ``input_file_name()`` stats
+    scan over the sink root yield every batch's per-file rows (``file``,
+    ``n_rows``, ``min_<c>``/``max_<c>`` per stat column — the
+    ``collect_file_stats`` layout), written partitioned by ``batch``.
+    Landing batch by batch would cost a write, a scan and a manifest
+    write per batch; the rows are the same."""
+    df.write.partitionBy("batch").parquet(sink)
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    for c in stat_cols:
+        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+    (
+        spark.read.option("basePath", sink)
+        .parquet(sink)
+        .select(F.input_file_name().alias("file"), "batch", *stat_cols)
+        .groupBy("file", "batch")
+        .agg(*aggs)
+        .write.partitionBy("batch")
+        .parquet(man)
+    )
 
 
 @contextlib.contextmanager
@@ -14950,6 +14971,36 @@ def _scratch(prefix: str):
         yield base
     finally:
         shutil.rmtree(base, ignore_errors=True)
+
+
+def _fold_scalars(*one_row_aggs: DataFrame) -> list[int]:
+    """The integer values of one-row, one-column aggregate frames, in
+    argument order, from ONE action: each frame is tagged with its
+    position, the frames are unioned and collected once. Control-plane
+    scalars (audit counts, report totals) cost ~0.1–0.2 s of driver
+    latency per action, so N separate collects pay that N times — the
+    r14 fold took the chain family 12–44 % faster. Under AQE each
+    aggregate that needs a shuffle still submits its own map-stage job
+    inside the action. Persist a subtree that two or more of the frames
+    read, or each branch of the union re-runs it."""
+    tagged = [
+        agg.toDF("v").select(F.lit(i), F.col("v").cast("long"))
+        for i, agg in enumerate(one_row_aggs)
+    ]
+    vals = dict(map(tuple, functools.reduce(DataFrame.union, tagged).collect()))
+    return [int(vals[i]) for i in range(len(one_row_aggs))]
+
+
+def _erase_totals(report: DataFrame) -> tuple[int, int, int, int]:
+    """(batches, batches rewritten, rows erased, rows after) summed over
+    an ``erase_rows`` report in one action."""
+    row = report.agg(
+        F.count(F.lit(1)),
+        F.sum(F.col("rewritten").cast("long")),
+        F.sum("rows_erased"),
+        F.sum("rows_after"),
+    ).collect()[0]
+    return tuple(int(v) for v in row)
 
 
 def _land_orders_two_batches(
@@ -15932,47 +15983,19 @@ def q270_bloom_point_prune(spark: SparkSession, sf: str) -> DataFrame:
         cand = bloom_candidates(
             blooms, keys, "o_orderkey", n_bits=n_bits
         ).persist()  # feeds the miss check AND the candidate count
-
-        # ONE tagged action computes all five audit counts — they were
-        # five driver-sequenced jobs over metadata-sized frames (r14
-        # job-count fold; count_distinct == the old distinct().count())
-        def _tag(i: int, agg_df) -> DataFrame:
-            return agg_df.select(
-                F.lit(i).alias("__t"), F.col("v").cast("long").alias("v")
-            )
-
-        counts = {
-            int(r["__t"]): int(r["v"])
-            for r in _tag(0, keys.agg(F.count(F.lit(1)).alias("v")))
-            .unionByName(
-                _tag(
-                    1,
-                    env.join(
-                        keys,
-                        (F.col("o_orderkey") >= F.col("lo"))
-                        & (F.col("o_orderkey") <= F.col("hi")),
-                        "left_semi",
-                    ).agg(F.count(F.lit(1)).alias("v")),
-                )
-            )
-            .unionByName(
-                _tag(2, true_pairs.agg(F.count_distinct("batch").alias("v")))
-            )
-            .unionByName(
-                _tag(
-                    3,
-                    true_pairs.join(
-                        cand, ["batch", "o_orderkey"], "left_anti"
-                    ).agg(F.count(F.lit(1)).alias("v")),
-                )
-            )
-            .unionByName(
-                _tag(4, cand.agg(F.count_distinct("batch").alias("v")))
-            )
-            .collect()
-        }
-        n_keys, n_env, n_hit, n_missed, n_bloom = (
-            counts[i] for i in range(5)
+        n_keys, n_env, n_hit, n_missed, n_bloom = _fold_scalars(
+            keys.groupBy().count(),
+            env.join(
+                keys,
+                (F.col("o_orderkey") >= F.col("lo"))
+                & (F.col("o_orderkey") <= F.col("hi")),
+                "left_semi",
+            ).groupBy().count(),
+            true_pairs.agg(F.count_distinct("batch")),
+            true_pairs.join(
+                cand, ["batch", "o_orderkey"], "left_anti"
+            ).groupBy().count(),
+            cand.agg(F.count_distinct("batch")),
         )
         cand.unpersist()
         keys.unpersist()
@@ -16049,23 +16072,7 @@ def q271_multibatch_erasure(spark: SparkSession, sf: str) -> DataFrame:
             "o_orderkey",
             F.expr(f"o_orderkey div {w}").cast("int").alias("batch"),
         )
-        # ONE partitioned write + ONE stats scan lands all 12 batches
-        # (the per-batch helper would cost 36 tiny jobs here)
-        df.write.partitionBy("batch").parquet(sink)
-        src = spark.read.option("basePath", sink).parquet(sink)
-        stats = (
-            src.select(
-                F.input_file_name().alias("file"), "batch", "o_orderkey"
-            )
-            .groupBy("file", "batch")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("o_orderkey").alias("min_o_orderkey"),
-                F.max("o_orderkey").alias("max_o_orderkey"),
-            )
-            .select("file", "n_rows", "min_o_orderkey", "max_o_orderkey", "batch")
-        )
-        stats.write.partitionBy("batch").parquet(man)
+        _land_partitioned(spark, df, sink, man, ["o_orderkey"])
         doomed = df.filter(
             (F.col("batch") == 5)
             | ((F.col("o_orderkey") % 7 == 0) & F.col("batch").isin(2, 7))
@@ -16127,23 +16134,7 @@ def q272_bloomed_erasure(spark: SparkSession, sf: str) -> DataFrame:
         df = orders.select(
             "o_orderkey", hash_bucket("o_orderkey", nb).alias("batch")
         )
-        df.write.partitionBy("batch").parquet(sink)
-        src = spark.read.option("basePath", sink).parquet(sink)
-        stats = (
-            src.select(
-                F.input_file_name().alias("file"), "batch", "o_orderkey"
-            )
-            .groupBy("file", "batch")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("o_orderkey").alias("min_o_orderkey"),
-                F.max("o_orderkey").alias("max_o_orderkey"),
-            )
-            .select(
-                "file", "n_rows", "min_o_orderkey", "max_o_orderkey", "batch"
-            )
-        )
-        stats.write.partitionBy("batch").parquet(man)
+        _land_partitioned(spark, df, sink, man, ["o_orderkey"])
         blooms = collect_batch_blooms(
             spark, sink, "o_orderkey", n_bits=n_bits
         )
@@ -16152,25 +16143,17 @@ def q272_bloomed_erasure(spark: SparkSession, sf: str) -> DataFrame:
             .orderBy("o_orderkey")
             .limit(3)
         )
-        # ONE action over the (local, #batches-row) erasure report —
-        # was persist + count + filtered count + agg (r14 job-count
-        # fold; values identical)
-        agg = erase_rows(
-            spark,
-            sink,
-            man,
-            "o_orderkey",
-            doomed,
-            blooms={"o_orderkey": blooms},
-            bloom_n_bits=n_bits,
-        ).agg(
-            F.count(F.lit(1)).alias("nb"),
-            F.sum(F.col("rewritten").cast("long")).alias("nr"),
-            F.sum("rows_erased").alias("er"),
-            F.sum("rows_after").alias("af"),
-        ).collect()[0]
-        n_batches = int(agg["nb"])
-        n_rewritten = int(agg["nr"])
+        n_batches, n_rewritten, n_erased, n_after = _erase_totals(
+            erase_rows(
+                spark,
+                sink,
+                man,
+                "o_orderkey",
+                doomed,
+                blooms={"o_orderkey": blooms},
+                bloom_n_bits=n_bits,
+            )
+        )
         n_hit = (
             df.join(doomed, "o_orderkey")
             .select("batch")
@@ -16182,8 +16165,8 @@ def q272_bloomed_erasure(spark: SparkSession, sf: str) -> DataFrame:
                 (
                     n_batches,
                     n_hit,
-                    int(agg["er"]),
-                    int(agg["af"]),
+                    n_erased,
+                    n_after,
                     n_rewritten < n_batches,
                 )
             ],
@@ -16227,7 +16210,7 @@ SELECT (SELECT CAST(count(DISTINCT batch) AS BIGINT) FROM b) AS n_batches,
 # hash-mismatch.
 
 def q273_filegrain_erasure(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.manifest import collect_file_stats
+    from ..sources.manifest import write_batch_stats
     from ..sources.retention import erase_rows
 
     with _scratch("q273_fgerase_") as base:
@@ -16245,15 +16228,7 @@ def q273_filegrain_erasure(spark: SparkSession, sf: str) -> DataFrame:
                 .write.mode("append")
                 .parquet(f"{sink}/batch=0")
             )
-        stats = collect_file_stats(
-            spark, f"{sink}/batch=0", ["o_orderkey"]
-        ).withColumn("batch", F.lit(0))
-        (
-            stats.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(man)
-        )
+        write_batch_stats(spark, sink, man, 0, ["o_orderkey"])
         files_before = set(
             spark.read.parquet(f"{sink}/batch=0").inputFiles()
         )
@@ -16310,7 +16285,7 @@ FROM d
 
 def q274_compact_batch(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.formats import compact_batch
-    from ..sources.manifest import collect_file_stats, read_pruned
+    from ..sources.manifest import read_pruned, write_batch_stats
     from ..sources.snapshots import commit_snapshot, snapshot_drift_audit
 
     with _scratch("q274_compact_") as base:
@@ -16323,15 +16298,7 @@ def q274_compact_batch(spark: SparkSession, sf: str) -> DataFrame:
                 .write.mode("append")
                 .parquet(f"{sink}/batch=0")
             )
-        stats = collect_file_stats(
-            spark, f"{sink}/batch=0", ["o_orderkey"]
-        ).withColumn("batch", F.lit(0))
-        (
-            stats.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(man)
-        )
+        write_batch_stats(spark, sink, man, 0, ["o_orderkey"])
         commit_snapshot(spark, man, log)
         files_before, files_after = compact_batch(spark, sink, man, 0)
         lo = orders.agg(F.min("o_orderkey").alias("lo")).collect()[0]["lo"]
@@ -16430,25 +16397,17 @@ def q275_streamed_bloom_chain(spark: SparkSession, sf: str) -> DataFrame:
             (F.col("o_orderkey") % 3 == 0)
             & (F.col("o_orderkey") % 301 == 0)
         )
-        # ONE action over the (local, #batches-row) erasure report —
-        # was persist + count + filtered count + agg (r14 job-count
-        # fold; values identical)
-        agg = erase_rows(
-            spark,
-            sink,
-            man,
-            "o_orderkey",
-            doomed,
-            blooms={"o_orderkey": store},
-            bloom_n_bits=n_bits,
-        ).agg(
-            F.count(F.lit(1)).alias("nb"),
-            F.sum(F.col("rewritten").cast("long")).alias("nr"),
-            F.sum("rows_erased").alias("er"),
-            F.sum("rows_after").alias("af"),
-        ).collect()[0]
-        n_batches = int(agg["nb"])
-        n_rewritten = int(agg["nr"])
+        n_batches, n_rewritten, n_erased, n_after = _erase_totals(
+            erase_rows(
+                spark,
+                sink,
+                man,
+                "o_orderkey",
+                doomed,
+                blooms={"o_orderkey": store},
+                bloom_n_bits=n_bits,
+            )
+        )
         # point read through the SAME store, for two surviving keys
         probe = [
             int(r["o_orderkey"])
@@ -16468,8 +16427,8 @@ def q275_streamed_bloom_chain(spark: SparkSession, sf: str) -> DataFrame:
                 (
                     n_batches,
                     n_store,
-                    int(agg["er"]),
-                    int(agg["af"]),
+                    n_erased,
+                    n_after,
                     n_point,
                     n_rewritten < n_batches,
                 )
@@ -16625,7 +16584,12 @@ FROM c
 # the range arithmetic.
 
 def q277_erasure_crash_repair(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.retention import _fs, _write_text, repair_erasure
+    from ..sources.retention import (
+        _fs,
+        _write_erase_journal,
+        _write_text,
+        repair_erasure,
+    )
     from ..streaming.audit import manifest_consistency_audit
 
     with _scratch("q277_crash_") as base:
@@ -16642,23 +16606,7 @@ def q277_erasure_crash_repair(spark: SparkSession, sf: str) -> DataFrame:
             "o_orderkey",
             F.expr(f"o_orderkey div {w}").cast("int").alias("batch"),
         )
-        df.write.partitionBy("batch").parquet(sink)
-        src = spark.read.option("basePath", sink).parquet(sink)
-        stats = (
-            src.select(
-                F.input_file_name().alias("file"), "batch", "o_orderkey"
-            )
-            .groupBy("file", "batch")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("o_orderkey").alias("min_o_orderkey"),
-                F.max("o_orderkey").alias("max_o_orderkey"),
-            )
-            .select(
-                "file", "n_rows", "min_o_orderkey", "max_o_orderkey", "batch"
-            )
-        )
-        stats.write.partitionBy("batch").parquet(man)
+        _land_partitioned(spark, df, sink, man, ["o_orderkey"])
         doomed = df.filter(
             (F.col("batch") == 1) & (F.col("o_orderkey") % 13 == 0)
         ).select("o_orderkey")
@@ -16667,14 +16615,7 @@ def q277_erasure_crash_repair(spark: SparkSession, sf: str) -> DataFrame:
         # it: resumability journal (keys + intent), staged survivors,
         # the post-staging commit marker, candidates retired, nothing
         # landed
-        doomed.write.parquet(f"{sink}/.erase_keys")
-        _write_text(
-            spark,
-            f"{sink}/.erase_intent.json",
-            json.dumps(
-                {"key_cols": ["o_orderkey"], "bloom_store_path": None}
-            ),
-        )
+        _write_erase_journal(spark, sink, doomed, ["o_orderkey"], None)
         cand = [
             r["file"]
             for r in spark.read.parquet(man)
@@ -16798,46 +16739,24 @@ def q278_bloom_autosize(spark: SparkSession, sf: str) -> DataFrame:
             spark, sink, "o_orderkey", n_bits=1 << 10
         )
         over = F.size("bloom_pos").cast("long") * 8 - F.col("n_bits")
-
-        # ONE tagged action computes all eight audit scalars — they
-        # were seven driver-sequenced jobs over metadata-sized frames
-        # (r14 job-count fold; count_distinct == distinct().count(),
-        # and the geometry check reads count_distinct + min instead of
-        # collecting the distinct n_bits list)
-        def _tag(i: int, agg_df) -> DataFrame:
-            return agg_df.select(
-                F.lit(i).alias("__t"), F.col("v").cast("long").alias("v")
-            )
-
-        vals = {
-            int(r["__t"]): int(r["v"])
-            for r in _tag(0, keys.agg(F.count(F.lit(1)).alias("v")))
-            .unionByName(
-                _tag(1, true_pairs.agg(F.count_distinct("batch").alias("v")))
-            )
-            .unionByName(
-                _tag(2, auto.agg(F.count_distinct("n_bits").alias("v")))
-            )
-            .unionByName(_tag(3, auto.agg(F.min("n_bits").alias("v"))))
-            .unionByName(_tag(4, auto.agg(F.max(over).alias("v"))))
-            .unionByName(
-                _tag(
-                    5,
-                    true_pairs.join(
-                        cand, ["batch", "o_orderkey"], "left_anti"
-                    ).agg(F.count(F.lit(1)).alias("v")),
-                )
-            )
-            .unionByName(
-                _tag(6, cand.agg(F.count_distinct("batch").alias("v")))
-            )
-            .unionByName(_tag(7, tiny.agg(F.max(over).alias("v"))))
-            .collect()
-        }
-        n_keys, n_hit = vals[0], vals[1]
-        pow2_ok = vals[2] == 1 and (vals[3] & (vals[3] - 1)) == 0
-        auto_not_saturated = vals[4] < 0
-        n_missed, n_auto_batches, tiny_sat = vals[5], vals[6], vals[7]
+        # power-of-two geometry: one distinct n_bits, and its min is 2^k
+        (
+            n_keys, n_hit, n_geometries, min_bits, auto_over, n_missed,
+            n_auto_batches, tiny_sat,
+        ) = _fold_scalars(
+            keys.groupBy().count(),
+            true_pairs.agg(F.count_distinct("batch")),
+            auto.agg(F.count_distinct("n_bits")),
+            auto.agg(F.min("n_bits")),
+            auto.agg(F.max(over)),
+            true_pairs.join(
+                cand, ["batch", "o_orderkey"], "left_anti"
+            ).groupBy().count(),
+            cand.agg(F.count_distinct("batch")),
+            tiny.agg(F.max(over)),
+        )
+        pow2_ok = n_geometries == 1 and (min_bits & (min_bits - 1)) == 0
+        auto_not_saturated = auto_over < 0
         for p in (cand, auto, true_pairs, keys):
             p.unpersist()
         return spark.createDataFrame(
@@ -16921,34 +16840,7 @@ def q279_multicol_bloomed_erasure(
             "o_custkey",
             hash_bucket("o_orderkey", nb).alias("batch"),
         )
-        df.write.partitionBy("batch").parquet(sink)
-        src = spark.read.option("basePath", sink).parquet(sink)
-        stats = (
-            src.select(
-                F.input_file_name().alias("file"),
-                "batch",
-                "o_orderkey",
-                "o_custkey",
-            )
-            .groupBy("file", "batch")
-            .agg(
-                F.count(F.lit(1)).alias("n_rows"),
-                F.min("o_orderkey").alias("min_o_orderkey"),
-                F.max("o_orderkey").alias("max_o_orderkey"),
-                F.min("o_custkey").alias("min_o_custkey"),
-                F.max("o_custkey").alias("max_o_custkey"),
-            )
-            .select(
-                "file",
-                "n_rows",
-                "min_o_orderkey",
-                "max_o_orderkey",
-                "min_o_custkey",
-                "max_o_custkey",
-                "batch",
-            )
-        )
-        stats.write.partitionBy("batch").parquet(man)
+        _land_partitioned(spark, df, sink, man, ["o_orderkey", "o_custkey"])
         # ONE scan collects BOTH columns' summaries (2^18 spans every
         # SF's per-batch NDV comfortably: ≤ ~19k keys/batch at sf0.1)
         collect_batch_blooms(
@@ -16964,26 +16856,17 @@ def q279_multicol_bloomed_erasure(
             .limit(3)
             .select("o_orderkey", "o_custkey")
         )
-        # ONE action over the (local, #batches-row) erasure report —
-        # this was persist + count + filtered count + agg, four driver
-        # round trips on a frame erase_rows built from a python list
-        # (r14 job-count fold; values identical)
-        agg = erase_rows(
-            spark,
-            sink,
-            man,
-            ["o_orderkey", "o_custkey"],
-            doomed,
-            blooms=stores,
-            bloom_store_path=blm,
-        ).agg(
-            F.count(F.lit(1)).alias("nb"),
-            F.sum(F.col("rewritten").cast("long")).alias("nr"),
-            F.sum("rows_erased").alias("er"),
-            F.sum("rows_after").alias("af"),
-        ).collect()[0]
-        n_batches = int(agg["nb"])
-        n_rewritten = int(agg["nr"])
+        n_batches, n_rewritten, n_erased, n_after = _erase_totals(
+            erase_rows(
+                spark,
+                sink,
+                man,
+                ["o_orderkey", "o_custkey"],
+                doomed,
+                blooms=stores,
+                bloom_store_path=blm,
+            )
+        )
         store_ok = all(
             r["current"]
             for r in bloom_store_audit(spark, sink, blm).collect()
@@ -16999,8 +16882,8 @@ def q279_multicol_bloomed_erasure(
                 (
                     n_batches,
                     n_hit,
-                    int(agg["er"]),
-                    int(agg["af"]),
+                    n_erased,
+                    n_after,
                     n_rewritten < n_batches,
                     store_ok,
                 )
@@ -17048,7 +16931,7 @@ SELECT (SELECT CAST(count(DISTINCT batch) AS BIGINT) FROM b) AS n_batches,
 
 def q280_compaction_crash_chain(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.formats import repair_compaction
-    from ..sources.manifest import collect_file_stats, read_pruned
+    from ..sources.manifest import read_pruned, write_batch_stats
     from ..sources.retention import _fs, vacuum_maintenance
     from ..sources.snapshots import commit_snapshot, snapshot_drift_audit
 
@@ -17062,15 +16945,7 @@ def q280_compaction_crash_chain(spark: SparkSession, sf: str) -> DataFrame:
                 .write.mode("append")
                 .parquet(f"{sink}/batch=0")
             )
-        stats = collect_file_stats(
-            spark, f"{sink}/batch=0", ["o_orderkey"]
-        ).withColumn("batch", F.lit(0))
-        (
-            stats.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(man)
-        )
+        write_batch_stats(spark, sink, man, 0, ["o_orderkey"])
         commit_snapshot(spark, man, log)
         fs, hpath = _fs(spark, sink)
         files_before = sum(
@@ -17098,21 +16973,10 @@ def q280_compaction_crash_chain(spark: SparkSession, sf: str) -> DataFrame:
             for st in fs.listStatus(hpath(f"{sink}/batch=0"))
             if st.getPath().getName().startswith("part-")
         )
-        # ONE tagged action for the post-repair row count and the
-        # pruned-read bound (independent frames — r14 job-count fold)
-        vals = {
-            int(r["__t"]): int(r["v"])
-            for r in spark.read.parquet(f"{sink}/batch=0")
-            .agg(F.count(F.lit(1)).alias("v"))
-            .select(F.lit(0).alias("__t"), F.col("v").cast("long").alias("v"))
-            .unionByName(
-                orders.agg(F.min("o_orderkey").alias("v")).select(
-                    F.lit(1).alias("__t"), F.col("v").cast("long").alias("v")
-                )
-            )
-            .collect()
-        }
-        n_rows, lo = vals[0], vals[1]
+        n_rows, lo = _fold_scalars(
+            spark.read.parquet(f"{sink}/batch=0").groupBy().count(),
+            orders.agg(F.min("o_orderkey")),
+        )
         pruned_n = read_pruned(
             spark, spark.read.parquet(man), "o_orderkey", lo, lo + 99
         ).count()
@@ -17164,7 +17028,7 @@ SELECT CAST(6 AS BIGINT) AS files_before,
 # from the residue arithmetic; booleans follow the guarantee pattern.
 
 def q281_manifest_repair(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.manifest import collect_file_stats, read_pruned
+    from ..sources.manifest import read_pruned, write_batch_stats
     from ..sources.retention import _fs, repair_manifest
     from ..streaming.audit import manifest_consistency_audit
 
@@ -17178,15 +17042,7 @@ def q281_manifest_repair(spark: SparkSession, sf: str) -> DataFrame:
                 .coalesce(1)
                 .write.parquet(f"{sink}/batch={b}")
             )
-            stats = collect_file_stats(
-                spark, f"{sink}/batch={b}", ["o_orderkey"]
-            ).withColumn("batch", F.lit(b))
-            (
-                stats.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(man)
-            )
+            write_batch_stats(spark, sink, man, b, ["o_orderkey"])
         fs, hpath = _fs(spark, sink)
         # stale: batch 0's file vanishes behind the manifest's back
         f0 = spark.read.parquet(f"{sink}/batch=0").inputFiles()[0]
@@ -17222,25 +17078,12 @@ def q281_manifest_repair(spark: SparkSession, sf: str) -> DataFrame:
             ]
         )
         rep = repair_manifest(spark, sink, man).collect()[0]
-        # ONE tagged action for the pruned-read count and the manifest
-        # row total (independent frames — r14 job-count fold)
-        vals = {
-            int(r["__t"]): int(r["v"])
-            for r in read_pruned(
+        pruned, n_rows = _fold_scalars(
+            read_pruned(
                 spark, spark.read.parquet(man), "o_orderkey", hi + 1, hi + 25
-            )
-            .agg(F.count(F.lit(1)).alias("v"))
-            .select(F.lit(0).alias("__t"), F.col("v").cast("long").alias("v"))
-            .unionByName(
-                spark.read.parquet(man)
-                .agg(F.sum("n_rows").alias("v"))
-                .select(
-                    F.lit(1).alias("__t"), F.col("v").cast("long").alias("v")
-                )
-            )
-            .collect()
-        }
-        pruned, n_rows = vals[0], vals[1]
+            ).groupBy().count(),
+            spark.read.parquet(man).agg(F.sum("n_rows")),
+        )
         return spark.createDataFrame(
             [
                 (
@@ -17276,31 +17119,6 @@ SELECT false AS pre_consistent,
        CAST(n1 + 50 + n2even AS BIGINT) AS manifest_rows_total
 FROM c
 """
-
-
-def _orderkey_manifest(spark: SparkSession, sink: str, man: str) -> None:
-    """Per-file (n_rows, min/max o_orderkey) manifest rows for a
-    batch-partitioned o_orderkey sink — the landing contract the
-    erasure/repair chains read envelopes from. Built ONCE here for the
-    three crash-chain fixtures below: a drifting copy of this block
-    would be an SF-dependent parity mismatch at rotation time."""
-    src = spark.read.option("basePath", sink).parquet(sink)
-    (
-        src.select(
-            F.input_file_name().alias("file"), "batch", "o_orderkey"
-        )
-        .groupBy("file", "batch")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("o_orderkey").alias("min_o_orderkey"),
-            F.max("o_orderkey").alias("max_o_orderkey"),
-        )
-        .select(
-            "file", "n_rows", "min_o_orderkey", "max_o_orderkey", "batch"
-        )
-        .write.partitionBy("batch")
-        .parquet(man)
-    )
 
 
 # ------------------------------------------- targeted bloom-store repair
@@ -17453,7 +17271,8 @@ FROM c
 
 def q283_noop_resume_retirement(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.retention import (
-        _write_text,
+        _erase_journal_exists,
+        _write_erase_journal,
         repair_erasure,
         vacuum_maintenance,
     )
@@ -17467,28 +17286,20 @@ def q283_noop_resume_retirement(spark: SparkSession, sf: str) -> DataFrame:
             "o_orderkey",
             F.expr(f"o_orderkey div {w}").cast("int").alias("batch"),
         )
-        df.write.partitionBy("batch").parquet(sink)
-        _orderkey_manifest(spark, sink, man)
+        _land_partitioned(spark, df, sink, man, ["o_orderkey"])
         # the crash residue: a journal whose keys no surviving envelope
         # admits — the resume will be a pure no-op
-        spark.createDataFrame(
-            [(int(hi) + 1,), (int(hi) + 2,)], "o_orderkey BIGINT"
-        ).write.parquet(f"{sink}/.erase_keys")
-        _write_text(
+        _write_erase_journal(
             spark,
-            f"{sink}/.erase_intent.json",
-            json.dumps(
-                {"key_cols": ["o_orderkey"], "bloom_store_path": None}
+            sink,
+            spark.createDataFrame(
+                [(int(hi) + 1,), (int(hi) + 2,)], "o_orderkey BIGINT"
             ),
+            ["o_orderkey"],
+            None,
         )
         rep = repair_erasure(spark, sink, man).collect()[0]
-        from ..sources.retention import _fs
-
-        fs, hpath = _fs(spark, sink)
-        journal_gone = not (
-            fs.exists(hpath(f"{sink}/.erase_intent.json"))
-            or fs.exists(hpath(f"{sink}/.erase_keys"))
-        )
+        journal_gone = not _erase_journal_exists(spark, sink)
         vac = vacuum_maintenance(spark, sink).collect()[0]
         rep2 = repair_erasure(spark, sink, man).collect()[0]
         n_rows = spark.read.option("basePath", sink).parquet(sink).count()
@@ -17544,8 +17355,8 @@ SELECT true AS found_residue,
 
 def q284_wholetable_crash_repair(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.retention import (
-        _fs,
-        _write_text,
+        _erase_journal_exists,
+        _write_erase_journal,
         erase_rows,
         repair_erasure,
         vacuum_maintenance,
@@ -17557,8 +17368,7 @@ def q284_wholetable_crash_repair(spark: SparkSession, sf: str) -> DataFrame:
         df = orders.select(
             "o_orderkey", (F.col("o_orderkey") % 3).alias("batch")
         )
-        df.write.partitionBy("batch").parquet(sink)
-        _orderkey_manifest(spark, sink, man)
+        _land_partitioned(spark, df, sink, man, ["o_orderkey"])
         doomed = orders.select("o_orderkey")
         # ONE action over the (local) erasure report — was persist +
         # agg + filtered count (r14 job-count fold; values identical)
@@ -17569,20 +17379,9 @@ def q284_wholetable_crash_repair(spark: SparkSession, sf: str) -> DataFrame:
         erased_total = int(rep0["er"])
         n_emptied = int(rep0["ne"])
         # the final-instant crash: everything done, journal not retired
-        doomed.write.parquet(f"{sink}/.erase_keys")
-        _write_text(
-            spark,
-            f"{sink}/.erase_intent.json",
-            json.dumps(
-                {"key_cols": ["o_orderkey"], "bloom_store_path": None}
-            ),
-        )
+        _write_erase_journal(spark, sink, doomed, ["o_orderkey"], None)
         rep = repair_erasure(spark, sink, man).collect()[0]
-        fs, hpath = _fs(spark, sink)
-        journal_gone = not (
-            fs.exists(hpath(f"{sink}/.erase_intent.json"))
-            or fs.exists(hpath(f"{sink}/.erase_keys"))
-        )
+        journal_gone = not _erase_journal_exists(spark, sink)
         vacuum_maintenance(spark, sink)  # must not refuse
         n_after = spark.read.option("basePath", sink).parquet(sink).count()
         return spark.createDataFrame(
@@ -17640,8 +17439,8 @@ def q285_journaled_store_reconciliation(
         load_bloom_store,
     )
     from ..sources.retention import (
-        _fs,
-        _write_text,
+        _erase_journal_exists,
+        _write_erase_journal,
         erase_rows,
         repair_erasure,
     )
@@ -17652,8 +17451,7 @@ def q285_journaled_store_reconciliation(
         df = orders.select(
             "o_orderkey", (F.col("o_orderkey") % 3).alias("batch")
         )
-        df.write.partitionBy("batch").parquet(sink)
-        _orderkey_manifest(spark, sink, man)
+        _land_partitioned(spark, df, sink, man, ["o_orderkey"])
         collect_batch_blooms(spark, sink, "o_orderkey").write.partitionBy(
             "batch"
         ).parquet(blm)
@@ -17670,14 +17468,7 @@ def q285_journaled_store_reconciliation(
             spark, sink, man, "o_orderkey", doomed,
             blooms={"o_orderkey": store},
         )
-        doomed.write.parquet(f"{sink}/.erase_keys")
-        _write_text(
-            spark,
-            f"{sink}/.erase_intent.json",
-            json.dumps(
-                {"key_cols": ["o_orderkey"], "bloom_store_path": blm}
-            ),
-        )
+        _write_erase_journal(spark, sink, doomed, ["o_orderkey"], blm)
         pre_current = all(
             r["current"]
             for r in bloom_store_audit(spark, sink, blm).collect()
@@ -17687,30 +17478,13 @@ def q285_journaled_store_reconciliation(
             r["current"]
             for r in bloom_store_audit(spark, sink, blm).collect()
         )
-        fs, hpath = _fs(spark, sink)
-        journal_gone = not (
-            fs.exists(hpath(f"{sink}/.erase_intent.json"))
-            or fs.exists(hpath(f"{sink}/.erase_keys"))
+        journal_gone = not _erase_journal_exists(spark, sink)
+        n_after, n_keys_b0 = _fold_scalars(
+            spark.read.option("basePath", sink).parquet(sink).groupBy().count(),
+            spark.read.parquet(blm)
+            .filter(F.col("batch") == 0)
+            .agg(F.sum("n_keys")),
         )
-        # ONE tagged action yields the post-repair sink count AND the
-        # batch-0 store mass (was two driver-sequenced jobs — r14 fold)
-        vals = {
-            int(r["__t"]): int(r["v"])
-            for r in spark.read.option("basePath", sink)
-            .parquet(sink)
-            .agg(F.count(F.lit(1)).alias("v"))
-            .select(F.lit(0).alias("__t"), F.col("v").cast("long").alias("v"))
-            .unionByName(
-                spark.read.parquet(blm)
-                .filter(F.col("batch") == 0)
-                .agg(F.sum("n_keys").alias("v"))
-                .select(
-                    F.lit(1).alias("__t"), F.col("v").cast("long").alias("v")
-                )
-            )
-            .collect()
-        }
-        n_after, n_keys_b0 = vals[0], vals[1]
         return spark.createDataFrame(
             [
                 (
@@ -17768,7 +17542,7 @@ def q286_compaction_marker_repair(
     spark: SparkSession, sf: str
 ) -> DataFrame:
     from ..sources.formats import repair_compaction
-    from ..sources.manifest import collect_file_stats, read_pruned
+    from ..sources.manifest import read_pruned, write_batch_stats
     from ..sources.retention import _fs, _write_text
 
     with _scratch("q286_marker_") as base:
@@ -17781,15 +17555,7 @@ def q286_compaction_marker_repair(
                 .write.mode("append")
                 .parquet(f"{sink}/batch=0")
             )
-        stats = collect_file_stats(
-            spark, f"{sink}/batch=0", ["o_orderkey"]
-        ).withColumn("batch", F.lit(0))
-        (
-            stats.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(man)
-        )
+        write_batch_stats(spark, sink, man, 0, ["o_orderkey"])
         fs, hpath = _fs(spark, sink)
         # mid-swap crash on a _SUCCESS-less cluster: durable staging
         # with its _SUCCESS removed, compact_batch's own marker
@@ -17817,21 +17583,10 @@ def q286_compaction_marker_repair(
         marker_cleaned = not fs.exists(
             hpath(f"{sink}/.compact_commit_batch=0.json")
         )
-        # ONE tagged action for the post-repair row count and the
-        # pruned-read bound (independent frames — r14 job-count fold)
-        vals = {
-            int(r["__t"]): int(r["v"])
-            for r in spark.read.parquet(f"{sink}/batch=0")
-            .agg(F.count(F.lit(1)).alias("v"))
-            .select(F.lit(0).alias("__t"), F.col("v").cast("long").alias("v"))
-            .unionByName(
-                orders.agg(F.min("o_orderkey").alias("v")).select(
-                    F.lit(1).alias("__t"), F.col("v").cast("long").alias("v")
-                )
-            )
-            .collect()
-        }
-        n_rows, lo = vals[0], vals[1]
+        n_rows, lo = _fold_scalars(
+            spark.read.parquet(f"{sink}/batch=0").groupBy().count(),
+            orders.agg(F.min("o_orderkey")),
+        )
         pruned_n = read_pruned(
             spark, spark.read.parquet(man), "o_orderkey", lo, lo + 99
         ).count()
@@ -17887,7 +17642,7 @@ SELECT true AS swap_completed,
 def q287_erasure_concurrent_append(
     spark: SparkSession, sf: str
 ) -> DataFrame:
-    from ..sources.manifest import collect_file_stats
+    from ..sources.manifest import write_batch_stats
     from ..sources.retention import erase_rows
     from ..streaming.audit import manifest_consistency_audit
 
@@ -17900,8 +17655,7 @@ def q287_erasure_concurrent_append(
             "o_orderkey",
             F.expr(f"o_orderkey div {w}").cast("int").alias("batch"),
         )
-        df.write.partitionBy("batch").parquet(sink)
-        _orderkey_manifest(spark, sink, man)
+        _land_partitioned(spark, df, sink, man, ["o_orderkey"])
         # the opt-out list: the 50 smallest order keys — interior to
         # batch 0's envelope before round 1, OUTSIDE it after
         doomed = (
@@ -17921,13 +17675,7 @@ def q287_erasure_concurrent_append(
             .partitionBy("batch")
             .parquet(sink)
         )
-        (
-            collect_file_stats(spark, f"{sink}/batch=3", ["o_orderkey"])
-            .withColumn("batch", F.lit(3))
-            .write.mode("append")
-            .partitionBy("batch")
-            .parquet(man)
-        )
+        write_batch_stats(spark, sink, man, 3, ["o_orderkey"])
         consistent_mid = bool(
             manifest_consistency_audit(spark, sink, man)
             .collect()[0]["consistent"]
@@ -17997,7 +17745,7 @@ def q288_ivf_snapshot_maintenance(
     spark: SparkSession, sf: str
 ) -> DataFrame:
     from ..operators.similarity import ivf_assign, ivf_increment, seed_centroids
-    from ..sources.manifest import collect_file_stats
+    from ..sources.manifest import write_batch_stats
     from ..sources.snapshots import (
         commit_snapshot,
         read_as_of,
@@ -18022,12 +17770,7 @@ def q288_ivf_snapshot_maintenance(
         a1.withColumn("batch", F.lit(0)).write.partitionBy(
             "batch"
         ).parquet(sink)
-        (
-            collect_file_stats(spark, f"{sink}/batch=0", ["vec_id"])
-            .withColumn("batch", F.lit(0))
-            .write.partitionBy("batch")
-            .parquet(man)
-        )
+        write_batch_stats(spark, sink, man, 0, ["vec_id"])
         commit_snapshot(spark, man, log)
         inc = ivf_increment(arriving, cents, a1)
         add = inc["assigned"].join(
@@ -18036,13 +17779,7 @@ def q288_ivf_snapshot_maintenance(
         add.withColumn("batch", F.lit(1)).write.mode(
             "append"
         ).partitionBy("batch").parquet(sink)
-        (
-            collect_file_stats(spark, f"{sink}/batch=1", ["vec_id"])
-            .withColumn("batch", F.lit(1))
-            .write.mode("append")
-            .partitionBy("batch")
-            .parquet(man)
-        )
+        write_batch_stats(spark, sink, man, 1, ["vec_id"])
         v2 = commit_snapshot(spark, man, log)
         stored = spark.read.option("basePath", sink).parquet(sink)
         full = ivf_assign(emb, cents)
@@ -18053,26 +17790,18 @@ def q288_ivf_snapshot_maintenance(
             )
             .filter(F.col("cell") != F.col("c2"))
         )
-
-        # ONE tagged action computes all five verification counts —
-        # they were five driver-sequenced count() jobs (r14 job-count
-        # fold; values identical)
-        def _tcnt(i: int, frame: DataFrame) -> DataFrame:
-            return frame.agg(F.count(F.lit(1)).alias("v")).select(
-                F.lit(i).alias("__t"), F.col("v").cast("long").alias("v")
+        v1_rows, diff_rows, v2_rows, n_mismatch, n_vectors = _fold_scalars(
+            *(
+                f.groupBy().count()
+                for f in (
+                    read_as_of(spark, sink, log, 1),
+                    snapshot_diff(spark, sink, log, 1, v2),
+                    stored,
+                    mismatch,
+                    emb,
+                )
             )
-
-        vals = {
-            int(r["__t"]): int(r["v"])
-            for r in _tcnt(0, read_as_of(spark, sink, log, 1))
-            .unionByName(_tcnt(1, snapshot_diff(spark, sink, log, 1, v2)))
-            .unionByName(_tcnt(2, stored))
-            .unionByName(_tcnt(3, mismatch))
-            .unionByName(_tcnt(4, emb))
-            .collect()
-        }
-        v1_rows, diff_rows, v2_rows = vals[0], vals[1], vals[2]
-        n_mismatch, n_vectors = vals[3], vals[4]
+        )
         ledger = {
             int(r["version"]): int(r["rows_added"])
             for r in snapshot_ledger(spark, log).collect()
@@ -18125,7 +17854,7 @@ def q289_incremental_dedup_snapshot_diff(
     spark: SparkSession, sf: str
 ) -> DataFrame:
     from ..operators.incremental_dedup import exact_increment, exact_state
-    from ..sources.manifest import collect_file_stats
+    from ..sources.manifest import write_batch_stats
     from ..sources.snapshots import commit_snapshot, read_as_of, snapshot_diff
 
     with _scratch("q289_inc_") as base:
@@ -18139,13 +17868,7 @@ def q289_incremental_dedup_snapshot_diff(
             docs.filter(cond).withColumn("batch", F.lit(b)).write.mode(
                 "append"
             ).partitionBy("batch").parquet(sink)
-            (
-                collect_file_stats(spark, f"{sink}/batch={b}", ["doc_id"])
-                .withColumn("batch", F.lit(b))
-                .write.mode("append")
-                .partitionBy("batch")
-                .parquet(man)
-            )
+            write_batch_stats(spark, sink, man, b, ["doc_id"])
             commit_snapshot(spark, man, log)
         v1_docs = read_as_of(spark, sink, log, 1)
         # the pin is deduplicated before it becomes state (exact_state's
@@ -18171,45 +17894,29 @@ def q289_incremental_dedup_snapshot_diff(
             F.min("doc_id").alias("doc_id")
         ).select("doc_id")
         seq_keep = v1_keep.select("doc_id").unionByName(kept_new)
-
-        # ONE tagged action computes all eight verification counts —
-        # they were eight driver-sequenced count() jobs (r14 job-count
-        # fold; values identical, the persisted frames materialize
-        # inside it exactly as the first of the old counts did)
-        def _tcnt(i: int, frame: DataFrame) -> DataFrame:
-            return frame.agg(F.count(F.lit(1)).alias("v")).select(
-                F.lit(i).alias("__t"), F.col("v").cast("long").alias("v")
-            )
-
-        vals = {
-            int(r["__t"]): int(r["v"])
-            for r in _tcnt(0, v1_docs)
-            .unionByName(_tcnt(1, v1_keep))
-            .unionByName(_tcnt(2, delta))
-            .unionByName(_tcnt(3, kept_new))
-            .unionByName(_tcnt(4, d_first))
-            .unionByName(
-                _tcnt(
-                    5,
+        # the persisted frames materialize inside the one fold action
+        (
+            n_v1, n_v1_kept, n_delta, n_new_kept, n_first, n_cross,
+            n_seq_only, n_batch_only,
+        ) = _fold_scalars(
+            *(
+                f.groupBy().count()
+                for f in (
+                    v1_docs,
+                    v1_keep,
+                    delta,
+                    kept_new,
+                    d_first,
                     d_first.join(
                         v1_fp.select("f").distinct(), "f", "left_semi"
                     ),
+                    seq_keep.join(batch_keep, "doc_id", "left_anti"),
+                    batch_keep.join(seq_keep, "doc_id", "left_anti"),
                 )
             )
-            .unionByName(
-                _tcnt(6, seq_keep.join(batch_keep, "doc_id", "left_anti"))
-            )
-            .unionByName(
-                _tcnt(7, batch_keep.join(seq_keep, "doc_id", "left_anti"))
-            )
-            .collect()
-        }
-        n_v1, n_v1_kept, n_delta, n_new_kept = (
-            vals[0], vals[1], vals[2], vals[3],
         )
-        n_within = n_delta - vals[4]
-        n_cross = vals[5]
-        seq_eq_batch = vals[6] == 0 and vals[7] == 0
+        n_within = n_delta - n_first
+        seq_eq_batch = n_seq_only == 0 and n_batch_only == 0
         v1_fp.unpersist()
         kept_new.unpersist()
         return spark.createDataFrame(
@@ -18385,7 +18092,6 @@ SELECT (SELECT CAST(count(*) AS BIGINT) FROM scored) AS n_docs,
 
 def q291_vector_store_erasure(spark: SparkSession, sf: str) -> DataFrame:
     from ..operators.similarity import ivf_assign, knn_bruteforce, seed_centroids
-    from ..sources.manifest import collect_file_stats
     from ..sources.retention import erase_rows
     from ..streaming.audit import manifest_consistency_audit
 
@@ -18411,18 +18117,7 @@ def q291_vector_store_erasure(spark: SparkSession, sf: str) -> DataFrame:
             "embedding",
             F.expr(f"vec_id div {w}").cast("int").alias("batch"),
         )
-        df.write.partitionBy("batch").parquet(sink)
-        batches = sorted(
-            int(r["batch"]) for r in df.select("batch").distinct().collect()
-        )
-        for b in batches:
-            (
-                collect_file_stats(spark, f"{sink}/batch={b}", ["vec_id"])
-                .withColumn("batch", F.lit(b))
-                .write.mode("append")
-                .partitionBy("batch")
-                .parquet(man)
-            )
+        _land_partitioned(spark, df, sink, man, ["vec_id"])
         doomed = emb.filter(F.col("vec_id") % 17 == 0).select("vec_id")
         # single consumer of a local report frame: no persist needed
         n_erased = int(
@@ -18447,44 +18142,25 @@ def q291_vector_store_erasure(spark: SparkSession, sf: str) -> DataFrame:
         topk = knn_bruteforce(
             index.select("vec_id", "embedding"), queries, k=10
         ).persist()
-
-        # ONE tagged action computes all five serving-index checks —
-        # they were five driver-sequenced count() jobs (r14 job-count
-        # fold; values identical, the persisted index/topk frames
-        # materialize inside it)
-        def _tcnt(i: int, frame: DataFrame) -> DataFrame:
-            return frame.agg(F.count(F.lit(1)).alias("v")).select(
-                F.lit(i).alias("__t"), F.col("v").cast("long").alias("v")
-            )
-
-        vals = {
-            int(r["__t"]): int(r["v"])
-            for r in _tcnt(0, index)
-            .unionByName(
-                _tcnt(
-                    1,
+        # the persisted index/topk frames materialize inside the one
+        # fold action
+        n_index, n_extra, n_missing, n_topk, n_doomed_hits = _fold_scalars(
+            *(
+                f.groupBy().count()
+                for f in (
+                    index,
                     index.select("vec_id").join(
                         survivors.select("vec_id"), "vec_id", "left_anti"
                     ),
-                )
-            )
-            .unionByName(
-                _tcnt(
-                    2,
                     survivors.select("vec_id").join(
                         index.select("vec_id"), "vec_id", "left_anti"
                     ),
+                    topk,
+                    topk.filter(F.col("neighbor_id") % 17 == 0),
                 )
             )
-            .unionByName(_tcnt(3, topk))
-            .unionByName(
-                _tcnt(4, topk.filter(F.col("neighbor_id") % 17 == 0))
-            )
-            .collect()
-        }
-        n_index = vals[0]
-        complete = vals[1] == 0 and vals[2] == 0
-        n_topk, n_doomed_hits = vals[3], vals[4]
+        )
+        complete = n_extra == 0 and n_missing == 0
         topk.unpersist()
         index.unpersist()
         survivors.unpersist()

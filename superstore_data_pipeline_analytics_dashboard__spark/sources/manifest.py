@@ -30,7 +30,12 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-__all__ = ["collect_file_stats", "prune_files", "read_pruned"]
+__all__ = [
+    "collect_file_stats",
+    "prune_files",
+    "read_pruned",
+    "write_batch_stats",
+]
 
 
 def collect_file_stats(
@@ -51,6 +56,30 @@ def collect_file_stats(
         df.select(F.input_file_name().alias("file"), *cols)
         .groupBy("file")
         .agg(*aggs)
+    )
+
+
+def write_batch_stats(
+    spark: SparkSession,
+    sink: str,
+    manifest: str,
+    batch_id: int,
+    stat_cols: Sequence[str],
+) -> None:
+    """Land the manifest rows of ONE batch: ``collect_file_stats`` over
+    ``<sink>/batch=<batch_id>`` tagged with its ``batch``, written with
+    dynamic partition overwrite on the manifest's ``batch`` key. A
+    replayed batch replaces exactly its own rows (plain append would
+    leave rows pointing at files the replay deleted), and every other
+    batch's rows stay untouched. The one writer of per-batch manifest
+    rows: the streaming appender and every sink fixture call it."""
+    (
+        collect_file_stats(spark, f"{sink}/batch={batch_id}", stat_cols)
+        .withColumn("batch", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch")
+        .parquet(manifest)
     )
 
 

@@ -116,6 +116,40 @@ def _write_text(spark: SparkSession, path: str, text: str) -> None:
         out.close()
 
 
+def _write_erase_journal(
+    spark: SparkSession,
+    sink_path: str,
+    keys: DataFrame,
+    key_cols: list[str],
+    bloom_store_path: str | None,
+) -> None:
+    """Write the erasure journal ``repair_erasure`` resumes from: the
+    opt-out ``keys`` (``.erase_keys`` parquet, replacing any earlier
+    list) and the intent (``.erase_intent.json``: key columns and the
+    maintained bloom store). The one writer of this format —
+    ``erase_rows`` and every crash fixture that plants a journal."""
+    fs, hpath = _fs(spark, sink_path)
+    keys_path = f"{sink_path}/.erase_keys"
+    fs.delete(hpath(keys_path), True)
+    keys.write.parquet(keys_path)
+    _write_text(
+        spark,
+        f"{sink_path}/.erase_intent.json",
+        json.dumps(
+            {"key_cols": key_cols, "bloom_store_path": bloom_store_path}
+        ),
+    )
+
+
+def _erase_journal_exists(spark: SparkSession, sink_path: str) -> bool:
+    """True while either half of the erasure journal is on disk."""
+    fs, hpath = _fs(spark, sink_path)
+    return bool(
+        fs.exists(hpath(f"{sink_path}/.erase_intent.json"))
+        or fs.exists(hpath(f"{sink_path}/.erase_keys"))
+    )
+
+
 def _read_text(spark: SparkSession, path: str) -> str:
     fs, hpath = _fs(spark, path)
     stream = fs.open(hpath(path))
@@ -640,16 +674,12 @@ def erase_rows(
         # persists on disk until then — it must, for the delete to be
         # resumable — under the same hidden-tree visibility rules as
         # the staging/trash residue.
-        fs.delete(hpath(keys_path), True)
-        k.select(*(F.col(f"k_{c}").alias(c) for c in cols)).write.parquet(
-            keys_path
-        )
-        _write_text(
+        _write_erase_journal(
             spark,
-            intent_path,
-            json.dumps(
-                {"key_cols": cols, "bloom_store_path": bloom_store_path}
-            ),
+            sink_path,
+            k.select(*(F.col(f"k_{c}").alias(c) for c in cols)),
+            cols,
+            bloom_store_path,
         )
     for sig, bs in groups.items():
         files = [u for b in bs for u in cand_by_batch[b]]

@@ -455,7 +455,7 @@ def start_append_with_manifest(
     summary older than the data. Read it back per column with
     ``bloom.load_bloom_store``."""
     from ..sources.bloom import bloom_summary_rows
-    from ..sources.manifest import collect_file_stats
+    from ..sources.manifest import write_batch_stats
 
     if bloom_cols and bloom_path is None:
         raise ValueError(
@@ -467,14 +467,8 @@ def start_append_with_manifest(
         spark = batch.sparkSession
         part_dir = f"{sink_path}/batch={batch_id}"
         batch.write.mode("overwrite").parquet(part_dir)
-        stats = collect_file_stats(spark, part_dir, stat_cols).withColumn(
-            "batch", F.lit(batch_id)
-        )
-        (
-            stats.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(manifest_path)
+        write_batch_stats(
+            spark, sink_path, manifest_path, batch_id, stat_cols
         )
         if bloom_cols:
             # ONE scan collects every bloomed column's summary row

@@ -6,6 +6,7 @@ oracle gate proves Spark==DuckDB; these prove both match the INTENT)."""
 from __future__ import annotations
 
 import hashlib
+import uuid
 from collections import Counter
 
 from pyspark.sql import functions as F
@@ -2293,3 +2294,30 @@ def test_seasonal_decomposition_reconstructs(spark):
         seas_by_moy.setdefault(moy, set()).add(round(r["seasonal"], 6))
     for moy, vals in seas_by_moy.items():
         assert len(vals) == 1, moy
+
+
+def test_fold_scalars_one_job_in_argument_order(spark):
+    """_fold_scalars returns each one-row aggregate's value as an int,
+    in argument order, from ONE Spark job. The inputs are
+    single-partition ranges, whose aggregates need no shuffle, so no
+    AQE map-stage job joins the count: four separate collects would be
+    four jobs."""
+    sc = spark.sparkContext
+    aggs = [
+        spark.range(0, 100, 1, 1).groupBy().count(),
+        spark.range(3, 10, 1, 1).agg(F.max("id")),
+        spark.range(0, 10, 1, 1).filter("id > 100").groupBy().count(),
+        spark.range(0, 5, 1, 1).agg(F.sum("id")),
+    ]
+    group = f"fold_scalars_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "fold_scalars")
+    try:
+        vals = Q._fold_scalars(*aggs)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert vals == [100, 9, 0, 10]
+    assert all(type(v) is int for v in vals)
+    assert len(jobs) == 1
+    assert Q._fold_scalars(*reversed(aggs)) == [10, 0, 9, 100]

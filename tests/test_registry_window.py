@@ -9,6 +9,8 @@ silently spend a driver-audit slot on the wrong query — the rotation
 must always be a conscious, documented edit that also updates this
 file."""
 
+import ast
+import inspect
 import re
 
 from superstore_data_pipeline_analytics_dashboard__spark.plans import (
@@ -162,3 +164,32 @@ def test_every_oracle_constant_is_registered():
             assert not casts, fn.__name__
         else:
             assert sql is vars(CQ)[f"Q{num}_SQL"], fn.__name__
+
+
+def test_chain_bodies_share_landing_fold_and_journal():
+    # manifest landing (_land_partitioned, manifest.write_batch_stats),
+    # scalar folds (_fold_scalars) and the erasure journal
+    # (retention._write_erase_journal) are each defined once; no query
+    # body may re-spell one by hand
+    tree = ast.parse(inspect.getsource(CQ))
+    offenders = []
+    for fn in tree.body:
+        if not (
+            isinstance(fn, ast.FunctionDef) and re.fullmatch(r"q\d+_\w+", fn.name)
+        ):
+            continue
+        for node in ast.walk(fn):
+            if isinstance(node, ast.Attribute):
+                token = node.attr
+            elif isinstance(node, ast.Name):
+                token = node.id
+            elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+                token = node.value
+            else:
+                continue
+            if (
+                token in ("input_file_name", "__t")
+                or ".erase_intent.json" in token
+            ):
+                offenders.append((fn.name, token))
+    assert not offenders, offenders

@@ -55,9 +55,10 @@ def _open_log(path: str):
     return open(path, "r", encoding="utf-8")
 
 
-def summarize(log_path, t_cut_ms: int, top: int) -> dict:
-    """Parse JobStart/JobEnd events submitted at/after ``t_cut_ms``.
-    ``log_path`` is one file or a list of rolled files in order."""
+def summarize(log_path, t_cut_ms: int, t_end_ms: int, top: int) -> dict:
+    """Parse JobStart/JobEnd events submitted in [``t_cut_ms``,
+    ``t_end_ms``). ``log_path`` is one file or a list of rolled files in
+    order."""
     starts: dict[int, dict] = {}
     jobs: list[dict] = []
     paths = log_path if isinstance(log_path, list) else [log_path]
@@ -72,7 +73,9 @@ def summarize(log_path, t_cut_ms: int, top: int) -> dict:
                     starts[ev["Job ID"]] = ev
                 elif kind == "SparkListenerJobEnd":
                     st = starts.pop(ev["Job ID"], None)
-                    if st is None or st["Submission Time"] < t_cut_ms:
+                    if st is None or not (
+                        t_cut_ms <= st["Submission Time"] < t_end_ms
+                    ):
                         continue
                     props = st.get("Properties") or {}
                     stages = st.get("Stage Infos") or []
@@ -152,8 +155,9 @@ def main() -> None:
         t0 = time.perf_counter()
         fn(spark, args.sf).write.format("noop").mode("overwrite").save()
         wall = time.perf_counter() - t0
-        results.append((name, t_cut_ms, wall))
-        # advance the cut past this query so the next one's filter is clean
+        # the window closes when the timed run returns, so the next
+        # query's warmup jobs are not counted as this query's
+        results.append((name, t_cut_ms, int(time.time() * 1000) + 1, wall))
         time.sleep(0.05)
     spark.stop()
 
@@ -167,20 +171,12 @@ def main() -> None:
         if not parts:
             raise SystemExit(f"no events_* files under {log_path}")
         log_path = parts
-    for i, (name, t_cut_ms, wall) in enumerate(results):
-        t_next = results[i + 1][1] if i + 1 < len(results) else 1 << 62
-        s = summarize(log_path, t_cut_ms, args.top)
-        s["jobs"] = [j for j in s["jobs"] if j["t0"] < t_next]
-        n = len(s["jobs"])
-        in_job = sum(j["t1"] - j["t0"] for j in s["jobs"]) / 1000.0
-        gaps = [
-            max(0, s["jobs"][k + 1]["t0"] - s["jobs"][k]["t1"])
-            for k in range(n - 1)
-        ]
+    for name, t_cut_ms, t_end_ms, wall in results:
+        s = summarize(log_path, t_cut_ms, t_end_ms, args.top)
         print(f"== {name}  wall={wall:.2f}s")
         print(
-            f"   jobs={n}  in_job={in_job:.2f}s  gaps={sum(gaps)/1000.0:.2f}s"
-            f"  max_job={s['max_job_sec']:.2f}s"
+            f"   jobs={s['n_jobs']}  in_job={s['in_job_sec']:.2f}s"
+            f"  gaps={s['gap_sec']:.2f}s  max_job={s['max_job_sec']:.2f}s"
         )
         print("   top job groups (total_s, n, description):")
         for tot, cnt, desc in s["by_desc"]:
