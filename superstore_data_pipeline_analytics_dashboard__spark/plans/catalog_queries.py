@@ -14936,25 +14936,17 @@ def _land_partitioned(
     stat_cols: list[str],
 ) -> None:
     """Land a ``batch``-partitioned frame as a whole sink plus its
-    manifest: ONE partitioned write and ONE ``input_file_name()`` stats
-    scan over the sink root yield every batch's per-file rows (``file``,
-    ``n_rows``, ``min_<c>``/``max_<c>`` per stat column — the
-    ``collect_file_stats`` layout), written partitioned by ``batch``.
-    Landing batch by batch would cost a write, a scan and a manifest
-    write per batch; the rows are the same."""
+    manifest: ONE partitioned write and ONE ``manifest.file_stats``
+    scan over the sink root yield every batch's per-file rows, written
+    partitioned by ``batch``. Landing batch by batch would cost a
+    write, a scan and a manifest write per batch; the rows are the
+    same."""
+    from ..sources.manifest import file_stats
+
     df.write.partitionBy("batch").parquet(sink)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in stat_cols:
-        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
-    (
-        spark.read.option("basePath", sink)
-        .parquet(sink)
-        .select(F.input_file_name().alias("file"), "batch", *stat_cols)
-        .groupBy("file", "batch")
-        .agg(*aggs)
-        .write.partitionBy("batch")
-        .parquet(man)
-    )
+    file_stats(
+        spark.read.option("basePath", sink).parquet(sink), stat_cols
+    ).write.partitionBy("batch").parquet(man)
 
 
 @contextlib.contextmanager

@@ -35,6 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
+from .manifest import file_stats
+from .retention import _fs, _write_text, repair_manifest
+
 _COLUMNAR = {"parquet", "orc"}
 _TEXTUAL = {"json", "csv"}
 FORMATS = _COLUMNAR | _TEXTUAL
@@ -157,10 +160,8 @@ def compact_parquet(
     for every downstream reader). For partitioned sources the rewrite is
     clustered on the partition columns so each output directory gets
     coherent files instead of ``n_files`` fragments per partition."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    jpath = jvm.org.apache.hadoop.fs.Path(src)
-    fs = jpath.getFileSystem(hconf)
+    fs, hpath = _fs(spark, src)
+    jpath = hpath(src)
     n_bytes = fs.getContentSummary(jpath).getLength()
     n_files = max(1, -(-int(n_bytes) // (target_file_mb * 1024 * 1024)))
     # walk down the first child chain collecting Hive `k=v` levels — the
@@ -245,21 +246,19 @@ def compact_batch(
     contrast. A batch-grain Bloom store row (``sources/bloom.py``)
     also stays exactly correct: same rows, same positions.
 
-    The manifest refresh re-collects stats for every tracked column
-    the batch has (padding evolved-away columns as typed NULLs, the
-    erase_rows convention) in ONE scan of the compacted partition."""
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
+    The manifest refresh is ONE scan of the compacted partition through
+    ``manifest.file_stats(..., like=)``, the manifest's one row layout:
+    stats for every tracked column the batch has, evolved-away columns
+    padded as typed NULLs. FileSystem access goes through
+    ``retention._fs``, the erasure's own lookup."""
     part = f"{sink_path}/batch={batch}"
-    fs = hpath(part).getFileSystem(hconf)
+    fs, hpath = _fs(spark, part)
     files_before = sum(
         1
         for st in fs.listStatus(hpath(part))
         if st.getPath().getName().startswith("part-")
     )
     man = spark.read.parquet(manifest_path)
-    man_types = {f.name: f.dataType for f in man.schema.fields}
     stat_cols = [
         c[len("min_") :] for c in man.columns if c.startswith("min_")
     ]
@@ -276,8 +275,6 @@ def compact_batch(
     # complete-vs-torn decision on it, so a durable staged compaction
     # is never misread as torn and silently discarded (the erase_rows
     # .erase_commit.json pattern)
-    from .retention import _write_text
-
     _write_text(spark, commit_path, json.dumps({"batch": batch}))
     # hidden (dot-prefixed) trash path: a crash between the retire-rename
     # and the final delete must leave residue INVISIBLE to Spark's
@@ -291,30 +288,13 @@ def compact_batch(
     if not fs.rename(hpath(staging), hpath(part)):
         raise IOError(f"compact swap failed: could not land {staging}")
     fs.delete(trash, True)
-    present = [c for c in stat_cols if c in df.columns]
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in present:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    stats = (
-        spark.read.parquet(part)
-        .select(F.input_file_name().alias("file"), *present)
-        .groupBy("file")
-        .agg(*aggs)
-        .withColumn("batch", F.lit(batch))
-    )
-    for c in stat_cols:
-        if c not in present:
-            stats = stats.withColumn(
-                f"min_{c}", F.lit(None).cast(man_types[f"min_{c}"])
-            ).withColumn(
-                f"max_{c}", F.lit(None).cast(man_types[f"max_{c}"])
-            )
-    stats = stats.select(
-        *(F.col(c).cast(man_types[c]).alias(c) for c in man.columns)
-    )
     (
-        stats.write.mode("overwrite")
+        file_stats(
+            spark.read.option("basePath", sink_path).parquet(part),
+            stat_cols,
+            like=man.schema,
+        )
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch")
         .parquet(manifest_path)
@@ -353,16 +333,11 @@ def repair_compaction(
     :func:`retention.repair_manifest` (a crash after the swap but
     before the refresh leaves the rows pointing at retired files).
     Returns one row: ``(action, consistent_after)``."""
-    from .retention import repair_manifest
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
     part = f"{sink_path}/batch={batch}"
     staging = f"{sink_path}/.compact_staging_batch={batch}"
     trash = f"{sink_path}/.compact_trash_batch={batch}"
     commit_path = f"{sink_path}/.compact_commit_batch={batch}.json"
-    fs = hpath(part).getFileSystem(hconf)
+    fs, hpath = _fs(spark, part)
     # staged-compaction durability comes from compact_batch's own
     # commit marker; the writer's _SUCCESS file is accepted as a
     # fallback for residue staged before the marker existed, but the

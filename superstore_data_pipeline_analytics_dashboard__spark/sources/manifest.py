@@ -29,13 +29,50 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 __all__ = [
     "collect_file_stats",
+    "file_stats",
     "prune_files",
     "read_pruned",
     "write_batch_stats",
 ]
+
+
+def file_stats(
+    df: DataFrame, stat_cols: Sequence[str], like: StructType | None = None
+) -> DataFrame:
+    """The manifest's per-file row, defined once: one ``input_file_name()``
+    group-by of ``df`` keyed on ``file`` (plus ``batch`` when the frame
+    has it) yielding ``n_rows`` and ``min_<c>``/``max_<c>`` for each of
+    ``stat_cols``. Every manifest writer builds its rows here.
+
+    ``like`` (a manifest's schema) makes the rows land in an existing
+    manifest: a stat column ``df`` lacks (a batch written before the
+    column was added) comes back as typed NULLs, and every column is
+    cast to ``like``'s type, in ``like``'s order. Without ``like`` an
+    absent stat column raises."""
+    keys = ["file", *(["batch"] if "batch" in df.columns else [])]
+    present = [c for c in stat_cols if like is None or c in df.columns]
+    aggs = [F.count(F.lit(1)).alias("n_rows")]
+    for c in present:
+        aggs += [F.min(c).alias(f"min_{c}"), F.max(c).alias(f"max_{c}")]
+    stats = (
+        df.select(F.input_file_name().alias("file"), *keys[1:], *present)
+        .groupBy(*keys)
+        .agg(*aggs)
+    )
+    if like is None:
+        return stats
+    return stats.select(
+        *(
+            (F.col(f.name) if f.name in stats.columns else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in like.fields
+        )
+    )
 
 
 def collect_file_stats(
@@ -47,16 +84,7 @@ def collect_file_stats(
     per requested column.  Column pruning applies — only ``cols`` are
     read, so collection cost is a narrow scan of the stats columns.
     """
-    df = spark.read.parquet(path)
-    aggs = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        aggs.append(F.min(c).alias(f"min_{c}"))
-        aggs.append(F.max(c).alias(f"max_{c}"))
-    return (
-        df.select(F.input_file_name().alias("file"), *cols)
-        .groupBy("file")
-        .agg(*aggs)
-    )
+    return file_stats(spark.read.parquet(path), cols)
 
 
 def write_batch_stats(

@@ -37,37 +37,41 @@ over renames — metadata ops, not jobs.
 The swap is rename-based and file-level: doomed files are retired
 into the hidden ``.erase_trash`` tree, then the rewritten files land
 beside the untouched ones (fresh writer UUIDs — no name collisions).
-The erasure is JOURNALED at two grains, which makes every crash
-window REPAIRABLE — and the whole delete RESUMABLE — not just
-detectable (r11): a once-per-call resumability journal
-(``.erase_keys`` + ``.erase_intent.json``, written before any group
-mutates the sink) and a per-group durability marker
-(``.erase_commit.json``, written only after the group's staging write
-commits — our own artifact rather than the writer's ``_SUCCESS``
-file, which clusters can disable). Crash windows: (a) inside the
-staging write — no commit marker, the sink is untouched,
-``repair_erasure`` discards the torn staging tree; (b) between a
-file's retire-rename and its replacement landing —
-``manifest_consistency_audit`` reports the stale rows, and
+It is ONE roll-forward, ``_roll_forward``, driven by the group's
+commit marker: ``erase_rows`` runs it right after writing the marker,
+and ``repair_erasure`` runs the same function on whatever a crash
+left, each step skipping what is already done — every crash state
+inside the swap is a prefix of the code that finishes it. The erasure
+is JOURNALED at two grains, which makes every crash window
+REPAIRABLE — and the whole delete RESUMABLE — not just detectable
+(r11): a once-per-call resumability journal (``.erase_keys`` +
+``.erase_intent.json``, written before any group mutates the sink)
+and a per-group durability marker (``.erase_commit.json``, written
+only after the group's staging write commits — our own artifact
+rather than the writer's ``_SUCCESS`` file, which clusters can
+disable). Crash windows: (a) inside the staging write — no commit
+marker, the sink is untouched, ``repair_erasure`` discards the torn
+staging tree; (b) between a file's retire-rename and its replacement
+landing — ``manifest_consistency_audit`` reports the stale rows, and
 ``repair_erasure`` rolls the swap FORWARD from the commit + staged
-survivors (forward is the only acceptable direction for a promised
-compliance delete); (c) after the swaps and before the group's
-manifest refresh — the landed files are unenveloped and the retired
-files' rows stale, which the audit reports and ``repair_manifest``
-reconciles; (d) before LATER schema groups ran at all — the
-resumability journal outlives every window, and repair finishes the
-delete by re-running the erasure from the journaled keys, so a
-multi-group crash can never masquerade as a completed delete. A
-successful call deletes its own journals and trees before returning;
-crash residue is reclaimed by ``repair_erasure`` or, once repaired,
-``vacuum_maintenance`` (which refuses to destroy load-bearing
-residue). On object stores without cheap rename, land
-the staging files as the new locations and flip the manifest instead
-(the manifest IS that pointer in this layout). A batch whose every
-row is doomed gets a zero-row schema-bearing file (deleting the dir
-could leave the sink with no parquet files at all) and its manifest
-rows are dropped — pruned reads would otherwise chase files that no
-longer hold the recorded data.
+survivors by re-running the swap itself (forward is the only
+acceptable direction for a promised compliance delete); (c) after
+the swaps and before the group's manifest refresh — the landed
+files are unenveloped and the retired files' rows stale, which the
+audit reports and ``repair_manifest`` reconciles; (d) before LATER
+schema groups ran at all — the resumability journal outlives every
+window, and repair finishes the delete by re-running the erasure from
+the journaled keys, so a multi-group crash can never masquerade as a
+completed delete. A successful call deletes its own journals and
+trees before returning; crash residue is reclaimed by
+``repair_erasure`` or, once repaired, ``vacuum_maintenance`` (which
+refuses to destroy load-bearing residue). On object stores without
+cheap rename, land the staging files as the new locations and flip
+the manifest instead (the manifest IS that pointer in this layout).
+A batch whose every row is doomed gets a zero-row schema-bearing file
+(deleting the dir could leave the sink with no parquet files at all)
+and its manifest rows are dropped — pruned reads would otherwise
+chase files that no longer hold the recorded data.
 
 Manifest refresh is incremental: untouched files KEEP their
 pre-erasure manifest rows verbatim (no rescan), only the rewritten
@@ -90,6 +94,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
+
+from ..streaming.audit import _disk_vs_manifest, manifest_consistency_audit
+from .manifest import file_stats
 
 __all__ = [
     "erase_rows",
@@ -97,6 +105,16 @@ __all__ = [
     "repair_manifest",
     "vacuum_maintenance",
 ]
+
+# The erasure journal: hidden (dot-prefixed) names under the sink root,
+# so Spark's reader never sees them.
+_STAGING = ".erase_staging"  # the rewritten survivors, by batch
+_TRASH = ".erase_trash"  # the retired candidate files, by batch
+_COMMIT = ".erase_commit.json"  # the swap plan; staging is durable
+_KEYS = ".erase_keys"  # the opt-out keys, for resuming the delete
+_INTENT = ".erase_intent.json"  # key columns and maintained bloom store
+_EMPTY = ".erase_empty"  # the zero-row template of an emptied batch
+_ERASE_RESIDUE = (_STAGING, _TRASH, _COMMIT, _KEYS, _INTENT, _EMPTY)
 
 
 def _fs(spark: SparkSession, path: str):
@@ -129,12 +147,12 @@ def _write_erase_journal(
     maintained bloom store). The one writer of this format —
     ``erase_rows`` and every crash fixture that plants a journal."""
     fs, hpath = _fs(spark, sink_path)
-    keys_path = f"{sink_path}/.erase_keys"
+    keys_path = f"{sink_path}/{_KEYS}"
     fs.delete(hpath(keys_path), True)
     keys.write.parquet(keys_path)
     _write_text(
         spark,
-        f"{sink_path}/.erase_intent.json",
+        f"{sink_path}/{_INTENT}",
         json.dumps(
             {"key_cols": key_cols, "bloom_store_path": bloom_store_path}
         ),
@@ -145,9 +163,17 @@ def _erase_journal_exists(spark: SparkSession, sink_path: str) -> bool:
     """True while either half of the erasure journal is on disk."""
     fs, hpath = _fs(spark, sink_path)
     return bool(
-        fs.exists(hpath(f"{sink_path}/.erase_intent.json"))
-        or fs.exists(hpath(f"{sink_path}/.erase_keys"))
+        fs.exists(hpath(f"{sink_path}/{_INTENT}"))
+        or fs.exists(hpath(f"{sink_path}/{_KEYS}"))
     )
+
+
+def _retire_erase_journal(spark: SparkSession, sink_path: str) -> None:
+    """Delete both halves of the erasure journal: the delete it records
+    is finished (or never started)."""
+    fs, hpath = _fs(spark, sink_path)
+    fs.delete(hpath(f"{sink_path}/{_INTENT}"), False)
+    fs.delete(hpath(f"{sink_path}/{_KEYS}"), True)
 
 
 def _read_text(spark: SparkSession, path: str) -> str:
@@ -218,46 +244,109 @@ def _fresh_stat_rows(
     spark: SparkSession,
     sink_path: str,
     files_by_sig: dict[tuple, list[str]],
-    stat_cols: list[str],
-    man_types: dict,
-    man_columns: list[str],
+    man_schema: StructType,
 ) -> list:
-    """Collect fresh manifest rows (n_rows + min_/max_ stats for every
-    tracked column, evolved-away columns padded as typed NULLs, cast to
-    the manifest's schema) for the given files — ONE scan per
+    """Collect fresh manifest rows, in the manifest's schema
+    (``file_stats(..., like=)``), for the given files — ONE scan per
     footer-schema group (a mixed-schema scan would NULL-pad
     pre-evolution files with merged columns). Shared by erase_rows'
-    post-rewrite refresh and repair_manifest's re-enveloping so the
-    two cannot drift."""
+    post-rewrite refresh and repair_manifest's re-enveloping."""
+    stat_cols = [
+        c[len("min_") :] for c in man_schema.names if c.startswith("min_")
+    ]
     rows: list = []
-    for sig, uris in files_by_sig.items():
-        if not uris:
-            continue
-        present = [c for c in stat_cols if c in {n for n, _ in sig}]
-        aggs = [F.count(F.lit(1)).alias("n_rows")]
-        for c in present:
-            aggs.append(F.min(c).alias(f"min_{c}"))
-            aggs.append(F.max(c).alias(f"max_{c}"))
-        stats = (
-            spark.read.option("basePath", sink_path)
-            .parquet(*uris)
-            .select(F.input_file_name().alias("file"), "batch", *present)
-            .groupBy("file", "batch")
-            .agg(*aggs)
-        )
-        for c in stat_cols:
-            if c not in present:
-                stats = stats.withColumn(
-                    f"min_{c}", F.lit(None).cast(man_types[f"min_{c}"])
-                ).withColumn(
-                    f"max_{c}", F.lit(None).cast(man_types[f"max_{c}"])
-                )
-        rows.extend(
-            stats.select(
-                *(F.col(c).cast(man_types[c]).alias(c) for c in man_columns)
+    for uris in files_by_sig.values():
+        if uris:
+            rows += file_stats(
+                spark.read.option("basePath", sink_path).parquet(*uris),
+                stat_cols,
+                like=man_schema,
             ).collect()
-        )
     return rows
+
+
+def _roll_forward(
+    spark: SparkSession,
+    sink_path: str,
+    manifest_path: str,
+    plan: dict,
+    rows_like: DataFrame | None = None,
+) -> tuple[dict[int, list[str]], list[int], int]:
+    """Run an erasure swap to its end from its parsed
+    ``.erase_commit.json`` ``plan``. For each planned batch, in order:
+    retire every candidate file still present into
+    ``.erase_trash/batch=N``; land every staged ``part-*`` file not yet
+    landed; and for a batch the plan shows with no untouched file that
+    now holds no ``part-*`` file, drop its manifest partition and land
+    a zero-row, schema-bearing file (an emptied dir could leave the
+    sink with no parquet file to infer a schema from).
+
+    Each step skips what is already done, so every state a crash can
+    leave inside the swap is a prefix of this function: ``erase_rows``
+    runs it right after writing the plan, ``repair_erasure`` runs it
+    again to finish a crashed one. Renames only, plus at most one
+    zero-row template per call, copied into each emptied batch (a plan
+    is one schema group, so they share it): written from ``rows_like``
+    (a frame of the group's file schema — erase_rows passes its rewrite
+    scan) or else from a retired file, at the cost of a footer read.
+    Returns ``(landed, emptied, n_retired)``: the landed file URIs
+    per batch, the emptied batches and the number of files retired."""
+    fs, hpath = _fs(spark, sink_path)
+    trash = f"{sink_path}/{_TRASH}"
+    tmpl = f"{sink_path}/{_EMPTY}"
+
+    def parts(d: str) -> list:
+        return [
+            st.getPath()
+            for st in fs.listStatus(hpath(d))
+            if st.getPath().getName().startswith("part-")
+        ]
+
+    def move(src, dst) -> None:
+        if not fs.rename(src, dst):
+            raise IOError(f"erase swap failed: could not move {src} to {dst}")
+
+    landed: dict[int, list[str]] = {}
+    emptied: list[int] = []
+    n_retired = 0
+    template = None
+    for b in sorted(int(b) for b in plan["batches"]):
+        info = plan["batches"][str(b)]
+        part = f"{sink_path}/batch={b}"
+        fs.mkdirs(hpath(f"{trash}/batch={b}"))
+        for u in info["files"]:
+            if fs.exists(hpath(u)):
+                name = u.rsplit("/", 1)[1]
+                move(hpath(u), hpath(f"{trash}/batch={b}/{name}"))
+                n_retired += 1
+        fs.mkdirs(hpath(part))
+        staged = f"{sink_path}/{_STAGING}/batch={b}"
+        landed[b] = []
+        for p in parts(staged) if fs.exists(hpath(staged)) else []:
+            move(p, hpath(f"{part}/{p.getName()}"))
+            landed[b].append(f"{part}/{p.getName()}")
+        if info["n_untouched"] or parts(part):
+            continue
+        if template is None:
+            if rows_like is None:
+                retired = parts(f"{trash}/batch={b}")[0].toString()
+                rows_like = spark.read.parquet(retired)
+            fs.delete(hpath(tmpl), True)
+            rows_like.limit(0).coalesce(1).write.parquet(tmpl)
+            template = parts(tmpl)[0]
+        # no manifest rows for a zero-row batch — dynamic overwrite
+        # cannot land zero rows, and stale rows would send pruned reads
+        # at retired files
+        fs.delete(hpath(f"{manifest_path}/batch={b}"), True)
+        # copied beside the template, then renamed in: a torn copy
+        # never lands in the live partition
+        copy = hpath(f"{tmpl}/batch={b}/{template.getName()}")
+        spark._jvm.org.apache.hadoop.io.IOUtils.copyBytes(
+            fs.open(template), fs.create(copy, True), 65536, True
+        )
+        move(copy, hpath(f"{part}/{template.getName()}"))
+        emptied.append(b)
+    return landed, emptied, n_retired
 
 
 def erase_rows(
@@ -439,433 +528,353 @@ def erase_rows(
         .distinct()
         .persist()
     )
-    # NULL policy (docstring): a NULL opt-out key would no-op silently
-    # through every null-rejecting join below — refuse it loudly
-    any_null = functools.reduce(
-        lambda a, b: a | b, (F.col(f"k_{c}").isNull() for c in cols)
-    )
-    # FILE-grain candidates (r10): the manifest is per-file, so within
-    # an affected batch only the files whose own [min,max] envelopes
-    # intersect the key list are rewritten — a 3-file hit inside a
-    # 300-file partition rewrites 1% of it, not all of it. This is
-    # also TIGHTER than the batch aggregate: a key falling in the gap
-    # between two files' ranges hits the batch envelope but no file
-    # envelope, and correctly rewrites nothing. NULL stats (a
-    # pre-evolution file that lacks a later-added key column) are
-    # null-rejecting here, which is CORRECT: no column, no key.
-    in_env_file = functools.reduce(
-        lambda a, b: a & b,
-        (
-            (F.col(f"k_{c}") >= F.col(f"min_{c}"))
-            & (F.col(f"k_{c}") <= F.col(f"max_{c}"))
-            for c in cols
-        ),
-    )
-    cand = man.join(k, in_env_file, "left_semi").select(
-        F.col("batch").cast("long").alias("batch"), "file", "n_rows"
-    )
-    # ONE planning action (r14, VERDICT r13 item 1 — the chains are
-    # driver-job-count-bound): the persisted key list's NULL count, the
-    # per-batch pre-erasure totals and the file-grain envelope
-    # candidates are three independent metadata-sized frames; collect
-    # them as one tagged union instead of three driver-sequenced
-    # actions. Collected NOW, because the report must describe the
-    # PRE-erasure manifest and everything below mutates it (the
-    # one-shot-lazy trap: a frame read lazily after the rewrite would
-    # silently describe the post-erasure state). The union also
-    # materializes the persisted key list, exactly like the separate
-    # NULL-check job used to.
-    planning = (
-        k.agg(F.sum(any_null.cast("long")).alias("n"))
-        .select(
-            F.lit(0).alias("__tag"),
-            F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("batch"),
-            F.lit(None).cast("string").alias("file"),
-            F.lit(None).cast("long").alias("n_rows"),
+    try:
+        # NULL policy (docstring): a NULL opt-out key would no-op silently
+        # through every null-rejecting join below — refuse it loudly
+        any_null = functools.reduce(
+            lambda a, b: a | b, (F.col(f"k_{c}").isNull() for c in cols)
         )
-        .unionByName(
-            env.select(
-                F.lit(1).alias("__tag"),
-                "batch",
-                F.lit(None).cast("string").alias("file"),
-                F.col("rows_before").cast("long").alias("n_rows"),
-            )
+        # FILE-grain candidates (r10): the manifest is per-file, so within
+        # an affected batch only the files whose own [min,max] envelopes
+        # intersect the key list are rewritten — a 3-file hit inside a
+        # 300-file partition rewrites 1% of it, not all of it. This is
+        # also TIGHTER than the batch aggregate: a key falling in the gap
+        # between two files' ranges hits the batch envelope but no file
+        # envelope, and correctly rewrites nothing. NULL stats (a
+        # pre-evolution file that lacks a later-added key column) are
+        # null-rejecting here, which is CORRECT: no column, no key.
+        in_env_file = functools.reduce(
+            lambda a, b: a & b,
+            (
+                (F.col(f"k_{c}") >= F.col(f"min_{c}"))
+                & (F.col(f"k_{c}") <= F.col(f"max_{c}"))
+                for c in cols
+            ),
         )
-        .unionByName(
-            cand.select(
-                F.lit(2).alias("__tag"),
-                "batch",
-                "file",
-                F.col("n_rows").cast("long").alias("n_rows"),
-            )
+        cand = man.join(k, in_env_file, "left_semi").select(
+            F.col("batch").cast("long").alias("batch"), "file", "n_rows"
         )
-        .collect()
-    )
-    if any(int(r["batch"]) for r in planning if r["__tag"] == 0):
-        k.unpersist()
-        raise ValueError(
-            "erase_rows: opt-out key list contains NULL — a NULL cannot "
-            "identify a data subject and would silently erase nothing "
-            "(null-rejecting envelope/anti joins); drop it or delete "
-            "NULL-keyed rows by predicate instead"
-        )
-    before_counts = {
-        int(r["batch"]): int(r["n_rows"]) for r in planning if r["__tag"] == 1
-    }
-    cand_by_batch: dict[int, list[str]] = {}
-    cand_rows_by_batch: dict[int, int] = {}
-    for r in planning:
-        if r["__tag"] != 2:
-            continue
-        b = int(r["batch"])
-        cand_by_batch.setdefault(b, []).append(r["file"])
-        cand_rows_by_batch[b] = cand_rows_by_batch.get(b, 0) + int(
-            r["n_rows"]
-        )
-    affected = sorted(cand_by_batch)
-
-    # the pre-erasure manifest rows of every affected batch are
-    # metadata-sized (#files-in-affected-batches rows, same class as
-    # the envelope collect): untouched files keep these rows verbatim
-    # in the refreshed manifest, and collecting up front avoids
-    # re-reading manifest partitions an earlier schema group's refresh
-    # already replaced (a lazily re-read listing snapshot would chase
-    # deleted files). With blooms the pre-rows and the bloom-confined
-    # batch set come back in ONE tagged action (r14 job-count fold):
-    # the pre-row branch is semi-joined to the bloom candidates
-    # ENGINE-side, so the collect stays bounded by the FINAL affected
-    # batches — never the envelope superset (a random layout's
-    # envelopes admit everything).
-    man_row = Row(*man.columns)
-    pre_frame = man.filter(F.col("batch").cast("long").isin(affected))
-    if blooms and affected:
-        from .bloom import bloom_candidates
-
-        bad = sorted(set(blooms) - set(cols))
-        if bad:
-            raise ValueError(
-                f"erase_rows: bloom provided for non-key column(s) {bad}"
-            )
-        # xxhash64 is type-sensitive: probe with exactly the sink's
-        # column types or positions won't match the collected ones
-        sink_types = {
-            f.name: f.dataType
-            for f in spark.read.parquet(sink_path).schema.fields
-        }
-        kc = [f"k_{c}" for c in cols]
-        bcand = None
-        for c, bl in blooms.items():
-            probe = (
-                k.select(F.col(f"k_{c}").cast(sink_types[c]).alias(c))
-                .distinct()
-            )
-            cc = bloom_candidates(
-                bl, probe, c, bloom_n_bits, bloom_n_hashes
-            )
-            j = k.join(
-                cc, k[f"k_{c}"].cast(sink_types[c]) == cc[c]
-            ).select(*kc, "batch")
-            bcand = (
-                j
-                if bcand is None
-                else bcand.join(j, [*kc, "batch"], "left_semi")
-            )
-        # persisted: BOTH union branches below read it (the ok_b rows
-        # themselves and the pre-row semi-join's build side) — without
-        # the persist each branch would re-run the whole per-column
-        # bloom-candidate pipeline (measured: q279's tagged collect was
-        # 52 jobs unpersisted)
-        ok_b = (
-            bcand.select(F.col("batch").cast("long").alias("__okb"))
-            .distinct()
-            .persist()
-        )
-        tagged = (
-            ok_b.select(
+        # ONE planning action (r14, VERDICT r13 item 1 — the chains are
+        # driver-job-count-bound): the persisted key list's NULL count, the
+        # per-batch pre-erasure totals and the file-grain envelope
+        # candidates are three independent metadata-sized frames; collect
+        # them as one tagged union instead of three driver-sequenced
+        # actions. Collected NOW, because the report must describe the
+        # PRE-erasure manifest and everything below mutates it (the
+        # one-shot-lazy trap: a frame read lazily after the rewrite would
+        # silently describe the post-erasure state). The union also
+        # materializes the persisted key list, exactly like the separate
+        # NULL-check job used to.
+        planning = (
+            k.agg(F.sum(any_null.cast("long")).alias("n"))
+            .select(
                 F.lit(0).alias("__tag"),
-                F.col("__okb"),
-                *(F.lit(None).cast(f.dataType).alias(f.name)
-                  for f in man.schema.fields),
+                F.coalesce(F.col("n"), F.lit(0)).cast("long").alias("batch"),
+                F.lit(None).cast("string").alias("file"),
+                F.lit(None).cast("long").alias("n_rows"),
             )
             .unionByName(
-                pre_frame.join(
-                    ok_b,
-                    pre_frame["batch"].cast("long") == ok_b["__okb"],
-                    "left_semi",
-                ).select(
+                env.select(
                     F.lit(1).alias("__tag"),
-                    F.lit(None).cast("long").alias("__okb"),
-                    *man.columns,
+                    "batch",
+                    F.lit(None).cast("string").alias("file"),
+                    F.col("rows_before").cast("long").alias("n_rows"),
+                )
+            )
+            .unionByName(
+                cand.select(
+                    F.lit(2).alias("__tag"),
+                    "batch",
+                    "file",
+                    F.col("n_rows").cast("long").alias("n_rows"),
                 )
             )
             .collect()
         )
-        ok_b.unpersist()  # the collect above materialized every reader
-        bloom_ok = {
-            int(r["__okb"]) for r in tagged if r["__tag"] == 0
-        }
-        affected = [b for b in affected if b in bloom_ok]
-        pre_rows = [
-            man_row(*(r[c] for c in man.columns))
-            for r in tagged
-            if r["__tag"] == 1
-        ]
-    else:
-        pre_rows = pre_frame.collect() if affected else []
-
-    jvm = spark._jvm
-    hconf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path
-    man_types = {f.name: f.dataType for f in man.schema.fields}
-    # drop candidate entries for bloom-pruned batches so the rewrite,
-    # retire and manifest bookkeeping below never touch them
-    cand_by_batch = {b: cand_by_batch[b] for b in affected}
-    cand_uri_set = {u for us in cand_by_batch.values() for u in us}
-
-    # group the hit set by exact file schema: one rewrite job per GROUP
-    # (see module docstring — mixing schemas in one scan would write
-    # the merged schema back into pre-evolution batches). Schema reads
-    # are driver-side footer lookups, not jobs.
-    # each batch's signature comes from its CANDIDATE files' own footers
-    # (one driver-side footer read per hit file — ∝ files being rewritten
-    # anyway, never the whole dir), not a one-file sample of the batch
-    # dir: a sampled footer could disagree with the files actually
-    # scanned if a writer ever violated the one-schema-per-batch landing
-    # convention, and the grouped multi-path rewrite would then silently
-    # DROP (or NULL-pad) columns of the non-sampled candidates — the
-    # exact merged-schema corruption the grouping exists to prevent, one
-    # level down. Candidates that disagree among themselves fail loudly.
-    groups: dict[tuple, list[int]] = {}
-    for b in affected:
-        sigs = {
-            tuple(
-                (f.name, f.dataType.simpleString())
-                for f in spark.read.parquet(u).schema
-            )
-            for u in cand_by_batch[b]
-        }
-        if len(sigs) > 1:
+        if any(int(r["batch"]) for r in planning if r["__tag"] == 0):
             raise ValueError(
-                f"erase_rows: batch {b}'s hit files hold heterogeneous "
-                f"schemas ({sorted(sorted(s) for s in sigs)}) — rewriting "
-                "them in one scan would corrupt whichever files the "
-                "scan schema wasn't sampled from; compact or re-land "
-                "the batch to one schema first"
+                "erase_rows: opt-out key list contains NULL — a NULL cannot "
+                "identify a data subject and would silently erase nothing "
+                "(null-rejecting envelope/anti joins); drop it or delete "
+                "NULL-keyed rows by predicate instead"
             )
-        groups.setdefault(sigs.pop(), []).append(b)
-
-    kept_counts: dict[int, int] = {}
-    staging = f"{sink_path}/.erase_staging"
-    trash = f"{sink_path}/.erase_trash"
-    commit_path = f"{sink_path}/.erase_commit.json"
-    keys_path = f"{sink_path}/.erase_keys"
-    intent_path = f"{sink_path}/.erase_intent.json"
-    fs = hpath(sink_path).getFileSystem(hconf)
-    if groups:
-        # RESUMABILITY journal, written ONCE before any group mutates
-        # the sink: the distinct opt-out keys (key-sized parquet) plus
-        # the erasure intent. A crash in ANY group — including groups
-        # the crashed call never reached — leaves these behind, and
-        # repair_erasure finishes the whole delete by re-running
-        # erase_rows from them after its file/manifest reconciliation
-        # (a partial compliance delete that READS as repaired would be
-        # worse than no repair at all). Both are deleted only after
-        # the last group's refresh completes. The key list necessarily
-        # persists on disk until then — it must, for the delete to be
-        # resumable — under the same hidden-tree visibility rules as
-        # the staging/trash residue.
-        _write_erase_journal(
-            spark,
-            sink_path,
-            k.select(*(F.col(f"k_{c}").alias(c) for c in cols)),
-            cols,
-            bloom_store_path,
-        )
-    for sig, bs in groups.items():
-        files = [u for b in bs for u in cand_by_batch[b]]
-        src = spark.read.option("basePath", sink_path).parquet(*files)
-        same_key = functools.reduce(
-            lambda a, b: a & b,
-            (src[c] == F.col(f"k_{c}") for c in cols),
-        )
-        kept = src.join(F.broadcast(k), same_key, "left_anti")
-        # ONE job rewrites every candidate file of this schema group
-        fs.delete(hpath(staging), True)
-        fs.delete(hpath(trash), True)
-        fs.delete(hpath(commit_path), False)
-        untouched_files = {
-            b: [
-                r["file"]
-                for r in pre_rows
-                if int(r["batch"]) == b and r["file"] not in cand_uri_set
-            ]
-            for b in bs
+        before_counts = {
+            int(r["batch"]): int(r["n_rows"])
+            for r in planning
+            if r["__tag"] == 1
         }
-        kept.write.partitionBy("batch").parquet(staging)
-        # DURABILITY marker, written only AFTER the staging write
-        # committed: its presence is what tells repair_erasure the
-        # staged survivors are complete and the swap must roll FORWARD
-        # (completing the swap is the original erasure's semantics —
-        # for a compliance delete, forward is the only acceptable
-        # direction once staging is durable). Deliberately our own
-        # artifact, not the writer's _SUCCESS file: clusters that set
-        # mapreduce.fileoutputcommitter.marksuccessfuljobs=false would
-        # otherwise make a durable staging look torn and a discarding
-        # "repair" would destroy the only copies of the surviving
-        # rows. Metadata-sized: candidate URIs and untouched-file
-        # counts per batch.
-        _write_text(
-            spark,
-            commit_path,
-            json.dumps(
-                {
-                    "batches": {
-                        str(b): {
-                            "files": cand_by_batch[b],
-                            "n_untouched": len(untouched_files[b]),
-                        }
-                        for b in bs
-                    }
-                }
-            ),
-        )
-        # a partitioned write produces a batch=N dir only for batches
-        # with surviving rewritten rows
-        surv: set[int] = set()
-        for st in fs.listStatus(hpath(staging)):
-            name = st.getPath().getName()
-            if name.startswith("batch="):
-                surv.add(int(name.split("=", 1)[1]))
-        emptied = [
-            b for b in bs if b not in surv and not untouched_files[b]
-        ]
-        empty_file = None
-        if emptied:
-            # a fully-emptied batch still lands ONE zero-row file with
-            # the group's schema (written once per group, copied per
-            # batch): dropping the dir outright could leave the sink
-            # with zero parquet files (an opt-out list covering the
-            # whole table), making the path schema-uninferable
-            tmpl = f"{sink_path}/.erase_empty"
-            fs.delete(hpath(tmpl), True)
-            src.limit(0).drop("batch").coalesce(1).write.parquet(tmpl)
-            empty_file = next(
-                st.getPath()
-                for st in fs.listStatus(hpath(tmpl))
-                if st.getPath().getName().startswith("part-")
-            )
-        # swap loop: renames/copies only (metadata-sized ops, no jobs).
-        # Per batch: retire the doomed files into the hidden trash tree,
-        # land the rewritten files beside the untouched ones (fresh
-        # writer UUIDs — no name collisions). See module docstring for
-        # the crash windows and which audit catches each.
-        moved: dict[int, list[str]] = {}
-        for b in bs:
-            part = f"{sink_path}/batch={b}"
-            fs.mkdirs(hpath(f"{trash}/batch={b}"))
-            for u in cand_by_batch[b]:
-                name = u.rsplit("/", 1)[1]
-                if not fs.rename(
-                    hpath(u), hpath(f"{trash}/batch={b}/{name}")
-                ):
-                    raise IOError(
-                        f"erase swap failed: could not retire {u}"
-                    )
-            moved[b] = []
-            st_dir = hpath(f"{staging}/batch={b}")
-            if b in surv:
-                for st in fs.listStatus(st_dir):
-                    name = st.getPath().getName()
-                    if not name.startswith("part-"):
-                        continue
-                    if not fs.rename(st.getPath(), hpath(f"{part}/{name}")):
-                        raise IOError(
-                            f"erase swap failed: could not land "
-                            f"{name} into batch {b}"
-                        )
-                    moved[b].append(f"{part}/{name}")
-            if b in emptied:
-                kept_counts[b] = 0
-                fs.mkdirs(hpath(part))
-                jvm.org.apache.hadoop.fs.FileUtil.copy(
-                    fs,
-                    empty_file,
-                    fs,
-                    hpath(f"{part}/{empty_file.getName()}"),
-                    False,
-                    hconf,
-                )
-                # no manifest rows for a zero-row batch — dynamic
-                # overwrite cannot land zero rows, and stale rows
-                # would send pruned reads at files that no longer hold
-                # the recorded data
-                fs.delete(hpath(f"{manifest_path}/batch={b}"), True)
-        fs.delete(hpath(staging), True)
-        fs.delete(hpath(trash), True)
-        if emptied:
-            fs.delete(hpath(f"{sink_path}/.erase_empty"), True)
-
-        with_manifest = [b for b in bs if b not in emptied]
-        if not with_manifest:
-            # this group's work (incl. manifest-row drops) is complete
-            fs.delete(hpath(commit_path), False)
-            continue
-        # one scan of ONLY the rewritten files serves both the report
-        # counts and the manifest refresh (stats must be collected
-        # POST-swap: the manifest's `file` column holds live URIs that
-        # pruned reads open directly); untouched files keep their
-        # pre-erasure manifest rows verbatim — no rescan. Refresh
-        # stats for EVERY column the manifest tracks (not just the
-        # erasure keys) so other columns' pruned reads stay correct;
-        # columns this group's schema lacks (pre-evolution batches)
-        # are padded as typed NULLs so the manifest schema is stable.
-        new_live = [f for b in with_manifest for f in moved.get(b, [])]
-        new_rows_by_batch: dict[int, int] = {}
-        new_stat_rows = _fresh_stat_rows(
-            spark, sink_path, {sig: new_live}, stat_cols, man_types,
-            man.columns,
-        )
-        for r in new_stat_rows:
+        cand_by_batch: dict[int, list[str]] = {}
+        cand_rows_by_batch: dict[int, int] = {}
+        for r in planning:
+            if r["__tag"] != 2:
+                continue
             b = int(r["batch"])
-            new_rows_by_batch[b] = new_rows_by_batch.get(b, 0) + int(
+            cand_by_batch.setdefault(b, []).append(r["file"])
+            cand_rows_by_batch[b] = cand_rows_by_batch.get(b, 0) + int(
                 r["n_rows"]
             )
-        # refreshed partition content = untouched files' pre-erasure
-        # rows + the rewritten files' fresh rows, rebuilt driver-side
-        # (metadata volumes) so the overwrite never reads the path it
-        # writes
-        keep_old = [
-            r
-            for r in pre_rows
-            if int(r["batch"]) in set(with_manifest)
-            and r["file"] not in cand_uri_set
-        ]
-        refreshed = spark.createDataFrame(
-            keep_old + new_stat_rows, man.schema
-        )
-        (
-            refreshed.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(manifest_path)
-        )
-        for b in with_manifest:
-            untouched_rows = before_counts[b] - cand_rows_by_batch.get(
-                b, 0
+        affected = sorted(cand_by_batch)
+
+        # the pre-erasure manifest rows of every affected batch are
+        # metadata-sized (#files-in-affected-batches rows, same class as
+        # the envelope collect): untouched files keep these rows verbatim
+        # in the refreshed manifest, and collecting up front avoids
+        # re-reading manifest partitions an earlier schema group's refresh
+        # already replaced (a lazily re-read listing snapshot would chase
+        # deleted files). With blooms the pre-rows and the bloom-confined
+        # batch set come back in ONE tagged action (r14 job-count fold):
+        # the pre-row branch is semi-joined to the bloom candidates
+        # ENGINE-side, so the collect stays bounded by the FINAL affected
+        # batches — never the envelope superset (a random layout's
+        # envelopes admit everything).
+        man_row = Row(*man.columns)
+        pre_frame = man.filter(F.col("batch").cast("long").isin(affected))
+        if blooms and affected:
+            from .bloom import bloom_candidates
+
+            bad = sorted(set(blooms) - set(cols))
+            if bad:
+                raise ValueError(
+                    f"erase_rows: bloom provided for non-key column(s) {bad}"
+                )
+            # xxhash64 is type-sensitive: probe with exactly the sink's
+            # column types or positions won't match the collected ones
+            sink_types = {
+                f.name: f.dataType
+                for f in spark.read.parquet(sink_path).schema.fields
+            }
+            kc = [f"k_{c}" for c in cols]
+            bcand = None
+            for c, bl in blooms.items():
+                probe = (
+                    k.select(F.col(f"k_{c}").cast(sink_types[c]).alias(c))
+                    .distinct()
+                )
+                cc = bloom_candidates(
+                    bl, probe, c, bloom_n_bits, bloom_n_hashes
+                )
+                j = k.join(
+                    cc, k[f"k_{c}"].cast(sink_types[c]) == cc[c]
+                ).select(*kc, "batch")
+                bcand = (
+                    j
+                    if bcand is None
+                    else bcand.join(j, [*kc, "batch"], "left_semi")
+                )
+            # persisted: BOTH union branches below read it (the ok_b rows
+            # themselves and the pre-row semi-join's build side) — without
+            # the persist each branch would re-run the whole per-column
+            # bloom-candidate pipeline (measured: q279's tagged collect was
+            # 52 jobs unpersisted)
+            ok_b = (
+                bcand.select(F.col("batch").cast("long").alias("__okb"))
+                .distinct()
+                .persist()
             )
-            kept_counts[b] = untouched_rows + new_rows_by_batch.get(b, 0)
-        # this group's work (incl. the manifest refresh) is complete
-        fs.delete(hpath(commit_path), False)
-    k.unpersist()
+            try:
+                tagged = (
+                    ok_b.select(
+                        F.lit(0).alias("__tag"),
+                        F.col("__okb"),
+                        *(F.lit(None).cast(f.dataType).alias(f.name)
+                          for f in man.schema.fields),
+                    )
+                    .unionByName(
+                        pre_frame.join(
+                            ok_b,
+                            pre_frame["batch"].cast("long") == ok_b["__okb"],
+                            "left_semi",
+                        ).select(
+                            F.lit(1).alias("__tag"),
+                            F.lit(None).cast("long").alias("__okb"),
+                            *man.columns,
+                        )
+                    )
+                    .collect()
+                )
+            finally:
+                ok_b.unpersist()
+            bloom_ok = {
+                int(r["__okb"]) for r in tagged if r["__tag"] == 0
+            }
+            affected = [b for b in affected if b in bloom_ok]
+            pre_rows = [
+                man_row(*(r[c] for c in man.columns))
+                for r in tagged
+                if r["__tag"] == 1
+            ]
+        else:
+            pre_rows = pre_frame.collect() if affected else []
+
+        # drop candidate entries for bloom-pruned batches so the rewrite,
+        # retire and manifest bookkeeping below never touch them
+        cand_by_batch = {b: cand_by_batch[b] for b in affected}
+        cand_uri_set = {u for us in cand_by_batch.values() for u in us}
+
+        # group the hit set by exact file schema: one rewrite job per
+        # GROUP (see module docstring — mixing schemas in one scan would
+        # write the merged schema back into pre-evolution batches).
+        # Each batch's signature comes from its CANDIDATE files' own
+        # footers (one footer read per hit file — ∝ files being
+        # rewritten anyway, never the whole dir), not a one-file sample
+        # of the batch dir: a sampled footer could disagree with the
+        # files actually scanned if a writer ever violated the
+        # one-schema-per-batch landing convention, and the grouped
+        # multi-path rewrite would then silently DROP (or NULL-pad)
+        # columns of the non-sampled candidates — the exact
+        # merged-schema corruption the grouping exists to prevent, one
+        # level down. Candidates that disagree among themselves fail
+        # loudly.
+        groups: dict[tuple, list[int]] = {}
+        for b in affected:
+            sigs = {
+                tuple(
+                    (f.name, f.dataType.simpleString())
+                    for f in spark.read.parquet(u).schema
+                )
+                for u in cand_by_batch[b]
+            }
+            if len(sigs) > 1:
+                raise ValueError(
+                    f"erase_rows: batch {b}'s hit files hold "
+                    "heterogeneous schemas "
+                    f"({sorted(sorted(s) for s in sigs)}) — rewriting "
+                    "them in one scan would corrupt whichever files the "
+                    "scan schema wasn't sampled from; compact or re-land "
+                    "the batch to one schema first"
+                )
+            groups.setdefault(sigs.pop(), []).append(b)
+        kept_counts: dict[int, int] = {}
+        fs, hpath = _fs(spark, sink_path)
+        commit_path = f"{sink_path}/{_COMMIT}"
+        if groups:
+            # RESUMABILITY journal, written ONCE before any group
+            # mutates the sink: the distinct opt-out keys (key-sized
+            # parquet) plus the erasure intent. A crash in ANY group —
+            # including groups the crashed call never reached — leaves
+            # these behind, and repair_erasure finishes the whole
+            # delete by re-running erase_rows from them after its
+            # file/manifest reconciliation (a partial compliance delete
+            # that READS as repaired would be worse than no repair at
+            # all). Both are retired only after the last group's
+            # refresh completes. The key list necessarily persists on
+            # disk until then — it must, for the delete to be
+            # resumable — under the same hidden-tree visibility rules
+            # as the staging/trash residue.
+            _write_erase_journal(
+                spark,
+                sink_path,
+                k.select(*(F.col(f"k_{c}").alias(c) for c in cols)),
+                cols,
+                bloom_store_path,
+            )
+        for sig, bs in groups.items():
+            files = [u for b in bs for u in cand_by_batch[b]]
+            src = spark.read.option("basePath", sink_path).parquet(*files)
+            same_key = functools.reduce(
+                lambda a, b: a & b,
+                (src[c] == F.col(f"k_{c}") for c in cols),
+            )
+            kept = src.join(F.broadcast(k), same_key, "left_anti")
+            for name in (_STAGING, _TRASH, _COMMIT):
+                fs.delete(hpath(f"{sink_path}/{name}"), True)
+            # ONE job rewrites every candidate file of this schema group
+            kept.write.partitionBy("batch").parquet(f"{sink_path}/{_STAGING}")
+            # DURABILITY marker, written only AFTER the staging write
+            # committed: its presence is what tells repair_erasure the
+            # staged survivors are complete and the swap must roll
+            # FORWARD (completing the swap is the original erasure's
+            # semantics — for a compliance delete, forward is the only
+            # acceptable direction once staging is durable).
+            # Deliberately our own artifact, not the writer's _SUCCESS
+            # file: clusters that set
+            # mapreduce.fileoutputcommitter.marksuccessfuljobs=false
+            # would otherwise make a durable staging look torn and a
+            # discarding "repair" would destroy the only copies of the
+            # surviving rows. Metadata-sized: candidate URIs and
+            # untouched-file counts per batch.
+            plan = {
+                "batches": {
+                    str(b): {
+                        "files": cand_by_batch[b],
+                        "n_untouched": sum(
+                            int(r["batch"]) == b
+                            and r["file"] not in cand_uri_set
+                            for r in pre_rows
+                        ),
+                    }
+                    for b in bs
+                }
+            }
+            _write_text(spark, commit_path, json.dumps(plan))
+            # the swap IS the roll-forward repair_erasure runs after a
+            # crash (renames only — no jobs but the zero-row template)
+            landed, emptied, _ = _roll_forward(
+                spark, sink_path, manifest_path, plan, src.drop("batch")
+            )
+            for name in (_STAGING, _TRASH, _EMPTY):
+                fs.delete(hpath(f"{sink_path}/{name}"), True)
+            kept_counts.update((b, 0) for b in emptied)
+            with_manifest = [b for b in bs if b not in emptied]
+            if with_manifest:
+                # one scan of ONLY the rewritten files serves both the
+                # report counts and the manifest refresh (stats must be
+                # collected POST-swap: the manifest's `file` column
+                # holds live URIs that pruned reads open directly);
+                # untouched files keep their pre-erasure manifest rows
+                # verbatim — no rescan. Stats cover EVERY column the
+                # manifest tracks (not just the erasure keys) so other
+                # columns' pruned reads stay correct.
+                new_stat_rows = _fresh_stat_rows(
+                    spark,
+                    sink_path,
+                    {sig: [u for b in with_manifest for u in landed[b]]},
+                    man.schema,
+                )
+                new_rows_by_batch: dict[int, int] = {}
+                for r in new_stat_rows:
+                    b = int(r["batch"])
+                    new_rows_by_batch[b] = new_rows_by_batch.get(
+                        b, 0
+                    ) + int(r["n_rows"])
+                # refreshed partition content = untouched files'
+                # pre-erasure rows + the rewritten files' fresh rows,
+                # rebuilt driver-side (metadata volumes) so the
+                # overwrite never reads the path it writes
+                keep_old = [
+                    r
+                    for r in pre_rows
+                    if int(r["batch"]) in set(with_manifest)
+                    and r["file"] not in cand_uri_set
+                ]
+                (
+                    spark.createDataFrame(
+                        keep_old + new_stat_rows, man.schema
+                    )
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("batch")
+                    .parquet(manifest_path)
+                )
+                for b in with_manifest:
+                    kept_counts[b] = (
+                        before_counts[b]
+                        - cand_rows_by_batch.get(b, 0)
+                        + new_rows_by_batch.get(b, 0)
+                    )
+            # this group's work (incl. the manifest refresh) is complete
+            fs.delete(hpath(commit_path), False)
+    finally:
+        # released on every path: a refused NULL key or a failed swap
+        # must not pin the key list for the rest of the session
+        k.unpersist()
     if bloom_store_path is not None and affected:
         _refresh_bloom_store(
             spark, sink_path, bloom_store_path, affected, kept_counts
         )
     if groups:
-        # the whole delete (every group + store refresh) is complete:
-        # retire the resumability journal
-        fs.delete(hpath(intent_path), False)
-        fs.delete(hpath(keys_path), True)
+        # the whole delete (every group + store refresh) is complete
+        _retire_erase_journal(spark, sink_path)
     rows = [
         (
             b,
@@ -881,8 +890,6 @@ def erase_rows(
         "batch BIGINT, rewritten BOOLEAN, rows_before BIGINT, "
         "rows_erased BIGINT, rows_after BIGINT",
     )
-
-
 
 
 def _load_store_geometry(
@@ -975,38 +982,21 @@ def _manifest_damage(
     spark: SparkSession, sink_path: str, man: DataFrame
 ) -> DataFrame:
     """One row per DAMAGED file: ``(batch, fname, file, damage)`` with
-    ``damage`` ∈ stale / unenveloped / mismatch — a full-outer
-    ENGINE-side join of the on-disk per-file row counts against the
-    manifest's recorded ones, on (batch, basename), the audit's
-    identity key (one multi-partition write reuses a task's file name
-    across batch dirs, so basenames are only unique within a batch).
-    ``file`` is the disk-side URI (NULL for stale rows — dropping them
-    needs no URI). This frame is what ``repair_manifest`` collects, so
-    the driver holds rows ∝ damage, never the file inventory."""
-    src = spark.read.option("basePath", sink_path).parquet(sink_path)
-    disk = (
-        src.groupBy(
-            F.input_file_name().alias("file"),
-            F.col("batch").cast("long").alias("batch"),
-        )
-        .agg(F.count(F.lit(1)).alias("disk_rows"))
-        .withColumn("fname", F.element_at(F.split("file", "/"), -1))
-    )
-    rec = man.select(
-        F.col("batch").cast("long").alias("batch"),
-        F.element_at(F.split("file", "/"), -1).alias("fname"),
-        F.col("n_rows").alias("man_rows"),
-    )
-    j = disk.select("batch", "fname", "file", "disk_rows").join(
-        rec, ["batch", "fname"], "full_outer"
-    )
-    return j.select(
+    ``damage`` ∈ stale / unenveloped / mismatch — the audit's own
+    disk-vs-manifest join (``streaming.audit._disk_vs_manifest``, on
+    (batch, basename)) filtered to its damaged rows. ``file`` is the
+    disk-side URI (NULL for stale rows — dropping them needs no URI).
+    This frame is what ``repair_manifest`` collects, so the driver
+    holds rows ∝ damage, never the file inventory."""
+    return _disk_vs_manifest(spark, sink_path, man).select(
         "batch",
         "fname",
         "file",
         F.when(F.col("disk_rows").isNull(), F.lit("stale"))
-        .when(F.col("man_rows").isNull(), F.lit("unenveloped"))
-        .when(F.col("disk_rows") != F.col("man_rows"), F.lit("mismatch"))
+        .when(F.col("manifest_rows").isNull(), F.lit("unenveloped"))
+        .when(
+            F.col("disk_rows") != F.col("manifest_rows"), F.lit("mismatch")
+        )
         .alias("damage"),
     ).filter(F.col("damage").isNotNull())
 
@@ -1054,25 +1044,19 @@ def repair_manifest(
     Returns one row: ``(n_stale_rows_dropped, n_files_reenveloped,
     n_count_refreshed, n_batches_repaired, consistent_after)`` where
     ``consistent_after`` re-runs the audit's criteria post-repair."""
-    from ..streaming.audit import manifest_consistency_audit
-
+    report = (
+        "n_stale_rows_dropped BIGINT, n_files_reenveloped BIGINT, "
+        "n_count_refreshed BIGINT, n_batches_repaired BIGINT, "
+        "consistent_after BOOLEAN"
+    )
     _require_dir(spark, manifest_path, "repair_manifest: manifest")
     if not _has_parquet(spark, manifest_path):
-        # a parquet-less SINK is out-of-band damage (the tool's own
-        # lifecycle always leaves zero-row schema files) — report it as
-        # empty rather than aborting the repair on an unreadable read
-        sink_empty = not _has_parquet(spark, sink_path) or (
-            spark.read.parquet(sink_path).limit(1).count() == 0
-        )
+        # no recorded schema to re-envelope into: report, don't invent
         return spark.createDataFrame(
-            [(0, 0, 0, 0, sink_empty)],
-            "n_stale_rows_dropped BIGINT, n_files_reenveloped BIGINT, "
-            "n_count_refreshed BIGINT, n_batches_repaired BIGINT, "
-            "consistent_after BOOLEAN",
+            [(0, 0, 0, 0, _audit_ok(spark, sink_path, manifest_path))],
+            report,
         )
     man = spark.read.parquet(manifest_path)
-    man_types = {f.name: f.dataType for f in man.schema.fields}
-    stat_cols = [c[len("min_") :] for c in man.columns if c.startswith("min_")]
     dmg_rows = _manifest_damage(spark, sink_path, man).collect()
     stale = [r for r in dmg_rows if r["damage"] == "stale"]
     unenv = [r for r in dmg_rows if r["damage"] == "unenveloped"]
@@ -1089,9 +1073,7 @@ def repair_manifest(
             sch = spark.read.parquet(r["file"]).schema
             sig = tuple((f.name, f.dataType.simpleString()) for f in sch)
             groups.setdefault(sig, []).append(r["file"])
-        fresh_rows = _fresh_stat_rows(
-            spark, sink_path, groups, stat_cols, man_types, man.columns
-        )
+        fresh_rows = _fresh_stat_rows(spark, sink_path, groups, man.schema)
     if affected:
         fs, hpath = _fs(spark, manifest_path)
         # the damaged batches' SURVIVING rows, via anti-join against
@@ -1130,15 +1112,9 @@ def repair_manifest(
         for b in affected:
             if b not in refreshed_batches:
                 fs.delete(hpath(f"{manifest_path}/batch={b}"), True)
-    ok = bool(
-        manifest_consistency_audit(spark, sink_path, manifest_path)
-        .collect()[0]["consistent"]
-    )
+    ok = _audit_ok(spark, sink_path, manifest_path)
     return spark.createDataFrame(
-        [(len(stale), len(unenv), len(mismatch), len(affected), ok)],
-        "n_stale_rows_dropped BIGINT, n_files_reenveloped BIGINT, "
-        "n_count_refreshed BIGINT, n_batches_repaired BIGINT, "
-        "consistent_after BOOLEAN",
+        [(len(stale), len(unenv), len(mismatch), len(affected), ok)], report
     )
 
 
@@ -1158,8 +1134,6 @@ def _audit_ok(
         return not _has_parquet(spark, sink_path) or (
             spark.read.parquet(sink_path).limit(1).count() == 0
         )
-    from ..streaming.audit import manifest_consistency_audit
-
     return bool(
         manifest_consistency_audit(spark, sink_path, manifest_path)
         .collect()[0]["consistent"]
@@ -1177,14 +1151,16 @@ def repair_erasure(
     1. **Roll the current group's swap forward.** ``.erase_commit.json``
        present means the staged survivors are durable (the marker is
        written only after the staging write commits — deliberately not
-       the writer's ``_SUCCESS`` file, which clusters can disable):
-       finish retiring every planned candidate file still in its
-       partition, land every staged survivor file not yet landed, and
-       land the zero-row schema-bearing file for a batch the commit
-       shows fully emptied. Forward is the only acceptable direction
-       once staging is durable — the erasure was promised. A staging
-       tree WITHOUT the commit marker is torn (crash inside the
-       staging write, sink untouched) and is discarded.
+       the writer's ``_SUCCESS`` file, which clusters can disable), and
+       repair runs the plan through ``_roll_forward`` — the very swap
+       ``erase_rows`` runs, which skips every step the crashed call
+       already did: retire the planned candidates still present, land
+       the staged survivors not yet landed, land the zero-row
+       schema-bearing file of a batch the plan shows fully emptied.
+       Forward is the only acceptable direction once staging is
+       durable — the erasure was promised. A staging tree WITHOUT the
+       commit marker is torn (crash inside the staging write, sink
+       untouched) and is discarded.
     2. **Reconcile the manifest** via :func:`repair_manifest` (retired
        files' rows dropped, landed files enveloped).
     3. **RESUME the erasure.** The resumability journal
@@ -1220,93 +1196,27 @@ def repair_erasure(
     n_stale_rows_dropped, n_files_reenveloped, erasure_resumed,
     n_rows_erased_on_resume, consistent_after)``."""
     fs, hpath = _fs(spark, sink_path)
-    staging = f"{sink_path}/.erase_staging"
-    trash = f"{sink_path}/.erase_trash"
-    commit_path = f"{sink_path}/.erase_commit.json"
-    keys_path = f"{sink_path}/.erase_keys"
-    intent_path = f"{sink_path}/.erase_intent.json"
-    empty_tmpl = f"{sink_path}/.erase_empty"
+    commit_path = f"{sink_path}/{_COMMIT}"
+    intent_path = f"{sink_path}/{_INTENT}"
+    keys_path = f"{sink_path}/{_KEYS}"
     has_commit = fs.exists(hpath(commit_path))
     has_intent = fs.exists(hpath(intent_path))
-    found = bool(
-        has_commit
-        or has_intent
-        or fs.exists(hpath(staging))
-        or fs.exists(hpath(trash))
-        or fs.exists(hpath(keys_path))
-        or fs.exists(hpath(empty_tmpl))
-    )
-    retired = landed = emptied_n = 0
-    rolled_forward = False
+    found = any(fs.exists(hpath(f"{sink_path}/{n}")) for n in _ERASE_RESIDUE)
+    landed: dict[int, list[str]] = {}
+    emptied: list[int] = []
+    retired = 0
     if has_commit:
-        rolled_forward = True
-        plan = json.loads(_read_text(spark, commit_path))
-        for b_str, info in sorted(plan["batches"].items(), key=lambda kv: int(kv[0])):
-            b = int(b_str)
-            part = f"{sink_path}/batch={b}"
-            fs.mkdirs(hpath(f"{trash}/batch={b}"))
-            for u in info["files"]:
-                name = u.rsplit("/", 1)[1]
-                if fs.exists(hpath(u)):
-                    if not fs.rename(
-                        hpath(u), hpath(f"{trash}/batch={b}/{name}")
-                    ):
-                        raise IOError(
-                            f"erase repair failed: could not retire {u}"
-                        )
-                    retired += 1
-            st_dir = hpath(f"{staging}/batch={b}")
-            if fs.exists(st_dir):
-                for st in fs.listStatus(st_dir):
-                    name = st.getPath().getName()
-                    if not name.startswith("part-"):
-                        continue
-                    if not fs.rename(st.getPath(), hpath(f"{part}/{name}")):
-                        raise IOError(
-                            f"erase repair failed: could not land {name}"
-                        )
-                    landed += 1
-            if info["n_untouched"] == 0:
-                fs.mkdirs(hpath(part))
-                has_files = any(
-                    st.getPath().getName().startswith("part-")
-                    for st in fs.listStatus(hpath(part))
-                )
-                if not has_files:
-                    # the fully-emptied branch: schema from a retired
-                    # file of this batch (all candidates are in trash
-                    # by now)
-                    src_file = next(
-                        st.getPath().toString()
-                        for st in fs.listStatus(hpath(f"{trash}/batch={b}"))
-                        if st.getPath().getName().startswith("part-")
-                    )
-                    fs.delete(hpath(empty_tmpl), True)
-                    (
-                        spark.read.parquet(src_file)
-                        .limit(0)
-                        .coalesce(1)
-                        .write.parquet(empty_tmpl)
-                    )
-                    ef = next(
-                        st.getPath()
-                        for st in fs.listStatus(hpath(empty_tmpl))
-                        if st.getPath().getName().startswith("part-")
-                    )
-                    if not fs.rename(ef, hpath(f"{part}/{ef.getName()}")):
-                        raise IOError(
-                            "erase repair failed: could not land the "
-                            f"zero-row file for batch {b}"
-                        )
-                    fs.delete(hpath(f"{manifest_path}/batch={b}"), True)
-                    emptied_n += 1
+        landed, emptied, retired = _roll_forward(
+            spark,
+            sink_path,
+            manifest_path,
+            json.loads(_read_text(spark, commit_path)),
+        )
     # residue cleanup (either direction; a staging tree without the
     # commit marker is torn — the sink was never touched before the
     # marker, so discarding it is safe)
-    fs.delete(hpath(staging), True)
-    fs.delete(hpath(trash), True)
-    fs.delete(hpath(commit_path), False)
-    fs.delete(hpath(empty_tmpl), True)
+    for n in (_STAGING, _TRASH, _COMMIT, _EMPTY):
+        fs.delete(hpath(f"{sink_path}/{n}"), True)
     mrep = repair_manifest(spark, sink_path, manifest_path).collect()[0]
     consistent = bool(mrep["consistent_after"])
     resumed = False
@@ -1364,8 +1274,7 @@ def repair_erasure(
             # every repair re-running a no-op, a permanent refusal loop
             # escapable only by force. The resume RAN to completion, so
             # the delete is finished regardless of candidate count.
-            fs.delete(hpath(intent_path), False)
-            fs.delete(hpath(keys_path), True)
+            _retire_erase_journal(spark, sink_path)
             consistent = _audit_ok(spark, sink_path, manifest_path)
         else:
             # the crashed erasure emptied EVERY batch (whole-table
@@ -1381,22 +1290,20 @@ def repair_erasure(
             # repair, so the inconsistency stays loud.
             consistent = _audit_ok(spark, sink_path, manifest_path)
             if consistent:
-                fs.delete(hpath(intent_path), False)
-                fs.delete(hpath(keys_path), True)
+                _retire_erase_journal(spark, sink_path)
         resumed = True
     else:
         # crash before the journal finished writing: nothing ran, the
         # leftovers are inert
-        fs.delete(hpath(intent_path), False)
-        fs.delete(hpath(keys_path), True)
+        _retire_erase_journal(spark, sink_path)
     return spark.createDataFrame(
         [
             (
                 found,
-                rolled_forward,
+                has_commit,
                 retired,
-                landed,
-                emptied_n,
+                sum(map(len, landed.values())),
+                len(emptied),
                 int(mrep["n_stale_rows_dropped"]),
                 int(mrep["n_files_reenveloped"]),
                 resumed,
@@ -1436,12 +1343,9 @@ def vacuum_maintenance(
     operator decision, never a default). Returns one row:
     ``(n_paths_removed, n_files_removed)``."""
     fs, hpath = _fs(spark, sink_path)
-    staging = f"{sink_path}/.erase_staging"
-    commit_path = f"{sink_path}/.erase_commit.json"
-    intent_path = f"{sink_path}/.erase_intent.json"
-    keys_path = f"{sink_path}/.erase_keys"
     if not force and (
-        fs.exists(hpath(commit_path)) or fs.exists(hpath(intent_path))
+        fs.exists(hpath(f"{sink_path}/{_COMMIT}"))
+        or fs.exists(hpath(f"{sink_path}/{_INTENT}"))
     ):
         raise ValueError(
             "vacuum_maintenance: a crashed erasure left its journal "
@@ -1451,8 +1355,7 @@ def vacuum_maintenance(
             "unfinished compliance delete), or pass force=True to "
             "accept the loss"
         )
-    residue = [staging, f"{sink_path}/.erase_trash", commit_path,
-               intent_path, keys_path, f"{sink_path}/.erase_empty"]
+    residue = [f"{sink_path}/{n}" for n in _ERASE_RESIDUE]
     for st in fs.listStatus(hpath(sink_path)):
         name = st.getPath().getName()
         if name.startswith(".compact_staging_batch=") or name.startswith(

@@ -119,18 +119,53 @@ def exactly_once_audit(
     )
 
 
+def _disk_vs_manifest(
+    spark: SparkSession, sink_path: str, man: DataFrame
+) -> DataFrame:
+    """What is on disk against what the manifest ``man`` records, one
+    row per (batch, basename): a full-outer join of every parquet
+    file's actual row count (an ``input_file_name`` rollup whose scan
+    reads zero data columns) with the manifest's ``n_rows``. Columns:
+    ``batch``, ``fname``, ``file`` (the disk URI, NULL for a manifest
+    row whose file is gone), ``disk_rows`` and ``manifest_rows`` (NULL
+    on the side that lacks the file). The audit aggregates it;
+    ``retention.repair_manifest`` filters it. The disk side is grouped
+    on the join keys themselves, so its shuffle also partitions the
+    join (grouped by ``file``, the join would shuffle it again)."""
+    base = lambda c: F.element_at(F.split(c, "/"), -1)  # noqa: E731
+    disk = (
+        spark.read.option("basePath", sink_path)
+        .parquet(sink_path)
+        .select("batch", F.input_file_name().alias("file"))
+        .groupBy(
+            F.col("batch").cast("long").alias("batch"),
+            base(F.col("file")).alias("fname"),
+        )
+        .agg(
+            F.max("file").alias("file"),
+            F.count(F.lit(1)).alias("disk_rows"),
+        )
+    )
+    rec = man.select(
+        F.col("batch").cast("long").alias("batch"),
+        base(F.col("file")).alias("fname"),
+        F.col("n_rows").alias("manifest_rows"),
+    )
+    return disk.join(rec, ["batch", "fname"], "full_outer")
+
+
 def manifest_consistency_audit(
     spark: SparkSession, sink_path: str, manifest_path: str
 ) -> DataFrame:
     """One-row filesystem audit of a manifest-maintained sink
     (:func:`streaming.incremental.start_append_with_manifest`).
 
-    Joins what is ON DISK (every parquet file under ``sink_path``, with
-    its actual row count, via an ``input_file_name`` rollup whose scan
-    reads zero data columns) against what the MANIFEST claims (one row
-    per enveloped file with its recorded ``n_rows``), full-outer on the
-    file name (basename — writer UUIDs make it unique; comparing full
-    URIs would false-alarm on scheme differences).
+    Aggregates :func:`_disk_vs_manifest`: what is ON DISK (every
+    parquet file under ``sink_path`` with its actual row count) against
+    what the MANIFEST claims (one row per enveloped file with its
+    recorded ``n_rows``), full-outer on the file name (basename —
+    writer UUIDs make it unique; comparing full URIs would false-alarm
+    on scheme differences).
 
     Output: ``n_data_files, n_manifest_files,``
     ``n_stale_manifest_rows`` (manifest points at a file no longer on
@@ -148,22 +183,9 @@ def manifest_consistency_audit(
     in each), so basenames are only unique WITHIN a batch directory —
     a basename-only join would cross-match those twins and false-alarm
     row mismatches on a perfectly consistent sink (r11)."""
-    base = lambda c: F.element_at(F.split(c, "/"), -1)  # noqa: E731
-    disk = (
-        spark.read.option("basePath", sink_path)
-        .parquet(sink_path)
-        .groupBy(
-            F.col("batch").cast("long").alias("batch"),
-            base(F.input_file_name()).alias("fname"),
-        )
-        .agg(F.count(F.lit(1)).alias("disk_rows"))
+    j = _disk_vs_manifest(
+        spark, sink_path, spark.read.parquet(manifest_path)
     )
-    man = spark.read.parquet(manifest_path).select(
-        F.col("batch").cast("long").alias("batch"),
-        base(F.col("file")).alias("fname"),
-        F.col("n_rows").alias("manifest_rows"),
-    )
-    j = disk.join(man, ["batch", "fname"], "full_outer")
     rep = j.agg(
         F.sum(F.col("disk_rows").isNotNull().cast("long")).alias("n_data_files"),
         F.sum(F.col("manifest_rows").isNotNull().cast("long")).alias(

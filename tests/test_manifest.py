@@ -86,3 +86,85 @@ def test_zero_row_manifest_raises_clear_error(spark):
     )
     with pytest.raises(ValueError, match="manifest has no files"):
         read_pruned(spark, empty, "id", 0, 10)
+
+
+def test_every_manifest_writer_lands_one_row_layout(spark, tmp_path):
+    """The manifests written by the whole-sink landing, the per-batch
+    writer, compaction's refresh and erasure's refresh read back with
+    one schema: ``collect_file_stats``' columns plus ``batch``."""
+    from superstore_data_pipeline_analytics_dashboard__spark.plans.catalog_queries import (
+        _land_partitioned,
+    )
+    from superstore_data_pipeline_analytics_dashboard__spark.sources.formats import (
+        compact_batch,
+    )
+    from superstore_data_pipeline_analytics_dashboard__spark.sources.manifest import (
+        write_batch_stats,
+    )
+    from superstore_data_pipeline_analytics_dashboard__spark.sources.retention import (
+        erase_rows,
+    )
+
+    cols = ["id", "v"]
+    df = spark.range(300).select(
+        "id",
+        (F.col("id") % 7).alias("v"),
+        (F.col("id") / 100).cast("int").alias("batch"),
+    )
+    a_sink, a_man = str(tmp_path / "a_sink"), str(tmp_path / "a_man")
+    _land_partitioned(spark, df, a_sink, a_man, cols)
+    b_sink, b_man = str(tmp_path / "b_sink"), str(tmp_path / "b_man")
+    for b in range(3):
+        df.filter(F.col("batch") == b).drop("batch").write.parquet(
+            f"{b_sink}/batch={b}"
+        )
+        write_batch_stats(spark, b_sink, b_man, b, cols)
+
+    def partition(man, b):
+        return spark.read.option("basePath", man).parquet(f"{man}/batch={b}")
+
+    landed = {
+        "_land_partitioned": partition(a_man, 0).schema,
+        "write_batch_stats": partition(b_man, 1).schema,
+    }
+    compact_batch(spark, b_sink, b_man, 0)
+    landed["compact_batch"] = partition(b_man, 0).schema
+    erase_rows(
+        spark, a_sink, a_man, "id", spark.createDataFrame([(150,)], "id long")
+    )
+    landed["erase_rows"] = partition(a_man, 1).schema
+    assert len({s.json() for s in landed.values()}) == 1, landed
+    ref = collect_file_stats(spark, f"{b_sink}/batch=2", cols).withColumn(
+        "batch", F.lit(2)
+    )
+    assert [(f.name, f.dataType) for f in landed["erase_rows"]] == [
+        (f.name, f.dataType) for f in ref.schema
+    ]
+
+
+def test_input_file_name_in_two_functions():
+    """The per-file rollup (``file``, ``n_rows``, ``min_``/``max_``) is
+    defined once, in ``manifest.file_stats``, which every manifest
+    writer goes through; the only other file-grain scan is the
+    disk-vs-manifest join the audit and ``repair_manifest`` share."""
+    import ast
+    import pathlib
+
+    import superstore_data_pipeline_analytics_dashboard__spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    callers = set()
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        for fn in ast.walk(tree):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            if any(
+                isinstance(n, ast.Attribute) and n.attr == "input_file_name"
+                for n in ast.walk(fn)
+            ):
+                callers.add(f"{path.relative_to(root)}:{fn.name}")
+    assert callers == {
+        "sources/manifest.py:file_stats",
+        "streaming/audit.py:_disk_vs_manifest",
+    }

@@ -1615,3 +1615,109 @@ def test_audit_ignores_journal_residue_parquet(spark, tmp_path):
     # a visible part- file outside hidden dirs still counts
     spark.range(3).coalesce(1).write.parquet(f"{sink}/batch=0")
     assert R._has_parquet(spark, sink)
+
+
+# ---- crash-point sweep: every rename of the erasure swap is a crash
+# point, and repair_erasure must converge each one to the crash-free
+# end state.
+
+
+class _CrashingFS:
+    """A FileSystem proxy that counts ``rename`` calls in ``state["n"]``
+    and raises IOError on the one numbered ``state["crash_at"]``
+    (0-based; ``None`` never raises). Every other call goes through."""
+
+    def __init__(self, fs, state):
+        self._fs, self._state = fs, state
+
+    def rename(self, src, dst):
+        n = self._state["n"]
+        self._state["n"] = n + 1
+        if n == self._state["crash_at"]:
+            raise IOError(f"injected crash at rename {n}")
+        return self._fs.rename(src, dst)
+
+    def __getattr__(self, name):
+        return getattr(self._fs, name)
+
+
+def _batch_rows(spark, man):
+    return {
+        int(r["batch"]): int(r["n"])
+        for r in spark.read.parquet(man)
+        .groupBy("batch")
+        .agg(F.sum("n_rows").alias("n"))
+        .collect()
+    }
+
+
+def test_erase_crash_at_every_rename_repairs_to_twin(
+    spark, tmp_path, monkeypatch
+):
+    """The swap is one roll-forward that erase_rows runs and
+    repair_erasure re-runs, so a crash at ANY rename of it must repair
+    to the state an uncrashed erasure leaves: same ids, same per-batch
+    manifest rows, no journal residue — and the failed call must not
+    leave its key list persisted. The keys empty batch 0 (the zero-row
+    landing) and hit batch 1 partly (retire + land). Crash point k
+    runs on a fresh copy of the same sink; the first k that no rename
+    reaches is the uncrashed twin every repaired state must equal."""
+    import itertools
+
+    real_fs = R._fs
+    state = {"n": 0, "crash_at": None}
+
+    def crashing_fs(spark, path):
+        fs, hpath = real_fs(spark, path)
+        return _CrashingFS(fs, state), hpath
+
+    doomed = _keys(spark, [*range(0, 100), 110, 120, 130])
+    work, pristine = tmp_path / "work", tmp_path / "pristine"
+    sink, man = _build(spark, work)
+    _shutil.copytree(work, pristine)
+    repaired = []
+    for k in itertools.count():
+        # the manifest holds absolute file URIs: restore the same paths
+        _shutil.rmtree(work)
+        _shutil.copytree(pristine, work)
+        spark.catalog.clearCache()
+        state.update(n=0, crash_at=k)
+        monkeypatch.setattr(R, "_fs", crashing_fs)
+        try:
+            R.erase_rows(spark, sink, man, "id", doomed)
+        except IOError as e:
+            assert f"rename {k}" in str(e)
+        else:
+            break  # no k-th rename: this run is the uncrashed twin
+        finally:
+            monkeypatch.setattr(R, "_fs", real_fs)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        rep = R.repair_erasure(spark, sink, man).collect()[0]
+        assert rep["rolled_forward"] and rep["consistent_after"], k
+        assert not [n for n in _os.listdir(sink) if n.startswith(".erase")]
+        repaired.append(
+            (k, _ids(spark.read.parquet(sink)), _batch_rows(spark, man))
+        )
+    # retire + zero-row landing in batch 0, retire + land in batch 1
+    assert k == state["n"] >= 4
+    twin = (_ids(spark.read.parquet(sink)), _batch_rows(spark, man))
+    assert twin == (sorted(set(range(100, 250)) - {110, 120, 130}), {1: 147})
+    for k, ids, rows in repaired:
+        assert (ids, rows) == twin, k
+
+
+def test_only_the_roll_forward_renames():
+    """One swap: in retention.py, only _roll_forward moves files (into
+    the trash, out of staging, the zero-row landing)."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(R))
+    renamers = {
+        fn.name
+        for fn in tree.body
+        if isinstance(fn, ast.FunctionDef)
+        for node in ast.walk(fn)
+        if isinstance(node, ast.Attribute) and node.attr == "rename"
+    }
+    assert renamers == {"_roll_forward"}
