@@ -15973,7 +15973,7 @@ def q270_bloom_point_prune(spark: SparkSession, sf: str) -> DataFrame:
             spark, sink, "o_orderkey", n_bits=n_bits
         )
         cand = bloom_candidates(
-            blooms, keys, "o_orderkey", n_bits=n_bits
+            blooms, keys, "o_orderkey"
         ).persist()  # feeds the miss check AND the candidate count
         n_keys, n_env, n_hit, n_missed, n_bloom = _fold_scalars(
             keys.groupBy().count(),
@@ -16143,7 +16143,6 @@ def q272_bloomed_erasure(spark: SparkSession, sf: str) -> DataFrame:
                 "o_orderkey",
                 doomed,
                 blooms={"o_orderkey": blooms},
-                bloom_n_bits=n_bits,
             )
         )
         n_hit = (
@@ -16397,7 +16396,6 @@ def q275_streamed_bloom_chain(spark: SparkSession, sf: str) -> DataFrame:
                 "o_orderkey",
                 doomed,
                 blooms={"o_orderkey": store},
-                bloom_n_bits=n_bits,
             )
         )
         # point read through the SAME store, for two surviving keys
@@ -16412,7 +16410,7 @@ def q275_streamed_bloom_chain(spark: SparkSession, sf: str) -> DataFrame:
             .collect()
         ]
         n_point = read_bloom_pruned(
-            spark, sink, store, "o_orderkey", probe, n_bits=n_bits
+            spark, sink, store, "o_orderkey", probe
         ).count()
         return spark.createDataFrame(
             [
@@ -16577,6 +16575,9 @@ FROM c
 
 def q277_erasure_crash_repair(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.retention import (
+        _COMMIT,
+        _STAGING,
+        _TRASH,
         _fs,
         _write_erase_journal,
         _write_text,
@@ -16616,21 +16617,19 @@ def q277_erasure_crash_repair(spark: SparkSession, sf: str) -> DataFrame:
         ]
         csrc = spark.read.option("basePath", sink).parquet(*cand)
         kept = csrc.join(F.broadcast(doomed), "o_orderkey", "left_anti")
-        kept.write.partitionBy("batch").parquet(f"{sink}/.erase_staging")
+        kept.write.partitionBy("batch").parquet(f"{sink}/{_STAGING}")
         _write_text(
             spark,
-            f"{sink}/.erase_commit.json",
+            f"{sink}/{_COMMIT}",
             json.dumps(
                 {"batches": {"1": {"files": cand, "n_untouched": 0}}}
             ),
         )
         fs, hpath = _fs(spark, sink)
-        fs.mkdirs(hpath(f"{sink}/.erase_trash/batch=1"))
+        fs.mkdirs(hpath(f"{sink}/{_TRASH}/batch=1"))
         for u in cand:
             name = u.rsplit("/", 1)[1]
-            fs.rename(
-                hpath(u), hpath(f"{sink}/.erase_trash/batch=1/{name}")
-            )
+            fs.rename(hpath(u), hpath(f"{sink}/{_TRASH}/batch=1/{name}"))
         pre_ok = bool(
             manifest_consistency_audit(spark, sink, man).collect()[0][
                 "consistent"
@@ -16924,7 +16923,12 @@ SELECT (SELECT CAST(count(DISTINCT batch) AS BIGINT) FROM b) AS n_batches,
 def q280_compaction_crash_chain(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.formats import repair_compaction
     from ..sources.manifest import read_pruned, write_batch_stats
-    from ..sources.retention import _fs, vacuum_maintenance
+    from ..sources.retention import (
+        _COMPACT_STAGING,
+        _COMPACT_TRASH,
+        _fs,
+        vacuum_maintenance,
+    )
     from ..sources.snapshots import commit_snapshot, snapshot_drift_audit
 
     with _scratch("q280_cchain_") as base:
@@ -16948,11 +16952,10 @@ def q280_compaction_crash_chain(spark: SparkSession, sf: str) -> DataFrame:
         # mid-swap crash state: durable compacted staging, live
         # partition retired to the hidden trash, nothing landed
         spark.read.parquet(f"{sink}/batch=0").coalesce(1).write.parquet(
-            f"{sink}/.compact_staging_batch=0"
+            f"{sink}/{_COMPACT_STAGING}0"
         )
         fs.rename(
-            hpath(f"{sink}/batch=0"),
-            hpath(f"{sink}/.compact_trash_batch=0"),
+            hpath(f"{sink}/batch=0"), hpath(f"{sink}/{_COMPACT_TRASH}0")
         )
         try:
             vacuum_maintenance(spark, sink)
@@ -17535,7 +17538,13 @@ def q286_compaction_marker_repair(
 ) -> DataFrame:
     from ..sources.formats import repair_compaction
     from ..sources.manifest import read_pruned, write_batch_stats
-    from ..sources.retention import _fs, _write_text
+    from ..sources.retention import (
+        _COMPACT_COMMIT,
+        _COMPACT_STAGING,
+        _COMPACT_TRASH,
+        _fs,
+        _write_text,
+    )
 
     with _scratch("q286_marker_") as base:
         sink, man = f"{base}/sink", f"{base}/man"
@@ -17552,19 +17561,15 @@ def q286_compaction_marker_repair(
         # mid-swap crash on a _SUCCESS-less cluster: durable staging
         # with its _SUCCESS removed, compact_batch's own marker
         # present, partition retired to the hidden trash
-        staging = f"{sink}/.compact_staging_batch=0"
+        staging = f"{sink}/{_COMPACT_STAGING}0"
         spark.read.parquet(f"{sink}/batch=0").coalesce(1).write.parquet(
             staging
         )
         fs.delete(hpath(f"{staging}/_SUCCESS"), False)
-        _write_text(
-            spark,
-            f"{sink}/.compact_commit_batch=0.json",
-            json.dumps({"batch": 0}),
-        )
+        commit = f"{sink}/{_COMPACT_COMMIT}0.json"
+        _write_text(spark, commit, json.dumps({"batch": 0}))
         fs.rename(
-            hpath(f"{sink}/batch=0"),
-            hpath(f"{sink}/.compact_trash_batch=0"),
+            hpath(f"{sink}/batch=0"), hpath(f"{sink}/{_COMPACT_TRASH}0")
         )
         rep = repair_compaction(spark, sink, man, 0).collect()[0]
         files_after = sum(
@@ -17572,9 +17577,7 @@ def q286_compaction_marker_repair(
             for st in fs.listStatus(hpath(f"{sink}/batch=0"))
             if st.getPath().getName().startswith("part-")
         )
-        marker_cleaned = not fs.exists(
-            hpath(f"{sink}/.compact_commit_batch=0.json")
-        )
+        marker_cleaned = not fs.exists(hpath(commit))
         n_rows, lo = _fold_scalars(
             spark.read.parquet(f"{sink}/batch=0").groupBy().count(),
             orders.agg(F.min("o_orderkey")),

@@ -40,22 +40,6 @@ from ..sources.messy_csv import read_superstore_csv
 
 # -------------------------------------------------------------- staging
 
-_TRIM_COLS = {
-    "OrderID": "Order ID",
-    "ShipMode": "Ship Mode",
-    "CustomerID": "Customer ID",
-    "CustomerName": "Customer Name",
-    "Segment": "Segment",
-    "Country": "Country",
-    "City": "City",
-    "State": "State",
-    "Region": "Region",
-    "ProductID": "Product ID",
-    "Category": "Category",
-    "SubCategory": "Sub-Category",
-    "ProductName": "Product Name",
-}
-
 
 def stage_typed(raw: DataFrame) -> DataFrame:
     """stg.Superstore_Typed (SQLproject1.sql:136-196): trim/NULLIF the 13

@@ -29,9 +29,13 @@ false-negatives: the worst failure mode for a compliance delete),
 ``n_bits``/``n_hashes`` (a probe hashed under a different geometry
 also silently false-negatives), and ``n_keys`` (the batch's non-NULL
 key count at collection time — what lets ``bloom_store_audit`` detect
-a summary that no longer describes its batch). ``bloom_candidates``
-refuses a probe that contradicts the recorded metadata instead of
-relying on caller discipline.
+a summary that no longer describes its batch). The recorded geometry
+is the ONLY geometry: probes (``bloom_candidates``,
+``read_bloom_pruned``, ``retention.erase_rows(blooms=)``) take no
+geometry options and hash each key under what the rows record; they
+refuse a frame without the metadata columns, a frame whose rows for
+the probed column record more than one geometry, and a probe key of a
+type other than the collected one.
 
 Scale shape: collection is ONE narrow scan of the key column(s) —
 multi-column collection explodes a per-row struct array so k columns
@@ -44,13 +48,15 @@ batch summaries against the BROADCAST exploded key positions
 count per (batch, key): linear in total summary size, never
 #batches × #keys pairwise array scans.
 
-Sizing: false-positive rate per key per batch is roughly
-``(n_distinct*k/n_bits)^k``; keep ``n_bits`` an order of magnitude
+Sizing: collection hashes every key ``_N_HASHES`` (k = 3) times; the
+false-positive rate per key per batch is roughly
+``(n_distinct*k/n_bits)^k``, so keep ``n_bits`` an order of magnitude
 above ``n_distinct*k`` per batch. When the caller passes no
 ``n_bits``, ``collect_batch_blooms`` derives one per column from a
 measured approximate NDV (next power of two ≥ 16·ndv·k, floor 2^12 —
 fp ≈ (1/16)^k ≈ 2.4e-4 at k=3), so skipping the sizing paragraph no
-longer buys an honest-but-useless saturated store. A saturated bloom
+longer buys an honest-but-useless saturated store; the streaming
+appender defaults to ``_N_BITS`` (2^18). A saturated bloom
 (n_bits too small) never lies about presence — it just prunes
 nothing, the same honest degradation the envelope tier has on random
 layouts; ``bloom_store_audit`` reports fill so saturation is visible.
@@ -81,11 +87,12 @@ __all__ = [
 
 #: metadata columns every summary row carries (see module docstring)
 _META_COLS = ("key_col", "key_type", "n_bits", "n_hashes", "n_keys")
+#: the default geometry: the streaming appender's ``n_bits`` and the
+#: hash count every collection uses
+_N_BITS, _N_HASHES = 1 << 18, 3
 
 
-def bloom_positions(
-    col: Column | str, n_bits: int = 1 << 18, n_hashes: int = 3
-) -> Column:
+def bloom_positions(col: Column | str, n_bits: int, n_hashes: int) -> Column:
     """Array of the ``n_hashes`` (deduplicated) bit positions for a key
     — Kirsch-Mitzenmacher double hashing, overflow-safe under ANSI mode
     (both hashes are reduced mod ``n_bits`` before the small multiply-
@@ -111,13 +118,15 @@ def bloom_summary_rows(
     df: DataFrame,
     cols: list[str],
     n_bits: dict[str, int] | int,
-    n_hashes: int = 3,
+    n_hashes: int = _N_HASHES,
     group_cols: list[str] | None = None,
 ) -> DataFrame:
     """Self-describing summary rows for every column in ``cols`` from
     ONE scan of ``df`` — the shared core of batch-side
-    ``collect_batch_blooms`` and the streaming writer's land-time
-    maintenance (``streaming.incremental.start_append_with_manifest``).
+    ``collect_batch_blooms``, the streaming writer's land-time
+    maintenance (``streaming.incremental.start_append_with_manifest``)
+    and the store's re-collection (``_recollect_store``, which passes
+    whatever ``n_hashes`` the store recorded).
 
     Output: one row per (``group_cols``…, key column) with
     ``key_col, key_type, n_bits, n_hashes, n_keys, bloom_pos``.
@@ -168,9 +177,7 @@ def bloom_summary_rows(
     )
 
 
-def _derived_n_bits(
-    spark: SparkSession, src: DataFrame, cols: list[str], n_hashes: int
-) -> dict[str, int]:
+def _derived_n_bits(src: DataFrame, cols: list[str]) -> dict[str, int]:
     """Per-column ``n_bits`` from a measured approximate NDV: next
     power of two ≥ 16·ndv·k per batch (max over batches), floor 2^12.
     One narrow scan (approx_count_distinct per batch per column)."""
@@ -187,7 +194,7 @@ def _derived_n_bits(
     )
     out = {}
     for c in cols:
-        target = 16 * max(int(ndv[c] or 0), 1) * n_hashes
+        target = 16 * max(int(ndv[c] or 0), 1) * _N_HASHES
         bits = 1 << 12
         while bits < target:
             bits <<= 1
@@ -200,13 +207,12 @@ def collect_batch_blooms(
     sink_path: str,
     col: str | list[str],
     n_bits: int | None = None,
-    n_hashes: int = 3,
 ) -> DataFrame:
     """One row per ``batch=<id>`` partition per key column:
     ``(batch, key_col, key_type, n_bits, n_hashes, n_keys, bloom_pos)``
     — the sorted distinct bit positions of every non-NULL key in the
     batch, with the self-describing metadata ``bloom_candidates``
-    validates probes against. One narrow scan of the key column(s)
+    hashes probes under. One narrow scan of the key column(s)
     regardless of how many are bloomed.
 
     ``n_bits=None`` derives a per-column size from a measured
@@ -218,15 +224,11 @@ def collect_batch_blooms(
     src = spark.read.option("basePath", sink_path).parquet(sink_path)
     bits: dict[str, int] | int
     if n_bits is None:
-        bits = _derived_n_bits(spark, src, cols, n_hashes)
+        bits = _derived_n_bits(src, cols)
     else:
         bits = n_bits
     rows = bloom_summary_rows(
-        src.select("batch", *cols),
-        cols,
-        bits,
-        n_hashes,
-        group_cols=["batch"],
+        src.select("batch", *cols), cols, bits, group_cols=["batch"]
     )
     return rows.select(
         F.col("batch").cast("long").alias("batch"),
@@ -235,43 +237,29 @@ def collect_batch_blooms(
 
 
 def _resolve_meta(
-    blooms: DataFrame,
-    col: str,
-    keys: DataFrame | None,
-    n_bits: int | None,
-    n_hashes: int | None,
+    blooms: DataFrame, col: str, keys: DataFrame
 ) -> tuple[DataFrame, int, int]:
     """Filter a (possibly multi-column) summary frame down to ``col``
-    and resolve the probe geometry: recorded metadata wins and a
-    contradicting explicit parameter (or probe key type) RAISES —
+    and read the probe geometry from its recorded metadata. RAISES on a
+    frame without the metadata columns, on a nonempty frame with no
+    rows for ``col``, on rows for ``col`` that record more than one
+    geometry, and on a probe key type other than the collected one —
     a mismatched probe silently false-negatives, the worst failure
-    mode for a compliance delete. Raw frames without metadata fall
-    back to the explicit parameters (or the historical defaults).
+    mode for a compliance delete.
 
-    ONE aggregation job resolves emptiness AND geometry (it was two
-    ``limit(1).count()`` probes plus a ``distinct().collect()`` — three
-    driver-sequenced jobs per probe call, and the incident chains pay
-    this per erasure/audit step; the summary frame is metadata-sized,
-    so job COUNT is the cost, not bytes). The distinct-``key_col``
-    sweep is paid only on the refusal path."""
-    has_keycol = "key_col" in blooms.columns
-    has_meta = "n_bits" in blooms.columns
-    sliced = blooms.filter(F.col("key_col") == col) if has_keycol else blooms
-    if not has_keycol and not has_meta:
-        return sliced, n_bits or 1 << 18, n_hashes or 3
-    is_col = F.col("key_col") == col if has_keycol else F.lit(True)
-    aggs = [
+    ONE aggregation job resolves emptiness AND geometry (the summary
+    frame is metadata-sized, so job COUNT is the cost, not bytes). The
+    distinct-``key_col`` sweep is paid only on the refusal path."""
+    _require_meta_schema(blooms, "the probed bloom summary frame")
+    is_col = F.col("key_col") == col
+    probe = blooms.agg(
         F.count(F.lit(1)).alias("n_total"),
         F.sum(is_col.cast("long")).alias("n_col"),
-    ]
-    if has_meta:
-        aggs.append(
-            F.collect_set(
-                F.when(is_col, F.struct("key_type", "n_bits", "n_hashes"))
-            ).alias("meta")
-        )
-    probe = blooms.agg(*aggs).collect()[0]
-    if has_keycol and not probe["n_col"] and probe["n_total"]:
+        F.collect_set(
+            F.when(is_col, F.struct("key_type", "n_bits", "n_hashes"))
+        ).alias("meta"),
+    ).collect()[0]
+    if not probe["n_col"] and probe["n_total"]:
         # a nonempty multi-column summary frame that never collected
         # THIS column: zero candidate batches would read as "key
         # nowhere" — for the erasure consumer that is the silent-no-op
@@ -286,9 +274,7 @@ def _resolve_meta(
             f"(collected: {have}) — probing them would silently "
             "prune every batch"
         )
-    blooms = sliced
-    if not has_meta:
-        return blooms, n_bits or 1 << 18, n_hashes or 3
+    blooms = blooms.filter(is_col)
     meta = probe["meta"]
     if len(meta) > 1:
         raise ValueError(
@@ -298,59 +284,39 @@ def _resolve_meta(
             "at one geometry"
         )
     if not meta:  # empty store slice: geometry moot, result empty
-        return blooms, n_bits or 1 << 18, n_hashes or 3
+        return blooms, _N_BITS, _N_HASHES
     rec = meta[0]
-    if n_bits is not None and n_bits != int(rec["n_bits"]):
-        raise ValueError(
-            f"bloom probe n_bits={n_bits} contradicts the store's "
-            f"recorded n_bits={int(rec['n_bits'])} for {col!r} — a "
-            "mismatched geometry silently false-negatives; omit n_bits "
-            "to use the recorded one"
+    probe_type = keys.schema[col].dataType.simpleString()
+    if rec["key_type"] is not None and probe_type != rec["key_type"]:
+        raise TypeError(
+            f"bloom probe for {col!r} carries type {probe_type} but "
+            f"the summaries were collected from {rec['key_type']} — "
+            "xxhash64 is type-sensitive, a widened probe silently "
+            "false-negatives; cast the probe to the collected type"
         )
-    if n_hashes is not None and n_hashes != int(rec["n_hashes"]):
-        raise ValueError(
-            f"bloom probe n_hashes={n_hashes} contradicts the store's "
-            f"recorded n_hashes={int(rec['n_hashes'])} for {col!r}"
-        )
-    if keys is not None:
-        probe_type = keys.schema[col].dataType.simpleString()
-        if rec["key_type"] is not None and probe_type != rec["key_type"]:
-            raise TypeError(
-                f"bloom probe for {col!r} carries type {probe_type} but "
-                f"the summaries were collected from {rec['key_type']} — "
-                "xxhash64 is type-sensitive, a widened probe silently "
-                "false-negatives; cast the probe to the collected type"
-            )
     return blooms, int(rec["n_bits"]), int(rec["n_hashes"])
 
 
 def bloom_candidates(
-    blooms: DataFrame,
-    keys: DataFrame,
-    col: str,
-    n_bits: int | None = None,
-    n_hashes: int | None = None,
+    blooms: DataFrame, keys: DataFrame, col: str
 ) -> DataFrame:
     """(batch, key) pairs whose batch bloom MAY contain the key — a
     superset of the true containments (no false negatives, guaranteed
     by construction: a present key's every position is set).
 
-    Geometry and key type come from the summary frame's recorded
-    metadata when present (the ``collect_batch_blooms`` /
-    ``bloom_summary_rows`` shape): an explicit ``n_bits``/``n_hashes``
-    that contradicts the record, or a probe column whose type differs
-    from the collected one, RAISES instead of silently
-    false-negativing (xxhash64 is type- and geometry-sensitive). Raw
-    ``(batch, bloom_pos)`` frames fall back to the explicit
-    parameters.
+    ``blooms`` is a self-describing summary frame (the
+    ``collect_batch_blooms`` / ``load_bloom_store`` shape); keys are
+    hashed under the geometry its rows record. A frame without the
+    metadata columns, a column recorded at more than one geometry, or
+    a probe column whose type differs from the collected one RAISES
+    instead of silently false-negativing (xxhash64 is type- and
+    geometry-sensitive).
 
     Inverted-index shape: explode the batch summaries to (batch, pos)
     rows, equi-join the broadcast exploded key positions, keep pairs
     where ALL of the key's (deduplicated) positions matched. Output
     column ``col`` carries the key value."""
-    blooms, n_bits, n_hashes = _resolve_meta(
-        blooms, col, keys, n_bits, n_hashes
-    )
+    blooms, n_bits, n_hashes = _resolve_meta(blooms, col, keys)
     kp = (
         keys.select(col)
         .filter(F.col(col).isNotNull())
@@ -387,17 +353,18 @@ def load_bloom_store(
     maintained bloom store
     (:func:`streaming.incremental.start_append_with_manifest` with
     ``bloom_cols=``): the self-describing rows ``bloom_candidates`` /
-    ``read_bloom_pruned`` / ``erase_rows`` consume (metadata columns
-    pass through so probes validate against the recorded geometry and
-    key type). Raises if the store never bloomed ``col`` — a typo'd
-    column would otherwise prune everything (zero candidate batches
-    reads as "key nowhere" — for the erasure consumer that is the
-    silent-no-op failure mode the NULL policy exists to prevent)."""
-    store = spark.read.parquet(bloom_path).filter(F.col("key_col") == col)
-    passthrough = [c for c in _META_COLS if c in store.columns]
-    out = store.select(
+    ``read_bloom_pruned`` / ``erase_rows`` consume, metadata columns
+    included, so probes hash under the recorded geometry and key type.
+    Raises on a store without the metadata columns, and if the store
+    never bloomed ``col`` — a typo'd column would otherwise prune
+    everything (zero candidate batches reads as "key nowhere" — for the
+    erasure consumer that is the silent-no-op failure mode the NULL
+    policy exists to prevent)."""
+    store = spark.read.parquet(bloom_path)
+    _require_meta_schema(store, f"bloom store at {bloom_path}")
+    out = store.filter(F.col("key_col") == col).select(
         F.col("batch").cast("long").alias("batch"),
-        *passthrough,
+        *_META_COLS,
         "bloom_pos",
     )
     if not out.limit(1).count():
@@ -414,11 +381,10 @@ def read_bloom_pruned(
     blooms: DataFrame,
     col: str,
     values,
-    n_bits: int | None = None,
-    n_hashes: int | None = None,
 ) -> DataFrame:
     """Read only the batch partitions whose bloom may contain any of
-    ``values`` (a Python sequence), with the exact ``isin`` residual
+    ``values`` (a Python sequence), probed under the geometry ``blooms``
+    records (:func:`bloom_candidates`), with the exact ``isin`` residual
     filter still applied — the point-lookup twin of
     ``manifest.read_pruned``, for the random layouts where range
     envelopes admit everything. An empty candidate set (or an empty
@@ -444,7 +410,7 @@ def read_bloom_pruned(
     )
     batches = [
         int(r["batch"])
-        for r in bloom_candidates(blooms, keys, col, n_bits, n_hashes)
+        for r in bloom_candidates(blooms, keys, col)
         .select("batch")
         .distinct()
         .collect()
@@ -457,16 +423,17 @@ def read_bloom_pruned(
     return src.filter(F.col(col).isin(vals))
 
 
-def _require_meta_schema(store: DataFrame, bloom_path: str) -> None:
+def _require_meta_schema(store: DataFrame, what: str) -> None:
     """Schema-only half of :func:`_require_meta` (no job): raise on a
-    store frame that is not self-describing (r11 rows)."""
+    summary frame that is not self-describing (r11 rows). ``what``
+    names the frame in the message."""
     missing_meta = [c for c in _META_COLS if c not in store.columns]
     if missing_meta:
         raise ValueError(
-            f"bloom store at {bloom_path} lacks metadata "
-            f"column(s) {missing_meta} — rebuild it with r11 "
-            "collect_batch_blooms / start_append_with_manifest to make "
-            "it auditable"
+            f"{what} lacks metadata column(s) {missing_meta} — rebuild "
+            "it with r11 collect_batch_blooms / "
+            "start_append_with_manifest: its geometry and key type are "
+            "unknown, so it can be neither probed nor audited"
         )
 
 
@@ -474,7 +441,7 @@ def _require_meta(store: DataFrame, bloom_path: str) -> list[str]:
     """Validate a store frame is self-describing (r11 rows) and return
     its bloomed columns, sorted. Shared by the audit and the repair so
     they refuse the same un-auditable stores."""
-    _require_meta_schema(store, bloom_path)
+    _require_meta_schema(store, f"bloom store at {bloom_path}")
     cols = sorted(
         r["key_col"] for r in store.select("key_col").distinct().collect()
     )
@@ -700,8 +667,8 @@ def repair_bloom_store(
     spark: SparkSession, sink_path: str, bloom_path: str
 ) -> DataFrame:
     """Detect-and-REPAIR for the per-batch Bloom store — the pairing
-    :func:`bloom_store_audit` was missing (the audit detects five
-    damage classes; this fixes them, completing the detect→repair
+    :func:`bloom_store_audit` was missing (the audit detects the
+    damage; this fixes it, completing the detect→repair
     convention the manifest, erasure and compaction tiers already
     follow). TARGETED: only the damaged (column, batch) summaries are
     re-collected, under the store's own recorded geometry — never a
@@ -730,24 +697,21 @@ def repair_bloom_store(
     Scale shape: classification is the audit's one narrow key-column
     scan full-outer-joined to the store (engine-side); ONLY the
     damaged pairs are collected (bounded by damage count, never
-    #batches×#cols). Re-collection is one ``mergeSchema`` scan of
-    exactly the damaged batches per distinct resolved ``n_hashes``
-    (almost always 1). The partition rebuild severs lineage with a
-    ``localCheckpoint`` so the overwrite never reads the path it
-    writes, and keeps untouched (column, batch) rows of the affected
-    partitions verbatim; a partition left with zero rows is dropped
-    (the emptied-batch convention).
+    #batches×#cols) and handed to :func:`_recollect_store`, the store's
+    one re-collection path.
 
-    Returns one row per bloomed column:
+    Every way the audit can fail (missing, orphan, mismatch,
+    duplicate, type, geometry, positions) is one of these classes, so
+    a store with no damaged row is current by classification. Returns
+    one row per bloomed column:
     ``(key_col, n_missing_collected, n_mismatch_recollected,
     n_structural_recollected, n_orphan_rows_dropped, current_after)``
-    where ``current_after`` re-runs the audit post-repair (vacuously
+    where ``current_after`` is true without a re-audit when nothing was
+    damaged, and otherwise re-runs the audit post-repair (vacuously
     true when the repair emptied the store — a sink with no keys
     needs no summaries)."""
-    from .retention import _fs
-
     store = spark.read.parquet(bloom_path)
-    _require_meta_schema(store, bloom_path)
+    _require_meta_schema(store, f"bloom store at {bloom_path}")
     # resolve per-column geometry: modal recorded (n_bits, n_hashes)
     # by row count, ties to the larger n_bits (metadata-sized collect:
     # #cols × #distinct geometries rows). ONE job yields the bloomed
@@ -774,7 +738,7 @@ def repair_bloom_store(
         # and int(None) would abort the whole repair on damage the
         # paired audit reports calmly (ADVICE r12). A column with NO
         # validly-recorded geometry at all falls back to the module
-        # default, the same (1 << 18, 3) bloom_positions uses.
+        # default geometry.
         cand = sorted(
             (int(r["count"]), int(r["n_bits"]), int(r["n_hashes"]))
             for r in geo
@@ -782,7 +746,9 @@ def repair_bloom_store(
             and r["n_bits"] is not None
             and r["n_hashes"] is not None
         )
-        resolved[c] = (cand[-1][1], cand[-1][2]) if cand else (1 << 18, 3)
+        resolved[c] = (
+            (cand[-1][1], cand[-1][2]) if cand else (_N_BITS, _N_HASHES)
+        )
     res_bits = _col_map(cols, {c: resolved[c][0] for c in cols})
     res_hashes = _col_map(cols, {c: resolved[c][1] for c in cols})
     type_map = _col_map(cols, {c: sink_types.get(c) for c in cols})
@@ -830,103 +796,43 @@ def repair_bloom_store(
         c: {"missing": 0, "mismatch": 0, "structural": 0, "orphan": 0}
         for c in cols
     }
-    recollect_set: set[tuple[str, int]] = set()
     for r in damaged:
         counts[r["key_col"]][r["damage"]] += 1
-        if r["damage"] != "orphan":
-            recollect_set.add((r["key_col"], int(r["batch"])))
-    recollect = sorted(recollect_set)
+    after: dict[str, bool] = {}
     if damaged:
-        affected = sorted({int(r["batch"]) for r in damaged})
-        dmg_keys = spark.createDataFrame(
-            sorted({(r["key_col"], int(r["batch"])) for r in damaged}),
-            "key_col STRING, batch BIGINT",
+        _recollect_store(
+            spark,
+            sink_path,
+            bloom_path,
+            store,
+            resolved,
+            {
+                (r["key_col"], int(r["batch"]))
+                for r in damaged
+                if r["damage"] != "orphan"
+            },
+            {
+                (r["key_col"], int(r["batch"]))
+                for r in damaged
+                if r["damage"] == "orphan"
+            },
         )
-        new_frames: list[DataFrame] = []
-        # one mergeSchema scan of exactly the damaged batches per
-        # distinct resolved n_hashes (bloom_summary_rows takes one
-        # n_hashes per call; geometry differences across columns are
-        # rare and bounded by #cols)
-        by_hashes: dict[int, list[tuple[str, int]]] = {}
-        for c, b in recollect:
-            by_hashes.setdefault(resolved[c][1], []).append((c, b))
-        for nh, pairs_nh in by_hashes.items():
-            gcols = sorted({c for c, _ in pairs_nh})
-            gbatches = sorted({b for _, b in pairs_nh})
-            src = (
-                spark.read.option("basePath", sink_path)
-                .option("mergeSchema", True)
-                .parquet(*(f"{sink_path}/batch={b}" for b in gbatches))
-            )
-            present = [c for c in gcols if c in src.columns]
-            if not present:
-                continue
-            rows = bloom_summary_rows(
-                src.select("batch", *present),
-                present,
-                {c: resolved[c][0] for c in present},
-                nh,
-                group_cols=["batch"],
-            ).select(
-                F.col("batch").cast("long").alias("batch"),
-                "key_col",
-                "key_type",
-                "n_bits",
-                "n_hashes",
-                "n_keys",
-                "bloom_pos",
-            )
-            new_frames.append(
-                rows.join(dmg_keys, ["key_col", "batch"], "left_semi")
-            )
-        keep = store.select(
-            F.col("batch").cast("long").alias("batch"),
-            "key_col",
-            "key_type",
-            "n_bits",
-            "n_hashes",
-            "n_keys",
-            "bloom_pos",
-        ).filter(F.col("batch").isin(affected)).join(
-            dmg_keys, ["key_col", "batch"], "left_anti"
-        )
-        out = keep
-        for nf in new_frames:
-            out = out.unionByName(nf)
-        # sever lineage: the dynamic overwrite below reads bloom_path
-        out = out.localCheckpoint(eager=True)
-        survived = {
-            int(r["batch"])
-            for r in out.select("batch").distinct().collect()
-        }
-        if survived:
-            (
-                out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(bloom_path)
-            )
-        fs, hpath = _fs(spark, bloom_path)
-        for b in affected:
-            if b not in survived:
-                fs.delete(hpath(f"{bloom_path}/batch={b}"), True)
-    # post-repair verdicts: re-audit unless the repair emptied the
-    # store (a sink with no keys needs no summaries — vacuously
-    # current). A fully-emptied store directory is no longer
-    # parquet-readable at all (only the original write's _SUCCESS
-    # survives), so the existence check must be a listing, not a read.
-    from .retention import _has_parquet
+        # post-repair verdicts: re-audit unless the repair emptied the
+        # store (a sink with no keys needs no summaries — vacuously
+        # current). A fully-emptied store directory is no longer
+        # parquet-readable at all (only the original write's _SUCCESS
+        # survives), so the existence check must be a listing, not a
+        # read.
+        from .retention import _has_parquet
 
-    if _has_parquet(spark, bloom_path) and spark.read.parquet(
-        bloom_path
-    ).limit(1).count():
-        after = {
-            r["key_col"]: bool(r["current"])
-            for r in bloom_store_audit(spark, sink_path, bloom_path)
-            .collect()
-        }
-    else:
-        after = {}
+        if _has_parquet(spark, bloom_path) and spark.read.parquet(
+            bloom_path
+        ).limit(1).count():
+            after = {
+                r["key_col"]: bool(r["current"])
+                for r in bloom_store_audit(spark, sink_path, bloom_path)
+                .collect()
+            }
     return spark.createDataFrame(
         [
             (
@@ -943,3 +849,80 @@ def repair_bloom_store(
         "n_mismatch_recollected BIGINT, n_structural_recollected BIGINT, "
         "n_orphan_rows_dropped BIGINT, current_after BOOLEAN",
     )
+
+
+def _recollect_store(
+    spark: SparkSession,
+    sink_path: str,
+    bloom_path: str,
+    store: DataFrame,
+    geometry: dict[str, tuple[int, int]],
+    recollect: set[tuple[str, int]],
+    drop: set[tuple[str, int]],
+) -> None:
+    """Rewrite the store rows of the given (key column, batch) pairs:
+    each pair in ``recollect`` is collected afresh from the sink under
+    ``geometry[column]`` (``n_bits``, ``n_hashes``), each pair in
+    ``drop`` is removed, and every other row of the touched partitions
+    of ``store`` (the frame read from ``bloom_path``) is kept verbatim.
+    The store's one re-collection path: :func:`repair_bloom_store` runs
+    it on the damaged pairs, ``retention.erase_rows`` on every store
+    column of the batches it rewrote.
+
+    One ``mergeSchema`` scan of the re-collected batches per distinct
+    ``n_hashes`` (almost always 1). A pair whose column the scanned
+    batches lack, or whose keys are all NULL, collects no row, so its
+    old row is dropped. The rebuilt partitions sever lineage with a
+    ``localCheckpoint``, so the dynamic overwrite never reads the path
+    it writes; a partition left with zero rows is deleted (the
+    emptied-batch convention)."""
+    from .retention import _fs
+
+    pairs = sorted(recollect | drop)
+    if not pairs:
+        return
+    affected = sorted({b for _, b in pairs})
+    keys = spark.createDataFrame(pairs, "key_col STRING, batch BIGINT")
+    out = (
+        store.select(F.col("batch").cast("long").alias("batch"), *_META_COLS, "bloom_pos")
+        .filter(F.col("batch").isin(affected))
+        .join(keys, ["key_col", "batch"], "left_anti")
+    )
+    by_hashes: dict[int, list[tuple[str, int]]] = {}
+    for c, b in sorted(recollect):
+        by_hashes.setdefault(geometry[c][1], []).append((c, b))
+    for nh, group in by_hashes.items():
+        src = (
+            spark.read.option("basePath", sink_path)
+            .option("mergeSchema", True)
+            .parquet(
+                *(f"{sink_path}/batch={b}" for b in sorted({b for _, b in group}))
+            )
+        )
+        present = [c for c in sorted({c for c, _ in group}) if c in src.columns]
+        if not present:
+            continue
+        rows = bloom_summary_rows(
+            src.select("batch", *present),
+            present,
+            {c: geometry[c][0] for c in present},
+            nh,
+            group_cols=["batch"],
+        ).select(F.col("batch").cast("long").alias("batch"), *_META_COLS, "bloom_pos")
+        out = out.unionByName(
+            rows.join(keys, ["key_col", "batch"], "left_semi")
+        )
+    # sever lineage: the dynamic overwrite below reads bloom_path
+    out = out.localCheckpoint(eager=True)
+    survived = {int(r["batch"]) for r in out.select("batch").collect()}
+    if survived:
+        (
+            out.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("batch")
+            .parquet(bloom_path)
+        )
+    fs, hpath = _fs(spark, bloom_path)
+    for b in affected:
+        if b not in survived:
+            fs.delete(hpath(f"{bloom_path}/batch={b}"), True)

@@ -36,7 +36,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
 from .manifest import file_stats
-from .retention import _fs, _write_text, repair_manifest
+from .retention import (
+    _COMPACT_COMMIT,
+    _COMPACT_STAGING,
+    _COMPACT_TRASH,
+    _fs,
+    _write_text,
+    repair_manifest,
+)
 
 _COLUMNAR = {"parquet", "orc"}
 _TEXTUAL = {"json", "csv"}
@@ -263,8 +270,8 @@ def compact_batch(
         c[len("min_") :] for c in man.columns if c.startswith("min_")
     ]
     df = spark.read.parquet(part)
-    staging = f"{sink_path}/.compact_staging_batch={batch}"
-    commit_path = f"{sink_path}/.compact_commit_batch={batch}.json"
+    staging = f"{sink_path}/{_COMPACT_STAGING}{batch}"
+    commit_path = f"{sink_path}/{_COMPACT_COMMIT}{batch}.json"
     fs.delete(hpath(staging), True)
     fs.delete(hpath(commit_path), False)
     df.coalesce(target_files).write.parquet(staging)
@@ -281,7 +288,7 @@ def compact_batch(
     # partition discovery — a non-hidden `{part}.trash` dir would surface
     # as a bogus partition value and double-count the pre-compaction copy
     # in full-sink reads (same discipline as erase_rows' .erase_trash)
-    trash = hpath(f"{sink_path}/.compact_trash_batch={batch}")
+    trash = hpath(f"{sink_path}/{_COMPACT_TRASH}{batch}")
     fs.delete(trash, True)
     if not fs.rename(hpath(part), trash):
         raise IOError(f"compact swap failed: could not retire {part}")
@@ -334,9 +341,9 @@ def repair_compaction(
     before the refresh leaves the rows pointing at retired files).
     Returns one row: ``(action, consistent_after)``."""
     part = f"{sink_path}/batch={batch}"
-    staging = f"{sink_path}/.compact_staging_batch={batch}"
-    trash = f"{sink_path}/.compact_trash_batch={batch}"
-    commit_path = f"{sink_path}/.compact_commit_batch={batch}.json"
+    staging = f"{sink_path}/{_COMPACT_STAGING}{batch}"
+    trash = f"{sink_path}/{_COMPACT_TRASH}{batch}"
+    commit_path = f"{sink_path}/{_COMPACT_COMMIT}{batch}.json"
     fs, hpath = _fs(spark, part)
     # staged-compaction durability comes from compact_batch's own
     # commit marker; the writer's _SUCCESS file is accepted as a

@@ -47,26 +47,25 @@ _CP1252_SRC = "".join(
 _CP1252_DST = "€‚ƒ„…†‡ˆ‰Š‹ŒŽ''“”•–—˜™š›œžŸ"
 
 
-def read_lines(spark: SparkSession, path: str, encoding: str = "windows-1252") -> DataFrame:
-    """Raw physical lines: CSV reader abused as a line reader (a delimiter
-    that never occurs + no quoting), preserving CP1252 bytes. Splitting on
-    LF and stripping one trailing CR handles both CRLF (the reference
-    file) and LF inputs. Header line included."""
-    read_charset = "iso-8859-1" if encoding.lower() in ("windows-1252", "cp1252") else encoding
+def read_lines(spark: SparkSession, path: str) -> DataFrame:
+    """Raw physical lines of a CP1252 file: CSV reader abused as a line
+    reader (a delimiter that never occurs + no quoting), read as
+    ISO-8859-1 and transliterated to CP1252. Splitting on LF and
+    stripping one trailing CR handles both CRLF (the reference file) and
+    LF inputs. Header line included."""
     lines = (
         spark.read.format("csv")
         .option("sep", "\x01")
         .option("quote", "")
-        .option("encoding", read_charset)
+        .option("encoding", "iso-8859-1")
         .option("lineSep", "\n")
         .schema("value STRING")
         .load(path)
     )
     lines = lines.select(F.regexp_replace("value", r"\r$", "").alias("value"))
-    if read_charset == "iso-8859-1":
-        lines = lines.select(
-            F.translate(F.col("value"), _CP1252_SRC, _CP1252_DST).alias("value")
-        )
+    lines = lines.select(
+        F.translate(F.col("value"), _CP1252_SRC, _CP1252_DST).alias("value")
+    )
     return lines.filter(F.length("value") > 0)
 
 
@@ -121,7 +120,6 @@ def _raw_records(parsed: DataFrame, path: str) -> DataFrame:
 def read_superstore_csv(
     spark: SparkSession,
     path: str,
-    encoding: str = "windows-1252",
     compat_excel: bool = False,
 ) -> DataFrame:
     """Recover the messy CSV into a 21-string-column DataFrame + audit cols
@@ -133,7 +131,7 @@ def read_superstore_csv(
     DISCARDED, yielding the workbook's 7,484-row table. Only used to
     hash-match the reference's published pivot goldens (SURVEY.md §1.4).
     """
-    lines = read_lines(spark, path, encoding)
+    lines = read_lines(spark, path)
     body = lines.filter(~F.col("value").startswith("Row ID"))
 
     if compat_excel:
@@ -144,7 +142,7 @@ def read_superstore_csv(
 
 
 def read_superstore_csv_with_quarantine(
-    spark: SparkSession, path: str, encoding: str = "windows-1252"
+    spark: SparkSession, path: str
 ) -> dict[str, DataFrame]:
     """Recovery with a bad-record channel (the reference has none — its
     BULK INSERT just aborts into CATCH, SQLproject1.sql:125-127).
@@ -155,7 +153,7 @@ def read_superstore_csv_with_quarantine(
     non-record garbage. The two outputs are lazy filters of one parsed
     projection; nothing is cached, so each plans its own scan of the file
     and a caller that reads both reads and parses it twice."""
-    lines = read_lines(spark, path, encoding)
+    lines = read_lines(spark, path)
     body = lines.filter(~F.col("value").startswith("Row ID"))
     repaired = body.select(
         F.col("value").alias("raw_line"),

@@ -115,6 +115,11 @@ _KEYS = ".erase_keys"  # the opt-out keys, for resuming the delete
 _INTENT = ".erase_intent.json"  # key columns and maintained bloom store
 _EMPTY = ".erase_empty"  # the zero-row template of an emptied batch
 _ERASE_RESIDUE = (_STAGING, _TRASH, _COMMIT, _KEYS, _INTENT, _EMPTY)
+# The compaction journal of batch N (``formats.compact_batch``), hidden
+# beside it: ``<name>N``, the commit marker with a ``.json`` suffix.
+_COMPACT_STAGING = ".compact_staging_batch="  # the compacted copy
+_COMPACT_TRASH = ".compact_trash_batch="  # the retired partition
+_COMPACT_COMMIT = ".compact_commit_batch="  # staging is durable
 
 
 def _fs(spark: SparkSession, path: str):
@@ -356,8 +361,6 @@ def erase_rows(
     key_col: str | Sequence[str],
     keys: DataFrame,
     blooms: dict[str, DataFrame] | None = None,
-    bloom_n_bits: int | None = None,
-    bloom_n_hashes: int | None = None,
     bloom_store_path: str | None = None,
 ) -> DataFrame:
     """Delete every row whose ``key_col`` value (or composite tuple,
@@ -403,7 +406,10 @@ def erase_rows(
 
     ``blooms`` (optional) intersects the envelope candidates with
     per-batch Bloom summaries (``sources/bloom.py``, a dict of key
-    column → ``collect_batch_blooms`` frame): on RANDOM layouts, where
+    column → self-describing summary frame from
+    ``collect_batch_blooms`` or ``load_bloom_store``, probed under the
+    geometry its rows record; a frame without the metadata columns
+    raises): on RANDOM layouts, where
     every envelope spans the key space and erasure would honestly
     degrade to a full-table rewrite, blooms confine the rewrite to the
     batches that can actually contain a doomed key. The intersection
@@ -419,15 +425,19 @@ def erase_rows(
     delete, pass no bloom rather than a possibly-stale one.
 
     ``bloom_store_path`` (optional) keeps an on-disk Bloom store
-    CURRENT through the delete: after the swap, the rewritten batches'
-    summary rows are re-collected under the store's own recorded
-    geometry (one scan of those batches — a summary covers untouched
-    files too, so this is batch-sized, but still confined to the
-    batches the erasure touched) and fully-emptied batches drop their
-    store partition. Without it, an in-place erasure leaves the store
-    safely over-approximating (no false negatives — deletions cannot
-    hide rows) but no longer CURRENT, which ``bloom_store_audit``
-    reports as count mismatches / orphan rows."""
+    CURRENT through the delete. Before any file work, the store must
+    record one geometry per column and no column absent from the sink.
+    After the swap, every store column of the rewritten batches is
+    re-collected under that geometry (read once, by the validation)
+    through the store's one re-collection path,
+    ``bloom._recollect_store``: one scan of those batches — a summary
+    covers untouched files too, so this is batch-sized, but still
+    confined to the batches the erasure touched — and fully-emptied
+    batches drop their store partition. Without it, an in-place
+    erasure leaves the store safely over-approximating (no false
+    negatives — deletions cannot hide rows) but no longer CURRENT,
+    which ``bloom_store_audit`` reports as count mismatches / orphan
+    rows."""
     cols = [key_col] if isinstance(key_col, str) else list(key_col)
     if bloom_store_path is not None:
         # validate BEFORE any irreversible file work: a mistyped path,
@@ -436,7 +446,7 @@ def erase_rows(
         # refresh's summary collection needs every recorded column),
         # losing the erasure report and leaving the store stale despite
         # the maintenance flag
-        store_bits, _ = _load_store_geometry(spark, bloom_store_path)
+        store, geometry = _load_store_geometry(spark, bloom_store_path)
         # union schema from ONE sampled footer per batch dir
         # (the landing convention is one schema per batch, and this
         # check is advisory fail-early: the refresh itself skips absent
@@ -479,7 +489,7 @@ def erase_rows(
                     sink_union.update(
                         f.name for f in spark.read.parquet(part).schema
                     )
-        absent = sorted(set(store_bits) - sink_union)
+        absent = sorted(set(geometry) - sink_union)
         if absent:
             # the one-footer-per-batch sample above is advisory: a
             # batch with in-batch schema heterogeneity (or listing-order
@@ -502,7 +512,7 @@ def erase_rows(
                     .parquet(*batch_dirs)
                     .schema
                 }
-                absent = sorted(set(store_bits) - full_union)
+                absent = sorted(set(geometry) - full_union)
         if absent:
             raise ValueError(
                 f"erase_rows: the bloom store at {bloom_store_path} "
@@ -650,9 +660,7 @@ def erase_rows(
                     k.select(F.col(f"k_{c}").cast(sink_types[c]).alias(c))
                     .distinct()
                 )
-                cc = bloom_candidates(
-                    bl, probe, c, bloom_n_bits, bloom_n_hashes
-                )
+                cc = bloom_candidates(bl, probe, c)
                 j = k.join(
                     cc, k[f"k_{c}"].cast(sink_types[c]) == cc[c]
                 ).select(*kc, "batch")
@@ -869,8 +877,19 @@ def erase_rows(
         # must not pin the key list for the rest of the session
         k.unpersist()
     if bloom_store_path is not None and affected:
-        _refresh_bloom_store(
-            spark, sink_path, bloom_store_path, affected, kept_counts
+        from .bloom import _recollect_store
+
+        # every store column of the live rewritten batches re-collected,
+        # the emptied batches' rows dropped
+        live = {b for b in affected if kept_counts.get(b, 0)}
+        _recollect_store(
+            spark,
+            sink_path,
+            bloom_store_path,
+            store,
+            geometry,
+            {(c, b) for c in geometry for b in live},
+            {(c, b) for c in geometry for b in set(affected) - live},
         )
     if groups:
         # the whole delete (every group + store refresh) is complete
@@ -894,88 +913,25 @@ def erase_rows(
 
 def _load_store_geometry(
     spark: SparkSession, bloom_store_path: str
-) -> tuple[dict[str, int], int]:
-    """Read and validate an on-disk Bloom store's recorded geometry:
-    one ``n_bits`` per column, one ``n_hashes`` store-wide. Raises on
-    a missing/unreadable store or inconsistent geometry — callers run
+) -> tuple[DataFrame, dict[str, tuple[int, int]]]:
+    """Read an on-disk Bloom store and its recorded geometry, one
+    (``n_bits``, ``n_hashes``) per column. Raises on a
+    missing/unreadable store or inconsistent geometry — callers run
     this BEFORE mutating anything the store describes."""
     store = spark.read.parquet(bloom_store_path)
     meta = (
         store.select("key_col", "n_bits", "n_hashes").distinct().collect()
     )
-    bits = {r["key_col"]: int(r["n_bits"]) for r in meta}
-    hashes = {int(r["n_hashes"]) for r in meta}
-    if not meta or len(meta) != len(bits) or len(hashes) != 1:
+    geometry = {
+        r["key_col"]: (int(r["n_bits"]), int(r["n_hashes"])) for r in meta
+    }
+    if not meta or len(meta) != len(geometry):
         raise ValueError(
             f"the bloom store at {bloom_store_path} is empty or records "
             "inconsistent geometry — run bloom_store_audit and rebuild "
             "it before maintaining it through an erasure"
         )
-    return bits, hashes.pop()
-
-
-def _refresh_bloom_store(
-    spark: SparkSession,
-    sink_path: str,
-    bloom_store_path: str,
-    affected: list[int],
-    kept_counts: dict[int, int],
-) -> None:
-    """Re-collect the Bloom store rows of the batches an erasure
-    rewrote, so the store stays CURRENT through the delete (the
-    maintenance story's last leg: streaming appends maintain it,
-    compaction preserves it byte-identically, and with
-    ``bloom_store_path=`` erasure refreshes it — ``bloom_store_audit``
-    stays green end to end). One scan of the affected LIVE batches per
-    the store's recorded geometry (a summary covers the whole batch,
-    untouched files included, so the scan is batch-sized — still
-    confined to the batches the erasure itself touched); fully-emptied
-    batches drop their store partition outright."""
-    from .bloom import bloom_summary_rows
-
-    bits, n_hashes = _load_store_geometry(spark, bloom_store_path)
-    fs, hpath = _fs(spark, bloom_store_path)
-    live = [b for b in affected if kept_counts.get(b, 0) > 0]
-    emptied = [b for b in affected if kept_counts.get(b, 0) == 0]
-    refreshed: set[int] = set()
-    src = present = None
-    if live:
-        src = (
-            spark.read.option("basePath", sink_path)
-            .option("mergeSchema", True)  # evolved batches in one scan
-            .parquet(*(f"{sink_path}/batch={b}" for b in live))
-        )
-        # a recorded column can be legitimately absent from ALL the
-        # affected batches (pre-evolution batches never held it, so
-        # they never had summary rows for it either): collect only the
-        # present ones — bloom_summary_rows would KeyError on an
-        # absent column AFTER the swap, losing the erasure report
-        present = [c for c in sorted(bits) if c in src.columns]
-    if live and present:
-        rows = bloom_summary_rows(
-            src.select("batch", *present),
-            present,
-            bits,
-            n_hashes,
-            group_cols=["batch"],
-        ).persist()
-        refreshed = {
-            int(r["batch"])
-            for r in rows.select("batch").distinct().collect()
-        }
-        (
-            rows.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(bloom_store_path)
-        )
-        rows.unpersist()
-    # a live batch that produced NO summary rows (its remaining keys
-    # are all NULL) gets nothing from the dynamic overwrite — its old
-    # partition would survive as stale orphan rows; drop it alongside
-    # the emptied batches
-    for b in [*emptied, *(b for b in live if b not in refreshed)]:
-        fs.delete(hpath(f"{bloom_store_path}/batch={b}"), True)
+    return store, geometry
 
 
 def _manifest_damage(
@@ -1044,18 +1000,31 @@ def repair_manifest(
     Returns one row: ``(n_stale_rows_dropped, n_files_reenveloped,
     n_count_refreshed, n_batches_repaired, consistent_after)`` where
     ``consistent_after`` re-runs the audit's criteria post-repair."""
-    report = (
+    return spark.createDataFrame(
+        [
+            (
+                *_reconcile_manifest(spark, sink_path, manifest_path),
+                _audit_ok(spark, sink_path, manifest_path),
+            )
+        ],
         "n_stale_rows_dropped BIGINT, n_files_reenveloped BIGINT, "
         "n_count_refreshed BIGINT, n_batches_repaired BIGINT, "
-        "consistent_after BOOLEAN"
+        "consistent_after BOOLEAN",
     )
+
+
+def _reconcile_manifest(
+    spark: SparkSession, sink_path: str, manifest_path: str
+) -> tuple[int, int, int, int]:
+    """:func:`repair_manifest` without its closing audit: drop stale
+    rows, envelope unenveloped files, re-scan mismatched ones. Returns
+    ``(n_stale_rows_dropped, n_files_reenveloped, n_count_refreshed,
+    n_batches_repaired)``; ``repair_erasure`` runs it and audits once
+    at its own end."""
     _require_dir(spark, manifest_path, "repair_manifest: manifest")
     if not _has_parquet(spark, manifest_path):
         # no recorded schema to re-envelope into: report, don't invent
-        return spark.createDataFrame(
-            [(0, 0, 0, 0, _audit_ok(spark, sink_path, manifest_path))],
-            report,
-        )
+        return 0, 0, 0, 0
     man = spark.read.parquet(manifest_path)
     dmg_rows = _manifest_damage(spark, sink_path, man).collect()
     stale = [r for r in dmg_rows if r["damage"] == "stale"]
@@ -1112,10 +1081,7 @@ def repair_manifest(
         for b in affected:
             if b not in refreshed_batches:
                 fs.delete(hpath(f"{manifest_path}/batch={b}"), True)
-    ok = _audit_ok(spark, sink_path, manifest_path)
-    return spark.createDataFrame(
-        [(len(stale), len(unenv), len(mismatch), len(affected), ok)], report
-    )
+    return len(stale), len(unenv), len(mismatch), len(affected)
 
 
 def _audit_ok(
@@ -1161,8 +1127,9 @@ def repair_erasure(
        durable — the erasure was promised. A staging tree WITHOUT the
        commit marker is torn (crash inside the staging write, sink
        untouched) and is discarded.
-    2. **Reconcile the manifest** via :func:`repair_manifest` (retired
-       files' rows dropped, landed files enveloped).
+    2. **Reconcile the manifest** as :func:`repair_manifest` does
+       (retired files' rows dropped, landed files enveloped), without
+       its closing audit: repair audits once, at its end.
     3. **RESUME the erasure.** The resumability journal
        (``.erase_keys`` + ``.erase_intent.json``, written once before
        any group mutates the sink) outlives every crash window, and a
@@ -1177,10 +1144,12 @@ def repair_erasure(
        returns (r12): the resumed call deletes it only when it found
        candidate groups, so a no-op resume would otherwise leave it
        behind as a permanent vacuum-refusal loop. A journaled
-       ``bloom_store_path`` is reconciled via
-       :func:`bloom.repair_bloom_store` BEFORE the resume — a crash
-       between the sink swap and the store refresh leaves the store
-       stale in ways a no-op resume would never touch. A manifest the
+       ``bloom_store_path`` is handed straight to
+       :func:`bloom.repair_bloom_store` BEFORE the resume (its
+       classification is the audit's, and a current store costs no
+       re-collection) — a crash between the sink swap and the store
+       refresh leaves the store stale in ways a no-op resume would
+       never touch. A manifest the
        roll-forward fully emptied (whole-table opt-out) means nothing
        is enveloped anywhere: the resume is skipped as
        nothing-left-to-erase and the journal retired, with
@@ -1217,8 +1186,12 @@ def repair_erasure(
     # marker, so discarding it is safe)
     for n in (_STAGING, _TRASH, _COMMIT, _EMPTY):
         fs.delete(hpath(f"{sink_path}/{n}"), True)
-    mrep = repair_manifest(spark, sink_path, manifest_path).collect()[0]
-    consistent = bool(mrep["consistent_after"])
+    n_stale, n_reenveloped, _, _ = _reconcile_manifest(
+        spark, sink_path, manifest_path
+    )
+    # the whole-table branch below retires the journal only once the
+    # closing audit passes
+    retire_if_consistent = False
     resumed = False
     resumed_erased = 0
     if has_intent and fs.exists(hpath(keys_path)):
@@ -1245,15 +1218,9 @@ def repair_erasure(
             # also drops store rows for columns the sink no longer
             # holds, which the resumed erase_rows' entry validation
             # would otherwise refuse.
-            from .bloom import bloom_store_audit, repair_bloom_store
+            from .bloom import repair_bloom_store
 
-            if not all(
-                r["current"]
-                for r in bloom_store_audit(
-                    spark, sink_path, store_path
-                ).collect()
-            ):
-                repair_bloom_store(spark, sink_path, store_path)
+            repair_bloom_store(spark, sink_path, store_path)
         if _has_parquet(spark, manifest_path):
             journaled = spark.read.parquet(keys_path).localCheckpoint(
                 eager=True  # sever lineage: the resume overwrites the path
@@ -1275,7 +1242,6 @@ def repair_erasure(
             # escapable only by force. The resume RAN to completion, so
             # the delete is finished regardless of candidate count.
             _retire_erase_journal(spark, sink_path)
-            consistent = _audit_ok(spark, sink_path, manifest_path)
         else:
             # the crashed erasure emptied EVERY batch (whole-table
             # opt-out) and roll-forward dropped every manifest
@@ -1288,13 +1254,15 @@ def repair_erasure(
             # it would leave consistent_after=false as the sole signal
             # (ADVICE r12). Kept journal = found_residue on the next
             # repair, so the inconsistency stays loud.
-            consistent = _audit_ok(spark, sink_path, manifest_path)
-            if consistent:
-                _retire_erase_journal(spark, sink_path)
+            retire_if_consistent = True
         resumed = True
     else:
         # crash before the journal finished writing: nothing ran, the
         # leftovers are inert
+        _retire_erase_journal(spark, sink_path)
+    # the one audit, on every path
+    consistent = _audit_ok(spark, sink_path, manifest_path)
+    if retire_if_consistent and consistent:
         _retire_erase_journal(spark, sink_path)
     return spark.createDataFrame(
         [
@@ -1304,8 +1272,8 @@ def repair_erasure(
                 retired,
                 sum(map(len, landed.values())),
                 len(emptied),
-                int(mrep["n_stale_rows_dropped"]),
-                int(mrep["n_files_reenveloped"]),
+                n_stale,
+                n_reenveloped,
                 resumed,
                 resumed_erased,
                 consistent,
@@ -1358,11 +1326,9 @@ def vacuum_maintenance(
     residue = [f"{sink_path}/{n}" for n in _ERASE_RESIDUE]
     for st in fs.listStatus(hpath(sink_path)):
         name = st.getPath().getName()
-        if name.startswith(".compact_staging_batch=") or name.startswith(
-            ".compact_commit_batch="
-        ):
+        if name.startswith((_COMPACT_STAGING, _COMPACT_COMMIT)):
             residue.append(st.getPath().toString())
-        elif name.startswith(".compact_trash_batch="):
+        elif name.startswith(_COMPACT_TRASH):
             b = name.split("=", 1)[1]
             if not force and not fs.exists(
                 hpath(f"{sink_path}/batch={b}")

@@ -22,6 +22,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ..sources.bloom import _N_BITS
+
 #: file schema: ts is TIMESTAMP_NTZ on disk (the batch catalog's
 #: load_table contract). Watermarks REQUIRE an instant TIMESTAMP
 #: ([EVENT_TIME_IS_NOT_ON_TIMESTAMP_TYPE]), so read_event_stream pins
@@ -420,8 +422,7 @@ def start_append_with_manifest(
     stat_cols: list[str],
     bloom_cols: list[str] | None = None,
     bloom_path: str | None = None,
-    bloom_n_bits: int = 1 << 18,
-    bloom_n_hashes: int = 3,
+    bloom_n_bits: int = _N_BITS,
 ) -> StreamingQuery:
     """Streaming append that MAINTAINS the zone-map manifest as it
     writes — the incremental face of ``sources/manifest.py`` (which
@@ -474,12 +475,10 @@ def start_append_with_manifest(
             # ONE scan collects every bloomed column's summary row
             # (per-row struct-array explode — land time does not
             # multiply with the number of bloomed columns, r11), with
-            # the self-describing metadata bloom_candidates validates
-            # probes against
+            # the self-describing metadata bloom_candidates hashes
+            # probes under
             part = spark.read.parquet(part_dir)
-            rows = bloom_summary_rows(
-                part, list(bloom_cols), bloom_n_bits, bloom_n_hashes
-            )
+            rows = bloom_summary_rows(part, list(bloom_cols), bloom_n_bits)
             (
                 rows.withColumn("batch", F.lit(batch_id))
                 .write.mode("overwrite")

@@ -34,7 +34,7 @@ def test_no_false_negatives_exhaustive(spark, tmp_path):
     cand = {
         (int(r["batch"]), int(r["id"]))
         for r in B.bloom_candidates(
-            blooms, probe, "id", n_bits=1 << 16
+            blooms, probe, "id"
         ).collect()
     }
     probed = {p for p in truth if p[1] % 40 == 0}
@@ -55,7 +55,7 @@ def test_prunes_random_layout_envelopes_cannot(spark, tmp_path):
     assert all(r["lo"] <= 77 <= r["hi"] for r in spans)
     blooms = B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 16)
     keys = spark.createDataFrame([(77,), (1234,), (3999,)], "id BIGINT")
-    cand = B.bloom_candidates(blooms, keys, "id", n_bits=1 << 16).collect()
+    cand = B.bloom_candidates(blooms, keys, "id").collect()
     true_pairs = {p for p in truth if p[1] in (77, 1234, 3999)}
     got = {(int(r["batch"]), int(r["id"])) for r in cand}
     assert true_pairs <= got
@@ -69,7 +69,7 @@ def test_absent_key_prunes_everything(spark, tmp_path):
     sink, _ = _random_layout(spark, tmp_path)
     blooms = B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 16)
     ghost = spark.createDataFrame([(999_999,)], "id BIGINT")
-    assert B.bloom_candidates(blooms, ghost, "id", n_bits=1 << 16).count() == 0
+    assert B.bloom_candidates(blooms, ghost, "id").count() == 0
 
 
 def test_deterministic_and_bounded(spark, tmp_path):
@@ -94,7 +94,7 @@ def test_saturated_bloom_degrades_honestly(spark, tmp_path):
     keys = spark.createDataFrame([(77,), (1234,)], "id BIGINT")
     got = {
         (int(r["batch"]), int(r["id"]))
-        for r in B.bloom_candidates(blooms, keys, "id", n_bits=64).collect()
+        for r in B.bloom_candidates(blooms, keys, "id").collect()
     }
     assert {p for p in truth if p[1] in (77, 1234)} <= got
 
@@ -106,7 +106,7 @@ def test_read_bloom_pruned_point_lookup(spark, tmp_path):
     sink, truth = _random_layout(spark, tmp_path)
     blooms = B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 16)
     got = B.read_bloom_pruned(
-        spark, sink, blooms, "id", [77, 1234], n_bits=1 << 16
+        spark, sink, blooms, "id", [77, 1234]
     )
     assert sorted(r["id"] for r in got.collect()) == [77, 1234]
     true_batches = {b for (b, k) in truth if k in (77, 1234)}
@@ -117,7 +117,7 @@ def test_read_bloom_pruned_point_lookup(spark, tmp_path):
     # python ints probe an int64 sink column correctly (type cast via
     # the footer — xxhash64 is type-sensitive)
     empty = B.read_bloom_pruned(
-        spark, sink, blooms, "id", [999_999], n_bits=1 << 16
+        spark, sink, blooms, "id", [999_999]
     )
     assert empty.count() == 0
     assert empty.columns == got.columns
@@ -132,7 +132,7 @@ def test_candidate_plan_shape(spark, tmp_path):
     sink, _ = _random_layout(spark, tmp_path)
     blooms = B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 16)
     keys = spark.createDataFrame([(77,), (1234,)], "id BIGINT")
-    cand = B.bloom_candidates(blooms, keys, "id", n_bits=1 << 16)
+    cand = B.bloom_candidates(blooms, keys, "id")
     plan = cand._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     for bad in ("CartesianProduct", "BroadcastNestedLoopJoin",
@@ -147,7 +147,7 @@ def test_null_keys_skipped(spark, tmp_path):
     ).write.partitionBy("batch").parquet(sink)
     blooms = B.collect_batch_blooms(spark, sink, "id", n_bits=1024)
     keys = spark.createDataFrame([(1,), (None,)], "id BIGINT")
-    cand = B.bloom_candidates(blooms, keys, "id", n_bits=1024).collect()
+    cand = B.bloom_candidates(blooms, keys, "id").collect()
     assert {(int(r["batch"]), int(r["id"])) for r in cand} == {(0, 1)}
 
 
@@ -156,7 +156,7 @@ def test_read_bloom_pruned_empty_probe_list(spark, tmp_path):
     the sink's schema instead of crashing on schema inference."""
     sink, _ = _random_layout(spark, tmp_path)
     blooms = B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 16)
-    got = B.read_bloom_pruned(spark, sink, blooms, "id", [], n_bits=1 << 16)
+    got = B.read_bloom_pruned(spark, sink, blooms, "id", [])
     assert got.count() == 0
     assert got.columns == spark.read.parquet(sink).columns
 
@@ -175,26 +175,10 @@ def test_summary_rows_are_self_describing(spark, tmp_path):
     assert row["n_bits"] == 1 << 16 and row["n_hashes"] == 3
     assert row["n_keys"] > 0
     keys = spark.createDataFrame([(77,)], "id BIGINT")
-    # geometry contradiction
-    with pytest.raises(ValueError, match="n_bits"):
-        B.bloom_candidates(blooms, keys, "id", n_bits=1 << 18)
     # widened probe type contradiction
     narrow = spark.createDataFrame([(77,)], "id INT")
     with pytest.raises(TypeError, match="type-sensitive"):
         B.bloom_candidates(blooms, narrow, "id")
-    # omitted geometry resolves from the record — same candidates as
-    # the explicit matching call
-    a = sorted(
-        (r["batch"], r["id"])
-        for r in B.bloom_candidates(blooms, keys, "id").collect()
-    )
-    b = sorted(
-        (r["batch"], r["id"])
-        for r in B.bloom_candidates(
-            blooms, keys, "id", n_bits=1 << 16, n_hashes=3
-        ).collect()
-    )
-    assert a == b and a
     # mixed-geometry store slices are refused outright
     mixed = blooms.unionByName(
         B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 14)
@@ -654,3 +638,93 @@ def test_repair_all_null_geometry_falls_back_to_default(spark, tmp_path):
     assert rep["n_structural_recollected"] == 1 and rep["current_after"]
     row = spark.read.parquet(blm).collect()[0]
     assert int(row["n_bits"]) == 1 << 18 and int(row["n_hashes"]) == 3
+
+
+def test_probe_requires_metadata(spark, tmp_path):
+    """A summary frame without the self-describing columns records no
+    geometry to hash the probe under: probing it is refused, not run
+    at a guessed geometry that silently false-negatives (here the
+    frame was collected at 2^14 bits, not the 2^18 default)."""
+    import pytest
+
+    sink, _ = _random_layout(spark, tmp_path)
+    blooms = B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 14)
+    keys = spark.createDataFrame([(77,)], "id BIGINT")
+    for bare in (
+        blooms.select("batch", "bloom_pos"),
+        blooms.select("batch", "key_col", "bloom_pos"),
+    ):
+        with pytest.raises(ValueError, match="metadata"):
+            B.bloom_candidates(bare, keys, "id")
+        with pytest.raises(ValueError, match="metadata"):
+            B.read_bloom_pruned(spark, sink, bare, "id", [77])
+
+
+def test_repair_bloom_store_current_store_skips_reaudit(
+    spark, tmp_path, monkeypatch
+):
+    """The repair's classification covers every way the audit can
+    fail, so a store it finds undamaged is reported current without
+    re-running the audit — and the audit agrees."""
+    sink, _ = _random_layout(spark, tmp_path)
+    blm = str(tmp_path / "blm")
+    B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 14).write.partitionBy(
+        "batch"
+    ).parquet(blm)
+    audit = B.bloom_store_audit
+
+    def no_audit(*a):
+        raise AssertionError("repair re-audited an undamaged store")
+
+    monkeypatch.setattr(B, "bloom_store_audit", no_audit)
+    rep = B.repair_bloom_store(spark, sink, blm).collect()[0]
+    monkeypatch.setattr(B, "bloom_store_audit", audit)
+    assert rep["current_after"]
+    assert (
+        rep["n_missing_collected"]
+        == rep["n_mismatch_recollected"]
+        == rep["n_structural_recollected"]
+        == rep["n_orphan_rows_dropped"]
+        == 0
+    )
+    assert B.bloom_store_audit(spark, sink, blm).collect()[0]["current"]
+
+
+def test_one_recollection_and_recorded_geometry_only():
+    """The store is collected in exactly three places — batch
+    collection, the streaming appender and the one re-collection path
+    that repair and erasure share — and no probe in the package or
+    tools/ passes a geometry: the rows' recorded one is the only one."""
+    import ast
+    import pathlib
+
+    import superstore_data_pipeline_analytics_dashboard__spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    collectors = []
+    geometry_kw = []
+    probes = {"bloom_candidates", "read_bloom_pruned", "erase_rows"}
+    for path in [*root.rglob("*.py"), *(root.parent / "tools").glob("*.py")]:
+        tree = ast.parse(path.read_text())
+        for top in tree.body:
+            for node in ast.walk(top):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.attr if isinstance(f, ast.Attribute) else getattr(
+                    f, "id", None
+                )
+                if name == "bloom_summary_rows":
+                    collectors.append(getattr(top, "name", path.name))
+                if name in probes:
+                    geometry_kw += [
+                        (path.name, name, k.arg)
+                        for k in node.keywords
+                        if k.arg and k.arg.endswith(("n_bits", "n_hashes"))
+                    ]
+    assert sorted(collectors) == [
+        "_recollect_store",
+        "collect_batch_blooms",
+        "start_append_with_manifest",
+    ]
+    assert geometry_kw == []

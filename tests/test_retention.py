@@ -434,7 +434,6 @@ def test_erase_with_bloom_prunes_random_layout(spark, tmp_path):
             "id",
             _keys(spark, doomed),
             blooms={"id": blooms},
-            bloom_n_bits=1 << 16,
         ).collect()
     }
     hit_batches = {truth[d] for d in doomed}
@@ -1721,3 +1720,62 @@ def test_only_the_roll_forward_renames():
         if isinstance(node, ast.Attribute) and node.attr == "rename"
     }
     assert renamers == {"_roll_forward"}
+
+
+def test_erase_refuses_metadata_less_bloom_frame(spark, tmp_path):
+    """erase_rows(blooms=) probes under the geometry the summary rows
+    record; a frame without those columns is refused before the sink
+    is touched, not probed at a guessed geometry that would silently
+    erase nothing (the frame was collected at 2^14 bits)."""
+    import pytest
+
+    from superstore_data_pipeline_analytics_dashboard__spark.sources import (
+        bloom as B,
+    )
+
+    sink, man = _build(spark, tmp_path)
+    bare = B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 14).select(
+        "batch", "bloom_pos"
+    )
+    with pytest.raises(ValueError, match="metadata"):
+        R.erase_rows(
+            spark, sink, man, "id", _keys(spark, [10]), blooms={"id": bare}
+        )
+    assert spark.read.parquet(sink).count() == 250
+    assert not [n for n in _os.listdir(sink) if n.startswith(".erase")]
+
+
+def test_repair_erasure_audits_once(spark, tmp_path, monkeypatch):
+    """A resumed repair (roll-forward, manifest reconcile, journaled
+    store repair, resume) runs the manifest audit exactly once, at its
+    end."""
+    from superstore_data_pipeline_analytics_dashboard__spark.sources import (
+        bloom as B,
+    )
+
+    sink, man = _build(spark, tmp_path)
+    blm = str(tmp_path / "blm")
+    B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 14).write.partitionBy(
+        "batch"
+    ).parquet(blm)
+    _stage_crash(spark, sink, man, [10, 20, 30])
+    R._write_text(
+        spark,
+        f"{sink}/.erase_intent.json",
+        _json.dumps({"key_cols": ["id"], "bloom_store_path": blm}),
+    )
+    calls = []
+    audit_ok = R._audit_ok
+
+    def counted(*a):
+        calls.append(a)
+        return audit_ok(*a)
+
+    monkeypatch.setattr(R, "_audit_ok", counted)
+    rep = R.repair_erasure(spark, sink, man).collect()[0]
+    assert rep["rolled_forward"] and rep["erasure_resumed"]
+    assert rep["consistent_after"] and len(calls) == 1
+    assert all(
+        r["current"]
+        for r in B.bloom_store_audit(spark, sink, blm).collect()
+    )

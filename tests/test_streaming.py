@@ -502,7 +502,7 @@ def test_streaming_append_maintains_bloom_store(spark, tmpdir):
     # layout still prunes (one key lives in exactly one batch)
     probe = spark.createDataFrame([(17,), (202,)], "id BIGINT")
     cand = bloom_candidates(
-        blooms, probe, "id", n_bits=1 << 16
+        blooms, probe, "id"
     ).collect()
     sinkdf = spark.read.option("basePath", str(tmpdir / "sink")).parquet(
         str(tmpdir / "sink")
@@ -521,7 +521,6 @@ def test_streaming_append_maintains_bloom_store(spark, tmpdir):
         blooms,
         "id",
         [17, 202],
-        n_bits=1 << 16,
     )
     assert sorted(r["id"] for r in pruned.collect()) == [17, 202]
     # replay: a fresh checkpoint re-lands every batch with new files —
