@@ -15201,6 +15201,7 @@ def q260_manifest_consistency_audit(
     import glob
     import os
 
+    from ..sources.manifest import replace_batches
     from ..streaming.audit import manifest_consistency_audit
 
     with _scratch("q260_snap_") as base:
@@ -15233,12 +15234,7 @@ def q260_manifest_consistency_audit(
             .withColumn("n_rows", F.col("n_rows") + F.lit(3))
             .localCheckpoint(eager=True)
         )
-        (
-            drifted.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(man)
-        )
+        replace_batches(drifted, man)
         return manifest_consistency_audit(spark, sink, man).localCheckpoint(
             eager=True
         )
@@ -16466,6 +16462,7 @@ SELECT CAST(3 AS BIGINT) AS n_batches,
 
 def q276_bloom_store_audit(spark: SparkSession, sf: str) -> DataFrame:
     from ..sources.bloom import bloom_store_audit, collect_batch_blooms
+    from ..sources.manifest import replace_batches
 
     with _scratch("q276_blaudit_") as base:
         sink, blm = f"{base}/sink", f"{base}/blm"
@@ -16484,14 +16481,9 @@ def q276_bloom_store_audit(spark: SparkSession, sf: str) -> DataFrame:
             "batch"
         ).parquet(sink)
         # replayed batch: same id, half the keys
-        (
-            df.filter(
-                (F.col("batch") == 2) & (F.col("o_orderkey") % 8 == 2)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(sink)
+        replace_batches(
+            df.filter((F.col("batch") == 2) & (F.col("o_orderkey") % 8 == 2)),
+            sink,
         )
         bad = bloom_store_audit(spark, sink, blm).collect()[0]
         # the fix the audit directs: the TARGETED repair (r12,
@@ -17023,7 +17015,11 @@ SELECT CAST(6 AS BIGINT) AS files_before,
 # from the residue arithmetic; booleans follow the guarantee pattern.
 
 def q281_manifest_repair(spark: SparkSession, sf: str) -> DataFrame:
-    from ..sources.manifest import read_pruned, write_batch_stats
+    from ..sources.manifest import (
+        read_pruned,
+        replace_batches,
+        write_batch_stats,
+    )
     from ..sources.retention import _fs, repair_manifest
     from ..streaming.audit import manifest_consistency_audit
 
@@ -17057,16 +17053,13 @@ def q281_manifest_repair(spark: SparkSession, sf: str) -> DataFrame:
         fs.delete(hpath(f2), False)
         keep2.coalesce(1).write.mode("append").parquet(f"{sink}/batch=2")
         old2 = spark.read.parquet(man).filter(F.col("batch") == 2)
-        old2.localCheckpoint(eager=True).withColumn(
-            "file",
-            F.concat(
-                F.lit("file:"),
-                F.lit(spark.read.parquet(f"{sink}/batch=2").inputFiles()[0]
-                      .removeprefix("file:")),
+        new2 = spark.read.parquet(f"{sink}/batch=2").inputFiles()[0]
+        replace_batches(
+            old2.localCheckpoint(eager=True).withColumn(
+                "file", F.lit("file:" + new2.removeprefix("file:"))
             ),
-        ).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch").parquet(man)
+            man,
+        )
         pre_ok = bool(
             manifest_consistency_audit(spark, sink, man).collect()[0][
                 "consistent"
@@ -17137,6 +17130,7 @@ def q282_bloom_store_repair(spark: SparkSession, sf: str) -> DataFrame:
         collect_batch_blooms,
         repair_bloom_store,
     )
+    from ..sources.manifest import replace_batches
     from ..sources.retention import _fs
 
     with _scratch("q282_blrepair_") as base:
@@ -17156,14 +17150,9 @@ def q282_bloom_store_repair(spark: SparkSession, sf: str) -> DataFrame:
             "batch"
         ).parquet(sink)
         # mismatch: batch 3 replayed with half its keys
-        (
-            df.filter(
-                (F.col("batch") == 3) & (F.col("o_orderkey") % 10 == 3)
-            )
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(sink)
+        replace_batches(
+            df.filter((F.col("batch") == 3) & (F.col("o_orderkey") % 10 == 3)),
+            sink,
         )
         # orphan: batch 2 dropped behind the store's back
         fs, hpath = _fs(spark, sink)
@@ -17179,12 +17168,7 @@ def q282_bloom_store_repair(spark: SparkSession, sf: str) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-        (
-            bad.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(blm)
-        )
+        replace_batches(bad, blm)
         before0 = (
             spark.read.parquet(blm).filter(F.col("batch") == 0).collect()
         )

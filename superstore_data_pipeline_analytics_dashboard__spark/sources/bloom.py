@@ -74,6 +74,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .manifest import replace_batches
+
 __all__ = [
     "bloom_positions",
     "collect_batch_blooms",
@@ -916,12 +918,7 @@ def _recollect_store(
     out = out.localCheckpoint(eager=True)
     survived = {int(r["batch"]) for r in out.select("batch").collect()}
     if survived:
-        (
-            out.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(bloom_path)
-        )
+        replace_batches(out, bloom_path)
     fs, hpath = _fs(spark, bloom_path)
     for b in affected:
         if b not in survived:

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from .manifest import file_stats
+from .manifest import file_stats, replace_batches
 from .retention import (
     _COMPACT_COMMIT,
     _COMPACT_STAGING,
@@ -295,16 +295,13 @@ def compact_batch(
     if not fs.rename(hpath(staging), hpath(part)):
         raise IOError(f"compact swap failed: could not land {staging}")
     fs.delete(trash, True)
-    (
+    replace_batches(
         file_stats(
             spark.read.option("basePath", sink_path).parquet(part),
             stat_cols,
             like=man.schema,
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(manifest_path)
+        ),
+        manifest_path,
     )
     files_after = sum(
         1

@@ -36,6 +36,7 @@ __all__ = [
     "file_stats",
     "prune_files",
     "read_pruned",
+    "replace_batches",
     "write_batch_stats",
 ]
 
@@ -101,13 +102,29 @@ def write_batch_stats(
     leave rows pointing at files the replay deleted), and every other
     batch's rows stay untouched. The one writer of per-batch manifest
     rows: the streaming appender and every sink fixture call it."""
+    replace_batches(
+        collect_file_stats(
+            spark, f"{sink}/batch={batch_id}", stat_cols
+        ).withColumn("batch", F.lit(batch_id)),
+        manifest,
+    )
+
+
+def replace_batches(df: DataFrame, path: str) -> None:
+    """Land ``df`` at ``path`` partitioned by ``batch``, replacing the
+    partitions of exactly the batches ``df`` holds and leaving every
+    other batch untouched (dynamic partition overwrite; Spark's default
+    static overwrite would wipe the whole table). The one writer of a
+    per-batch derived table — manifest, Bloom store, profile, sketch
+    and quota state — so a replayed or refreshed batch replaces its own
+    rows, never appends beside them. ``df`` must not read ``path``
+    lazily: sever its lineage first. A batch with no row in ``df`` keeps
+    its partition, so a caller that empties a batch deletes it."""
     (
-        collect_file_stats(spark, f"{sink}/batch={batch_id}", stat_cols)
-        .withColumn("batch", F.lit(batch_id))
-        .write.mode("overwrite")
+        df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("batch")
-        .parquet(manifest)
+        .parquet(path)
     )
 
 

@@ -97,7 +97,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 from ..streaming.audit import _disk_vs_manifest, manifest_consistency_audit
-from .manifest import file_stats
+from .manifest import file_stats, replace_batches
 
 __all__ = [
     "erase_rows",
@@ -437,8 +437,33 @@ def erase_rows(
     erasure leaves the store safely over-approximating (no false
     negatives — deletions cannot hide rows) but no longer CURRENT,
     which ``bloom_store_audit`` reports as count mismatches / orphan
-    rows."""
+    rows.
+
+    Refuses (raises) before any file work while a crashed erasure's
+    ``.erase_commit.json`` is on disk: its staged survivors and retired
+    originals are the only copies of the crashed batches' rows, and a
+    new erasure would discard them — run :func:`repair_erasure` first."""
     cols = [key_col] if isinstance(key_col, str) else list(key_col)
+    fs, hpath = _fs(spark, sink_path)
+    commit_path = f"{sink_path}/{_COMMIT}"
+    if fs.exists(hpath(commit_path)):
+        raise ValueError(
+            "erase_rows: a crashed erasure left its commit marker behind "
+            "(staged survivor rows still to roll forward) — run "
+            "repair_erasure first; a new erasure would discard them"
+        )
+    if blooms:
+        from .bloom import _require_meta_schema
+
+        # schema-only (no job), so a bad frame is refused whether or not
+        # some envelope admits a key
+        bad = sorted(set(blooms) - set(cols))
+        if bad:
+            raise ValueError(
+                f"erase_rows: bloom provided for non-key column(s) {bad}"
+            )
+        for bl in blooms.values():
+            _require_meta_schema(bl, "the probed bloom summary frame")
     if bloom_store_path is not None:
         # validate BEFORE any irreversible file work: a mistyped path,
         # an inconsistent store, or a store-recorded column the sink no
@@ -459,16 +484,15 @@ def erase_rows(
         # round trips per maintained erasure); cross-batch TYPE
         # conflicts, which the name-union tolerates but schema merging
         # refuses, fall back to the per-batch loop.
-        vfs, vhp = _fs(spark, sink_path)
         sample_parts: list[str] = []
-        for st in vfs.listStatus(vhp(sink_path)):
+        for st in fs.listStatus(hpath(sink_path)):
             if not st.isDirectory() or not st.getPath().getName(
             ).startswith("batch="):
                 continue
             part = next(
                 (
                     s.getPath().toString()
-                    for s in vfs.listStatus(st.getPath())
+                    for s in fs.listStatus(st.getPath())
                     if s.getPath().getName().startswith("part-")
                 ),
                 None,
@@ -500,7 +524,7 @@ def erase_rows(
             # never per-erasure (ADVICE r12).
             batch_dirs = [
                 st.getPath().toString()
-                for st in vfs.listStatus(vhp(sink_path))
+                for st in fs.listStatus(hpath(sink_path))
                 if st.isDirectory()
                 and st.getPath().getName().startswith("batch=")
             ]
@@ -642,11 +666,6 @@ def erase_rows(
         if blooms and affected:
             from .bloom import bloom_candidates
 
-            bad = sorted(set(blooms) - set(cols))
-            if bad:
-                raise ValueError(
-                    f"erase_rows: bloom provided for non-key column(s) {bad}"
-                )
             # xxhash64 is type-sensitive: probe with exactly the sink's
             # column types or positions won't match the collected ones
             sink_types = {
@@ -753,8 +772,6 @@ def erase_rows(
                 )
             groups.setdefault(sigs.pop(), []).append(b)
         kept_counts: dict[int, int] = {}
-        fs, hpath = _fs(spark, sink_path)
-        commit_path = f"{sink_path}/{_COMMIT}"
         if groups:
             # RESUMABILITY journal, written ONCE before any group
             # mutates the sink: the distinct opt-out keys (key-sized
@@ -784,7 +801,9 @@ def erase_rows(
                 (src[c] == F.col(f"k_{c}") for c in cols),
             )
             kept = src.join(F.broadcast(k), same_key, "left_anti")
-            for name in (_STAGING, _TRASH, _COMMIT):
+            # a torn staging tree (a crash before its commit marker;
+            # a marker on disk refuses the call at entry)
+            for name in (_STAGING, _TRASH):
                 fs.delete(hpath(f"{sink_path}/{name}"), True)
             # ONE job rewrites every candidate file of this schema group
             kept.write.partitionBy("batch").parquet(f"{sink_path}/{_STAGING}")
@@ -855,14 +874,9 @@ def erase_rows(
                     if int(r["batch"]) in set(with_manifest)
                     and r["file"] not in cand_uri_set
                 ]
-                (
-                    spark.createDataFrame(
-                        keep_old + new_stat_rows, man.schema
-                    )
-                    .write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch")
-                    .parquet(manifest_path)
+                replace_batches(
+                    spark.createDataFrame(keep_old + new_stat_rows, man.schema),
+                    manifest_path,
                 )
                 for b in with_manifest:
                     kept_counts[b] = (
@@ -916,22 +930,24 @@ def _load_store_geometry(
 ) -> tuple[DataFrame, dict[str, tuple[int, int]]]:
     """Read an on-disk Bloom store and its recorded geometry, one
     (``n_bits``, ``n_hashes``) per column. Raises on a
-    missing/unreadable store or inconsistent geometry — callers run
-    this BEFORE mutating anything the store describes."""
+    missing/unreadable store or inconsistent or NULL geometry — callers
+    run this BEFORE mutating anything the store describes."""
     store = spark.read.parquet(bloom_store_path)
     meta = (
         store.select("key_col", "n_bits", "n_hashes").distinct().collect()
     )
-    geometry = {
-        r["key_col"]: (int(r["n_bits"]), int(r["n_hashes"])) for r in meta
-    }
-    if not meta or len(meta) != len(geometry):
+    geometry = {r["key_col"]: (r["n_bits"], r["n_hashes"]) for r in meta}
+    if (
+        not meta
+        or len(meta) != len(geometry)
+        or any(None in g for g in geometry.values())
+    ):
         raise ValueError(
             f"the bloom store at {bloom_store_path} is empty or records "
-            "inconsistent geometry — run bloom_store_audit and rebuild "
-            "it before maintaining it through an erasure"
+            "inconsistent or NULL geometry — run bloom_store_audit and "
+            "rebuild it before maintaining it through an erasure"
         )
-    return store, geometry
+    return store, {c: (int(b), int(h)) for c, (b, h) in geometry.items()}
 
 
 def _manifest_damage(
@@ -1070,12 +1086,8 @@ def _reconcile_manifest(
         )
         refreshed = keep + fresh_rows
         if refreshed:
-            (
-                spark.createDataFrame(refreshed, man.schema)
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(manifest_path)
+            replace_batches(
+                spark.createDataFrame(refreshed, man.schema), manifest_path
             )
         refreshed_batches = {int(r["batch"]) for r in refreshed}
         for b in affected:

@@ -16,13 +16,14 @@ a directory drop-zone locally and on cloud object storage at scale.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ..sources.bloom import _N_BITS
+from ..sources.manifest import replace_batches
 
 #: file schema: ts is TIMESTAMP_NTZ on disk (the batch catalog's
 #: load_table contract). Watermarks REQUIRE an instant TIMESTAMP
@@ -273,6 +274,40 @@ def click_purchase_attribution(
     )
 
 
+def _run_batches(
+    writer: DataStreamWriter,
+    fn: Callable[[DataFrame, int], None],
+    checkpoint: str,
+) -> StreamingQuery:
+    """Start a sink: run ``fn(batch, batch_id)`` on every micro-batch
+    of ``writer``'s stream, checkpointed at ``checkpoint``, draining
+    what is available now and then stopping. Every ``start_*`` sink
+    starts here."""
+    return (
+        writer.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _read_existing(spark: SparkSession, path: str) -> DataFrame | None:
+    """The parquet table at ``path``, or None while it does not exist
+    yet (the first batch). ONLY a missing path selects the first-batch
+    path; any other read failure (corrupt footer, transient storage
+    error) aborts the batch — swallowing it would, say, skip the
+    idempotent append's anti-join and append duplicates into an
+    exactly-once sink."""
+    from pyspark.errors import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        if "PATH_NOT_FOUND" not in str(e):
+            raise
+        return None
+
+
 def start_rollup_maintenance(
     events: DataFrame,
     sink_path: str,
@@ -301,27 +336,19 @@ def start_rollup_maintenance(
     key_cols = list(keys)
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        try:
-            current = spark.read.parquet(sink_path)
-            merged = current.join(
+        current = _read_existing(batch.sparkSession, sink_path)
+        merged = (
+            batch
+            if current is None
+            else current.join(
                 batch.select(*key_cols), key_cols, "left_anti"
             ).unionByName(batch)
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            merged = batch
+        )
         # materialize BEFORE overwriting the path being read
         merged.localCheckpoint().write.mode("overwrite").parquet(sink_path)
 
-    return (
-        rollup.writeStream.foreachBatch(_merge)
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _run_batches(
+        rollup.writeStream.outputMode("update"), _merge, checkpoint
     )
 
 
@@ -337,28 +364,17 @@ def start_idempotent_append(
     (the reference's NOT EXISTS, per batch)."""
 
     def _append(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
-        spark = batch.sparkSession
-        try:
-            existing = spark.read.parquet(sink_path).select(*keys).distinct()
-            fresh = batch.join(existing, list(keys), "left_anti")
-        except AnalysisException as e:
-            # ONLY a missing sink selects the first-batch path; any other
-            # read failure (corrupt footer, transient storage error) must
-            # abort the batch — swallowing it would skip the anti-join and
-            # append duplicates into an exactly-once sink.
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            fresh = batch
+        existing = _read_existing(batch.sparkSession, sink_path)
+        fresh = (
+            batch
+            if existing is None
+            else batch.join(
+                existing.select(*keys).distinct(), list(keys), "left_anti"
+            )
+        )
         fresh.write.mode("append").parquet(sink_path)
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream.writeStream, _append, checkpoint)
 
 
 def start_content_dedup_append(
@@ -386,16 +402,9 @@ def start_content_dedup_append(
     from ..operators.incremental_dedup import exact_increment
 
     def _append(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch.sparkSession
-        try:
-            state = spark.read.parquet(fp_path)
-        except AnalysisException as e:
-            # ONLY a missing state table selects the bootstrap path (see
-            # start_idempotent_append for why other errors must abort)
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
+        state = _read_existing(spark, fp_path)
+        if state is None:
             state = spark.createDataFrame([], "fingerprint STRING")
         out = exact_increment(batch, state, id_col=id_col, text_col=text_col)
         kept = out["kept"].localCheckpoint()
@@ -406,12 +415,7 @@ def start_content_dedup_append(
             "append"
         ).parquet(fp_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(docs_stream.writeStream, _append, checkpoint)
 
 
 def start_append_with_manifest(
@@ -479,20 +483,9 @@ def start_append_with_manifest(
             # probes under
             part = spark.read.parquet(part_dir)
             rows = bloom_summary_rows(part, list(bloom_cols), bloom_n_bits)
-            (
-                rows.withColumn("batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(bloom_path)
-            )
+            replace_batches(rows.withColumn("batch", F.lit(batch_id)), bloom_path)
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream.writeStream, _append, checkpoint)
 
 
 def start_quota_fill_append(
@@ -534,18 +527,15 @@ def start_quota_fill_append(
     from ..operators.recipe import hash_order_cumsum
 
     def _append(batch: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         spark = batch.sparkSession
-        try:
-            state = spark.read.parquet(state_path).filter(
-                F.col("batch") != F.lit(batch_id)
-            )
-            used = state.groupBy(source_col).agg(F.sum("used").alias("__used"))
-        except AnalysisException as e:
-            if "PATH_NOT_FOUND" not in str(e):
-                raise
-            used = spark.createDataFrame([], f"{source_col} STRING, __used BIGINT")
+        state = _read_existing(spark, state_path)
+        used = (
+            spark.createDataFrame([], f"{source_col} STRING, __used BIGINT")
+            if state is None
+            else state.filter(F.col("batch") != F.lit(batch_id))
+            .groupBy(source_col)
+            .agg(F.sum("used").alias("__used"))
+        )
         staged = batch.select(
             source_col,
             id_col,
@@ -564,24 +554,11 @@ def start_quota_fill_append(
             .select(source_col, id_col, "n_tok")
             .localCheckpoint()
         )
-        kept.withColumn("batch", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "batch"
-        ).parquet(sink_path)
+        replace_batches(kept.withColumn("batch", F.lit(batch_id)), sink_path)
         delta = kept.groupBy(source_col).agg(F.sum("n_tok").alias("used"))
-        delta.withColumn("batch", F.lit(batch_id)).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy(
-            "batch"
-        ).parquet(state_path)
+        replace_batches(delta.withColumn("batch", F.lit(batch_id)), state_path)
 
-    return (
-        docs_stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(docs_stream.writeStream, _append, checkpoint)
 
 
 def start_profile_append(
@@ -629,22 +606,11 @@ def start_profile_append(
             prof = parts[0]
             for p in parts[1:]:
                 prof = prof.unionByName(p)
-            (
-                prof.withColumn("batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(profile_path)
-            )
+            replace_batches(prof.withColumn("batch", F.lit(batch_id)), profile_path)
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream.writeStream, _append, checkpoint)
 
 
 def start_heavy_hitters_sink(
@@ -677,35 +643,18 @@ def start_heavy_hitters_sink(
         batch = batch.persist()
         try:
             cms = cms_table(batch, key_col, width=width, depth=depth)
-            (
-                cms.withColumn("batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(cms_path)
-            )
+            replace_batches(cms.withColumn("batch", F.lit(batch_id)), cms_path)
             top = (
                 batch.groupBy(F.col(key_col).alias("cand_key"))
                 .agg(F.count("*").alias("batch_cnt"))
                 .orderBy(F.desc("batch_cnt"), F.asc("cand_key"))
                 .limit(k_per_batch)
             )
-            (
-                top.withColumn("batch", F.lit(batch_id))
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("batch")
-                .parquet(cand_path)
-            )
+            replace_batches(top.withColumn("batch", F.lit(batch_id)), cand_path)
         finally:
             batch.unpersist()
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream.writeStream, _append, checkpoint)
 
 
 def start_grouped_topk_sink(
@@ -734,20 +683,9 @@ def start_grouped_topk_sink(
 
     def _append(batch: DataFrame, batch_id: int) -> None:
         st = topk_state(batch, group_cols, key_col, max_items_tracked)
-        (
-            st.withColumn("batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch")
-            .parquet(state_path)
-        )
+        replace_batches(st.withColumn("batch", F.lit(batch_id)), state_path)
 
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _run_batches(stream.writeStream, _append, checkpoint)
 
 
 def read_grouped_topk(

@@ -168,3 +168,60 @@ def test_input_file_name_in_two_functions():
         "sources/manifest.py:file_stats",
         "streaming/audit.py:_disk_vs_manifest",
     }
+
+
+def test_batch_landing_runner_and_first_read_defined_once():
+    """A per-batch derived table lands only through
+    ``manifest.replace_batches`` (dynamic partition overwrite on
+    ``batch``), a streaming sink starts only through
+    ``incremental._run_batches`` (the availableNow trigger), and the
+    "missing path means first batch" read is only
+    ``incremental._read_existing``. Docstrings and comments may name
+    them; code may not re-spell them."""
+    import ast
+    import pathlib
+
+    import superstore_data_pipeline_analytics_dashboard__spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    owners: dict[str, set[str]] = {
+        "partitionOverwriteMode": set(),
+        "availableNow": set(),
+        "PATH_NOT_FOUND": set(),
+    }
+    for path in root.rglob("*.py"):
+        tree = ast.parse(path.read_text())
+        docstrings = {
+            id(node.body[0].value)
+            for node in ast.walk(tree)
+            if isinstance(
+                node,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and node.body
+            and isinstance(node.body[0], ast.Expr)
+            and isinstance(node.body[0].value, ast.Constant)
+        }
+        for top in tree.body:
+            owner = f"{path.relative_to(root)}:{getattr(top, 'name', '<module>')}"
+            for node in ast.walk(top):
+                if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                    if id(node) in docstrings:
+                        continue
+                    token = node.value
+                elif isinstance(node, ast.keyword):
+                    token = node.arg or ""
+                elif isinstance(node, ast.Attribute):
+                    token = node.attr
+                elif isinstance(node, ast.Name):
+                    token = node.id
+                else:
+                    continue
+                for word, found in owners.items():
+                    if word in token:
+                        found.add(owner)
+    assert owners == {
+        "partitionOverwriteMode": {"sources/manifest.py:replace_batches"},
+        "availableNow": {"streaming/incremental.py:_run_batches"},
+        "PATH_NOT_FOUND": {"streaming/incremental.py:_read_existing"},
+    }

@@ -1779,3 +1779,116 @@ def test_repair_erasure_audits_once(spark, tmp_path, monkeypatch):
         r["current"]
         for r in B.bloom_store_audit(spark, sink, blm).collect()
     )
+
+
+def _erase_residue(sink):
+    """Every file under the sink's hidden erasure names, with its bytes."""
+    out = {}
+    for top in _os.listdir(sink):
+        if not top.startswith(".erase"):
+            continue
+        p = f"{sink}/{top}"
+        paths = (
+            [f"{d}/{n}" for d, _, ns in _os.walk(p) for n in ns]
+            if _os.path.isdir(p)
+            else [p]
+        )
+        for f in paths:
+            with open(f, "rb") as fh:
+                out[f[len(sink) :]] = fh.read()
+    return out
+
+
+def test_erase_refuses_while_a_crashed_swap_is_pending(
+    spark, tmp_path, monkeypatch
+):
+    """A crashed erasure's commit marker, staged survivors and retired
+    originals are the only copies of the crashed batch's rows: a new
+    erase_rows must refuse before touching them, and repair_erasure
+    must then restore the survivors. The first call (keys 210, 220 in
+    batch 1) crashes at its first land rename — batch 1 retired, not
+    landed."""
+    import pytest
+
+    real_fs = R._fs
+    state = {"n": 0, "crash_at": 1}
+
+    def crashing_fs(spark, path):
+        fs, hpath = real_fs(spark, path)
+        return _CrashingFS(fs, state), hpath
+
+    sink, man = _build(spark, tmp_path)
+    monkeypatch.setattr(R, "_fs", crashing_fs)
+    with pytest.raises(IOError, match="rename 1"):
+        R.erase_rows(spark, sink, man, "id", _keys(spark, [210, 220]))
+    monkeypatch.setattr(R, "_fs", real_fs)
+    assert _ids(spark.read.parquet(sink)) == list(range(0, 100))
+    residue = _erase_residue(sink)
+    assert "/.erase_commit.json" in residue
+    with pytest.raises(ValueError, match="repair_erasure"):
+        R.erase_rows(spark, sink, man, "id", _keys(spark, [5]))
+    assert _erase_residue(sink) == residue
+    rep = R.repair_erasure(spark, sink, man).collect()[0]
+    assert rep["rolled_forward"] and rep["consistent_after"]
+    assert _ids(spark.read.parquet(sink)) == sorted(
+        set(range(250)) - {210, 220}
+    )
+    assert _batch_rows(spark, man) == {0: 100, 1: 148}
+
+
+def test_erase_refuses_metadata_less_bloom_frame_without_candidates(
+    spark, tmp_path
+):
+    """The blooms= frames are validated before planning: a frame
+    without metadata columns is refused even when no envelope admits a
+    key, exactly as it is for a key some envelope admits."""
+    import pytest
+
+    from superstore_data_pipeline_analytics_dashboard__spark.sources import (
+        bloom as B,
+    )
+
+    sink, man = _build(spark, tmp_path)
+    bare = B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 14).select(
+        "batch", "bloom_pos"
+    )
+    with pytest.raises(ValueError, match="metadata"):
+        R.erase_rows(
+            spark, sink, man, "id", _keys(spark, [9999]), blooms={"id": bare}
+        )
+    assert spark.read.parquet(sink).count() == 250
+
+
+def test_erase_refuses_null_store_geometry(spark, tmp_path):
+    """A store row with NULL geometry (damage bloom_store_audit reports)
+    is refused with the "run bloom_store_audit" error before any file
+    work, not a TypeError."""
+    import pytest
+
+    from superstore_data_pipeline_analytics_dashboard__spark.sources import (
+        bloom as B,
+    )
+    from superstore_data_pipeline_analytics_dashboard__spark.sources.manifest import (
+        replace_batches,
+    )
+
+    sink, man = _build(spark, tmp_path)
+    blm = str(tmp_path / "blm")
+    B.collect_batch_blooms(spark, sink, "id", n_bits=1 << 13).write.partitionBy(
+        "batch"
+    ).parquet(blm)
+    store = spark.read.parquet(blm)
+    replace_batches(
+        store.filter(F.col("batch") == 1)
+        .withColumn("n_bits", F.lit(None).cast(store.schema["n_bits"].dataType))
+        .localCheckpoint(eager=True),
+        blm,
+    )
+    before = _batch_rows(spark, man)
+    with pytest.raises(ValueError, match="bloom_store_audit"):
+        R.erase_rows(
+            spark, sink, man, "id", _keys(spark, [10]), bloom_store_path=blm
+        )
+    assert _ids(spark.read.parquet(sink)) == list(range(250))
+    assert _batch_rows(spark, man) == before
+    assert not [n for n in _os.listdir(sink) if n.startswith(".erase")]
