@@ -26,8 +26,12 @@ partitioned by order-date month (write_star does this).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..functions.cleaning import strip_trailing_semicolon, trim_nullif
 from ..functions.dates import date_key, day_name, month_name, quarter_name, us_week
@@ -521,6 +525,25 @@ def register_star_views(spark: SparkSession, layers: dict[str, DataFrame]) -> No
 
 # -------------------------------------------------------------- runner
 
+def _concurrently(spark: SparkSession, *builds: Callable[[], object]) -> list:
+    """Run independent zero-argument star builds at once, one thread each,
+    and return their results in order.
+
+    The star's builds are small jobs whose time is mostly scheduling latency
+    between them, so overlapping them shortens a load; their results do
+    not depend on the schedule. Each target is wrapped by
+    ``inheritable_thread_target`` in the caller's thread, one wrap per
+    build: in pinned-thread mode a pool thread would otherwise run its
+    jobs without the caller's job group and local properties, and one
+    wrap per build gives each thread its own copy of them, so concurrent
+    SQL executions never share one ``Properties``. A build's exception is
+    re-raised by ``result()``, after the pool has waited for every
+    sibling, so no job of the graph is left running."""
+    with ThreadPoolExecutor(len(builds)) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(b)) for b in builds]
+    return [f.result() for f in futures]
+
+
 def run(spark: SparkSession, csv_path: str) -> dict[str, DataFrame]:
     """Execute the full DAG; returns every layer keyed by name. The
     materialized frames mirror the reference's #temp/pivot-cache reuse
@@ -532,10 +555,16 @@ def run(spark: SparkSession, csv_path: str) -> dict[str, DataFrame]:
     build plans beneath it (fact → six dims → ``stg`` → CSV parse): the
     later dims, the fact's broadcast joins, ``write_star`` and every view
     read one materialized copy, and no consumer re-analyzes, re-matches or
-    re-plans the build. Every dim has a total ``row_number`` order, so the
-    checkpointed rows are the rows a rebuild would give. Their blocks are
-    released by Spark's ContextCleaner once the frames are
-    garbage-collected; ``clearCache()`` does not touch them.
+    re-plans the build. Their blocks are released by Spark's ContextCleaner
+    once the frames are garbage-collected; ``clearCache()`` does not touch
+    them.
+
+    The dims are built as a dependency graph, not a sequence: once ``stg``
+    is checkpointed, date, shipmode, geography, customer and the
+    category → subcategory → product chain (in that order, in one build)
+    run concurrently through ``_concurrently``; the fact then joins them.
+    Every dim has a total ``row_number`` order, so the checkpointed rows
+    are the rows a sequential build gives.
 
     The four ``v_*`` frames come back cached (lazily, on first action): a
     request that rebuilds a view from the returned ``fact``/``dims``
@@ -546,14 +575,26 @@ def run(spark: SparkSession, csv_path: str) -> dict[str, DataFrame]:
     stg_all = stage_typed(raw)
     stg = dedup_staged(stg_all).localCheckpoint()
 
-    dims: dict[str, DataFrame] = {}
-    dims["date"] = build_date_dim(spark, stg).localCheckpoint()
-    dims["shipmode"] = build_shipmode_dim(stg).localCheckpoint()
-    dims["category"] = build_category_dim(stg).localCheckpoint()
-    dims["subcategory"] = build_subcategory_dim(stg, dims["category"]).localCheckpoint()
-    dims["geography"] = build_geography_dim(stg).localCheckpoint()
-    dims["customer"] = build_customer_dim(stg).localCheckpoint()
-    dims["product"] = build_product_dim(stg, dims["subcategory"], dims["category"]).localCheckpoint()
+    def snowflake() -> tuple[DataFrame, DataFrame, DataFrame]:
+        category = build_category_dim(stg).localCheckpoint()
+        subcategory = build_subcategory_dim(stg, category).localCheckpoint()
+        product = build_product_dim(stg, subcategory, category).localCheckpoint()
+        return category, subcategory, product
+
+    # the chain is the longest build: submitted first
+    (category, subcategory, product), date, shipmode, geography, customer = _concurrently(
+        spark,
+        snowflake,
+        lambda: build_date_dim(spark, stg).localCheckpoint(),
+        lambda: build_shipmode_dim(stg).localCheckpoint(),
+        lambda: build_geography_dim(stg).localCheckpoint(),
+        lambda: build_customer_dim(stg).localCheckpoint(),
+    )
+    dims = {
+        "date": date, "shipmode": shipmode, "category": category,
+        "subcategory": subcategory, "geography": geography,
+        "customer": customer, "product": product,
+    }
 
     fact = build_fact(stg, dims).localCheckpoint()
 
@@ -573,22 +614,34 @@ def run(spark: SparkSession, csv_path: str) -> dict[str, DataFrame]:
 
 
 def write_star(layers: dict[str, DataFrame], out_dir: str) -> None:
-    """Persist the star as parquet. The fact is partitioned by order-year
-    -month (OrderDateKey div 100) — the Spark equivalent of the reference's
-    IX_Fact_Date covering index: partition pruning replaces index seeks
-    (SURVEY.md §4)."""
-    for name in ("dim_date", "dim_shipmode", "dim_category", "dim_subcategory",
-                 "dim_geography", "dim_customer", "dim_product"):
-        layers[name].write.mode("overwrite").parquet(f"{out_dir}/{name}")
-    (
-        layers["fact"]
-        .withColumn("OrderYearMonth", (F.col("OrderDateKey") / 100).cast("int"))
-        # sort within each month partition so parquet row-group min/max on
-        # OrderDateKey and CustomerKey skip files inside a partition too
-        # (day-level predicates prune beyond directory pruning)
-        .repartition("OrderYearMonth")
-        .sortWithinPartitions("OrderDateKey", "CustomerKey")
-        .write.mode("overwrite")
-        .partitionBy("OrderYearMonth")
-        .parquet(f"{out_dir}/fact_sales")
+    """Persist the star as parquet: the seven dims and the fact, each into
+    its own directory, written concurrently through ``_concurrently``
+    (the directories are disjoint, so no write sees another's files).
+    The fact is partitioned by order-year-month (OrderDateKey div 100) —
+    the Spark equivalent of the reference's IX_Fact_Date covering index:
+    partition pruning replaces index seeks (SURVEY.md §4)."""
+
+    def write_dim(name: str) -> Callable[[], None]:
+        return lambda: layers[name].write.mode("overwrite").parquet(f"{out_dir}/{name}")
+
+    def write_fact() -> None:
+        (
+            layers["fact"]
+            .withColumn("OrderYearMonth", (F.col("OrderDateKey") / 100).cast("int"))
+            # sort within each month partition so parquet row-group min/max on
+            # OrderDateKey and CustomerKey skip files inside a partition too
+            # (day-level predicates prune beyond directory pruning)
+            .repartition("OrderYearMonth")
+            .sortWithinPartitions("OrderDateKey", "CustomerKey")
+            .write.mode("overwrite")
+            .partitionBy("OrderYearMonth")
+            .parquet(f"{out_dir}/fact_sales")
+        )
+
+    # the fact is the longest write: submitted first
+    _concurrently(
+        layers["fact"].sparkSession,
+        write_fact,
+        *map(write_dim, ("dim_date", "dim_shipmode", "dim_category", "dim_subcategory",
+                         "dim_geography", "dim_customer", "dim_product")),
     )

@@ -442,16 +442,45 @@ def erase_rows(
     Refuses (raises) before any file work while a crashed erasure's
     ``.erase_commit.json`` is on disk: its staged survivors and retired
     originals are the only copies of the crashed batches' rows, and a
-    new erasure would discard them — run :func:`repair_erasure` first."""
-    cols = [key_col] if isinstance(key_col, str) else list(key_col)
+    new erasure would discard them. Refuses likewise while its journal
+    (``.erase_keys`` + ``.erase_intent.json``) is on disk without a
+    marker (a crash inside a staging write or during the store
+    refresh): a new erasure would overwrite the journaled keys and
+    retire them on success, so the crashed delete could never be
+    resumed. Run :func:`repair_erasure` first; it finishes the
+    journaled delete through this function's body."""
     fs, hpath = _fs(spark, sink_path)
-    commit_path = f"{sink_path}/{_COMMIT}"
-    if fs.exists(hpath(commit_path)):
+    if fs.exists(hpath(f"{sink_path}/{_COMMIT}")):
         raise ValueError(
             "erase_rows: a crashed erasure left its commit marker behind "
             "(staged survivor rows still to roll forward) — run "
             "repair_erasure first; a new erasure would discard them"
         )
+    if _erase_journal_exists(spark, sink_path):
+        raise ValueError(
+            "erase_rows: a crashed erasure left its journal behind (a "
+            "delete still to finish) — run repair_erasure first; a new "
+            "erasure would overwrite its keys"
+        )
+    return _erase_rows(
+        spark, sink_path, manifest_path, key_col, keys, blooms, bloom_store_path
+    )
+
+
+def _erase_rows(
+    spark: SparkSession,
+    sink_path: str,
+    manifest_path: str,
+    key_col: str | Sequence[str],
+    keys: DataFrame,
+    blooms: dict[str, DataFrame] | None,
+    bloom_store_path: str | None,
+) -> DataFrame:
+    """The body of :func:`erase_rows`, after its refusals of a pending
+    crash; ``repair_erasure`` resumes a journaled delete through it."""
+    cols = [key_col] if isinstance(key_col, str) else list(key_col)
+    fs, hpath = _fs(spark, sink_path)
+    commit_path = f"{sink_path}/{_COMMIT}"
     if blooms:
         from .bloom import _require_meta_schema
 
@@ -1149,7 +1178,9 @@ def repair_erasure(
        started — rolling forward only the current group would leave
        those groups' subject rows on disk while reporting success, a
        partial compliance delete disguised as a repaired one. Repair
-       re-runs ``erase_rows`` from the journaled keys (idempotent:
+       re-runs ``erase_rows``' body (``_erase_rows``, past the public
+       call's refusal of a pending journal) from the journaled keys
+       (idempotent:
        already-erased batches rewrite conservatively with zero rows
        erased), so ``consistent_after`` certifies the COMPLETE delete.
        The journal is retired by REPAIR itself after the resume
@@ -1237,13 +1268,14 @@ def repair_erasure(
             journaled = spark.read.parquet(keys_path).localCheckpoint(
                 eager=True  # sever lineage: the resume overwrites the path
             )
-            rrep = erase_rows(
+            rrep = _erase_rows(
                 spark,
                 sink_path,
                 manifest_path,
                 intent["key_cols"],
                 journaled,
-                bloom_store_path=store_path,
+                None,
+                store_path,
             ).collect()
             resumed_erased = sum(int(r["rows_erased"]) for r in rrep)
             # retire the journal HERE: the resumed call deletes it only

@@ -120,3 +120,20 @@ def test_quarantine_empty_on_generated_file(spark, tmp_path):
     out = read_superstore_csv_with_quarantine(spark, csv_path)
     assert out["quarantine"].count() == 0
     assert out["good"].count() == truth["records"]
+
+
+def test_each_line_transliterated_once(spark, tmp_path):
+    """The empty-line and header drops test the raw line, so Catalyst has
+    no filter on the recoded value to push below the strip and
+    ``translate`` projection: the executed plan of ``stg`` evaluates
+    ``translate`` in one place (it held four: the projection, two in the
+    pushed-down filter and the scan's data-filter echo)."""
+    from perfbench.gen_messy_csv import generate
+    from superstore_data_pipeline_analytics_dashboard__spark.plans import (
+        superstore_pipeline as P,
+    )
+
+    csv_path = str(tmp_path / "superstore.csv")
+    generate(csv_path, 300, 7)
+    stg = P.dedup_staged(P.stage_typed(read_superstore_csv(spark, csv_path)))
+    assert stg._jdf.queryExecution().executedPlan().toString().count("translate(") == 1

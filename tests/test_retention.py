@@ -1836,6 +1836,28 @@ def test_erase_refuses_while_a_crashed_swap_is_pending(
     assert _batch_rows(spark, man) == {0: 100, 1: 148}
 
 
+def test_erase_refuses_while_a_journaled_delete_is_pending(spark, tmp_path):
+    """A journal without a commit marker (a crash inside the staging
+    write, or during the store refresh) is the only record of a delete
+    still to finish: a new erase_rows must refuse before overwriting
+    it, and repair_erasure must then finish the journaled delete."""
+    import pytest
+
+    sink, man = _build(spark, tmp_path)
+    _journal(spark, sink, [210, 220])
+    residue = _erase_residue(sink)
+    with pytest.raises(ValueError, match="repair_erasure"):
+        R.erase_rows(spark, sink, man, "id", _keys(spark, [5]))
+    assert _erase_residue(sink) == residue
+    rep = R.repair_erasure(spark, sink, man).collect()[0]
+    assert rep["erasure_resumed"] and rep["n_rows_erased_on_resume"] == 2
+    assert rep["consistent_after"]
+    assert _ids(spark.read.parquet(sink)) == sorted(
+        set(range(250)) - {210, 220}
+    )
+    assert not [n for n in _os.listdir(sink) if n.startswith(".erase")]
+
+
 def test_erase_refuses_metadata_less_bloom_frame_without_candidates(
     spark, tmp_path
 ):

@@ -270,6 +270,61 @@ def test_generated_star_lineage_free_and_views_read_memory(generated):
         assert names == ["InMemoryTableScan"], (view, names)
 
 
+def _small_csv(tmp_path) -> str:
+    from perfbench.gen_messy_csv import generate
+
+    csv = str(tmp_path / "superstore.csv")
+    generate(csv, 500, GEN_SEED)
+    return csv
+
+
+def test_generated_star_graph_keeps_the_callers_job_group(spark, tmp_path):
+    """`run` and `write_star` build the star on pool threads; every job
+    they add still runs under the caller's job group, so a trace or span
+    that reads jobs by group loses none of them. Marker jobs in their own
+    groups bound the job ids the two calls add."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def marker(group: str) -> list[int]:
+        sc.setJobGroup(group, group)
+        spark.range(1).count()
+        return tracker.getJobIdsForGroup(group)
+
+    csv = _small_csv(tmp_path)
+    try:
+        lo = max(marker("star-graph-before"))
+        sc.setJobGroup("star-graph", "run + write_star")
+        P.write_star(P.run(spark, csv), str(tmp_path / "star"))
+        hi = min(marker("star-graph-after"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    added = set(range(lo + 1, hi))
+    assert len(added) > 8
+    assert added == set(tracker.getJobIdsForGroup("star-graph"))
+
+
+def test_generated_failed_dim_build_raises_after_its_siblings(spark, tmp_path, monkeypatch):
+    """A dim build that fails partway (after a job of its own) fails `run`
+    with that same exception, and only once every sibling build has
+    finished: no pool thread and no Spark job is left running."""
+    import threading
+
+    boom = RuntimeError("customer dim build failed")
+
+    def failing_customer_dim(stg):
+        stg.groupBy("CustomerID").count().collect()
+        raise boom
+
+    monkeypatch.setattr(P, "build_customer_dim", failing_customer_dim)
+    with pytest.raises(RuntimeError) as err:
+        P.run(spark, _small_csv(tmp_path))
+    assert err.value is boom
+    assert not [t for t in threading.enumerate() if t.name.startswith("ThreadPoolExecutor")]
+    assert spark.sparkContext.statusTracker().getActiveJobsIds() == []
+
+
 def test_generated_lifecycle_checkpointed_star_outlives_clear_cache(spark, tmp_path):
     """Only the four views are cached. `clearCache()` releases them and
     leaves CacheManager empty, while the checkpointed `stg`, `fact` and
